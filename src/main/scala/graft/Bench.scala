@@ -1,620 +1,225 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.lang.management.ManagementFactory
+import java.util.concurrent.TimeUnit
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
-/** Driver-run benchmark: times every registered query at the sf dir
-  * in SPARK_GRAFT_SF_DIR, one JSON line on stdout.
-  * Queries run in deterministic (sorted) order after a warmup action
-  * that pays session/codegen startup outside the timings.
+/** Driver-run benchmark: times every catalog line at the sf dir in
+  * SPARK_GRAFT_SF_DIR and prints two JSON lines on stdout, a verbose
+  * one for readers, then the compact one the artifact capture parses.
+  *
+  * Every line is measured fresh; nothing is read from earlier runs:
+  *  - warmup: each line once at the sibling sf0.001 (else the target
+  *    dir), so codegen and JIT happen outside the timed region;
+  *  - suite: each line timed [[Reps]] times, INTERLEAVED across lines
+  *    (A,B,C,A,B,C), and committed as its min. A burst of load from
+  *    other processes then hits different lines on different reps, and
+  *    since contention only ever adds time, the min estimates the
+  *    line's own cost;
+  *  - quiet: with the suite session stopped, the [[QuietN]] slowest
+  *    lines are timed again, each in its own fresh RunOne JVM (min of
+  *    [[Reps]]), started once other processes leave the cores idle. The
+  *    suite carries ~100 queries of within-JVM cache/JIT/GC state; the
+  *    quiet numbers do not.
+  *
+  * Local subset: SPARK_GRAFT_BENCH_ONLY=q43,q36 times just those
+  * prefixes. Cores: SPARK_GRAFT_CPUS (default: all).
   */
 object Bench {
-  /** Carry-cadence STAGGER (round 15 — VERDICT r14 item 3): r14
-    * carried 72 lines in one round, so their twice-carried triggers
-    * would all land together two rounds later — a synchronized
-    * full-reps storm. Instead every line pays full reps on a fixed
-    * 1-in-3 round cadence offset by a stable hash of its short key,
-    * so ~1/3 of stable lines re-measure each round and no round ever
-    * re-measures them all at once. Pure arithmetic on (key, round) —
-    * Java String.hashCode is spec-stable across JVMs — exposed so
-    * the cadence property is spec-pinned (BenchCadenceSpec): exactly
-    * one forced re-measure per key in any 3 consecutive rounds, and
-    * the catalog splits into thirds. The twice-carried equality
-    * check stays as the backstop for artifacts predating the
-    * stagger. */
-  def staggerRemeasure(shortKey: String, round: Int): Boolean =
-    math.floorMod(shortKey.hashCode + round, 3) == 0
+  val Reps = 3
+  val QuietN = 10
+  // Quiet gate: a child starts once other processes burned < 2 cores
+  // over a 3 s CPU-load window (< ~7% inflation on 32 cores, inside a
+  // 15% agreement bar). The 1-minute load average lags an exited burst
+  // by ~2 min, so it is only the fallback when CPU load is unsupported.
+  private val QuietCores = 2.0
+  private val QuietLoad = 6.0
+  private val GateCapMs = 240000L // longest gate wait per child
+  private val SectionCapMs = 1500000L // whole quiet section: 25 min
+  private val ChildCapMinutes = 15L // a hung child is killed
 
-  /** Symmetric carry demotion (round 15, optimization): the 2× bar
-    * catches regressions, but a carried line whose CODE GOT FASTER
-    * would ride the stale value for up to a cadence window — in an
-    * optimization round that hides exactly the signal being graded.
-    * The low side needs no 2× slack: contention only ever ADDS time,
-    * so a single probe draw below the prior full-reps min by more
-    * than the 15% agreement bar is already strong evidence the code
-    * changed, and the line re-measures fully THIS round (committing
-    * the fresh min — a real measurement either way). Pure function,
-    * spec-pinned in BenchCadenceSpec. */
-  def probeDemotes(elapsed: Double, carryValue: Double,
-      agreeBar: Double): Boolean =
-    elapsed > 2 * carryValue || elapsed < (1 - agreeBar) * carryValue
+  /** A catalog name's unique qNN prefix, the key of every JSON map. */
+  def shortKey(name: String): String = name.takeWhile(_ != '_')
+
+  /** Min and median of one line's rep times. */
+  def summary(reps: Seq[Double]): (Double, Double) = {
+    require(reps.nonEmpty, "a line needs at least one rep")
+    val s = reps.sorted
+    val m = s.size / 2
+    (s.head, if (s.size % 2 == 1) s(m) else (s(m - 1) + s(m)) / 2)
+  }
+
+  // Locale-independent fixed-point rendering: the JVM default locale
+  // could otherwise print "3,49", invalid JSON for the whole line.
+  private def round(v: Double, decimals: Int): BigDecimal =
+    BigDecimal(v).setScale(decimals, BigDecimal.RoundingMode.HALF_UP)
+  private def num(v: Double, decimals: Int): String =
+    round(v, decimals).bigDecimal.toPlainString
+  private def obj(fields: Seq[(String, String)]): String =
+    fields.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+  private def nums(kv: Seq[(String, Double)], decimals: Int): String =
+    obj(kv.map { case (k, v) => k -> num(v, decimals) })
+  private def strs(ss: Seq[String]): String =
+    ss.map(Verify.jsonString).mkString("[", ",", "]")
+
+  /** The machine-read line. `value` is the sum of the printed
+    * 2-decimal `queries` values. The artifact capture keeps only the
+    * last ~2 KB of output, sbt's epilogue included, so the line must stay under
+    * ~1.9 KB (BenchOutputSpec pins it for the whole catalog), and the
+    * timings go last so that a clipped head loses no number. */
+  def compactLine(sf: String, mins: Seq[(String, Double)],
+      quiet: Seq[(String, Double)], failed: Seq[String],
+      quietShare: Double): String = {
+    val qs = mins.map { case (k, v) => k -> round(v, 2) }
+    obj(Seq(
+      "metric" -> "\"total\"",
+      "value" -> qs.map(_._2).sum.bigDecimal.toPlainString,
+      "unit" -> "\"sec\"",
+      "sf" -> Verify.jsonString(sf),
+      "quiet_share" -> num(quietShare, 2),
+      "failed" -> strs(failed),
+      "quiet" -> nums(quiet, 2),
+      "queries" -> obj(qs.map { case (k, v) => k -> v.bigDecimal.toPlainString })))
+  }
+
+  private final case class Line(name: String, key: String, min: Double,
+      median: Double, extAtMin: Double)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // input-derived, not core-count-derived (SessionTuning §1)
-      .config("spark.sql.shuffle.partitions",
-        SessionTuning.shufflePartitionsConf(sfDir, cpus.toInt))
-      .config("spark.sql.codegen.cache.maxEntries",
-        SessionTuning.codegenCacheConf)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warmup: run every query once at the SMALLEST scale factor so
-    // Janino/JIT compilation of each plan shape happens outside the
-    // timed region (measured ~1s fixed cost per unique shape,
-    // SCALE.md "Known limits"). This makes the timings steady-state —
-    // the regime a long-running 100 TB deployment's executors are in —
-    // and is disclosed in the emitted JSON. Data-dependent work at the
-    // target SF is untouched: warmup reads only sf0.001.
-    // Warmup dir is derived, not hardcoded: prefer the sibling
-    // sf0.001 of the target (cheap), fall back to the target itself,
-    // and RECORD what actually ran — a silently-failed warmup must not
-    // let the JSON claim steady-state timing.
-    val warmupDir = sys.env.get("SPARK_GRAFT_WARMUP_DIR")
-      .orElse {
-        val sibling = new java.io.File(new java.io.File(sfDir).getParent, "sf0.001")
-        if (sibling.isDirectory) Some(sibling.getPath) else None
-      }
-      .getOrElse(sfDir)
-    // Local-iteration filter: SPARK_GRAFT_BENCH_ONLY=q43,q36 times just
-    // those prefixes. The driver never sets it, so driver runs are
-    // always the full suite.
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors())
+    val warmupDir = Some(new java.io.File(new java.io.File(sfDir).getParent, "sf0.001"))
+      .filter(_.isDirectory).map(_.getPath).getOrElse(sfDir)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    def included(name: String): Boolean =
-      only.forall(_.exists(name.startsWith))
-    // qNN short keys (see the emitter below): uniqueness must fail
-    // HERE, before the expensive warmup + timed passes — a colliding
-    // catalog name discovered after tens of minutes of measurement
-    // would discard every number (the reps>=1 precedent)
-    def shortKey(name: String): String = name.takeWhile(_ != '_')
-    val names = SparkEntry.queries.toSeq.sortBy(_._1).map(_._1)
-      .filter(included)
+    val fns = SparkEntry.queries
+    val names = fns.keys.toSeq.sorted
+      .filter(n => only.forall(_.exists(n.startsWith)))
+    // fail here, not after the timed passes: colliding keys would
+    // discard every measurement
     require(names.map(shortKey).distinct.size == names.size,
       "qNN short keys must stay unique against the catalog")
-    // same early-failure rule: reps=0 would run every warmup, then
-    // crash in minBy over an empty timing vector
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    require(reps >= 1, s"SPARK_GRAFT_BENCH_REPS must be >= 1, got $reps")
-    // parsed HERE, not after the timed passes (ADVICE r10): a
-    // malformed value must fail before warmup, not discard a full
-    // suite's measurements from inside the quiet section
-    val quietN = sys.env.getOrElse("SPARK_GRAFT_QUIET_N", "10").toInt
-    require(quietN >= 0, s"SPARK_GRAFT_QUIET_N must be >= 0, got $quietN")
-    // shared artifact parsing: read a (possibly driver-wrapped,
-    // escaped, tail-truncated) BENCH_r*.json and regex a flat
-    // {"qNN":1.23,...} object out of it by key
-    def artifactText(p: String): String =
-      try new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(p)),
-        java.nio.charset.StandardCharsets.UTF_8).replace("\\\"", "\"")
-      catch { case _: Throwable => "" }
-    def flatObj(raw: String, key: String): Map[String, Double] =
-      ("\"" + key + "\"\\s*:\\s*\\{([^}]*)\\}").r
-        .findFirstMatchIn(raw).map(_.group(1)).getOrElse("")
-        .split(",").toSeq.flatMap { kv =>
-          kv.split(":") match {
-            case Array(k, v) =>
-              try Some(k.replace("\"", "").trim -> v.trim.toDouble)
-              catch { case _: NumberFormatException => None }
-            case _ => None
-          }
-        }.filter(_._2 > 0).toMap
-    // the 15% bar shared by the quiet agreement skip (round 12) and
-    // the suite-rep reduction (round 13)
-    val AgreeBar = 0.15
-    val priorBenchFiles = Option(new java.io.File(".").listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .filter(_.getName.matches("BENCH_r\\d+\\.json"))
-      .sortBy(f => -"\\d+".r.findFirstIn(f.getName).get.toInt)
-    // Suite-rep CARRY (round 14 — VERDICT r13 item 1): round 13's
-    // reduction ran ONE rep for stable lines and committed the fresh
-    // draw — but a single interleaved-suite rep is a noisy draw, not
-    // a min (the committed sum inflated 225 → 347 s with zero real
-    // regressions; q69 committed 9.19 s beside its own quiet 2.69 s
-    // in the same artifact). The quiet_agreed discipline applied
-    // properly: a stable line runs ONE rep as a SANITY PROBE and
-    // commits its PRIOR TRUSTED VALUE — agreement is the property
-    // being asserted, and the prior value is the last actual
-    // measurement, so the artifact stays self-consistent and
-    // round-over-round comparable. The probe only demotes: a draw
-    // above 2× the prior (interleaved one-rep draws read up to ~50%
-    // high in aggregate — r13 measured — so a 15% probe bar would
-    // defeat the carry; 2× catches genuine multiple-× regressions)
-    // makes the line pay full reps THIS round and commit the fresh
-    // min. The quiet section still arbitrates every heavy line.
-    //
-    // Trust model over prior artifacts (which value is "the last
-    // actual measurement"): a carried commit is an exact copy of a
-    // full-reps min, so every r14+ committed value is trusted. The
-    // ONE mode-mixed artifact is r13's ("reps1" count > 0 with the
-    // line list clipped out of the driver's 2 KB tail): its per-line
-    // trust is REPLAYED — a line was a one-rep draw there iff it
-    // qualified under that round's rule, i.e. the two artifacts
-    // behind it agree within the same 15% bar (same parser, same
-    // files, so the replay is exact). r14+ artifacts use the key
-    // "carried" (a count), never "reps1", so this replay only ever
-    // fires for the r13-era artifact shape.
-    val artCount = math.min(priorBenchFiles.length, 6)
-    val arts: IndexedSeq[(Map[String, Double], Int)] =
-      (0 until artCount).map { i =>
-        val raw = artifactText(priorBenchFiles(i).getPath)
-        val oneRep = "\"reps1\"\\s*:\\s*(\\d+)".r
-          .findFirstMatchIn(raw).map(_.group(1).toInt).getOrElse(0)
-        // an artifact measured at a DIFFERENT scale factor (a local
-        // subset run at sf0.01 beside the driver's sf0.1 history)
-        // must contribute nothing: carrying a number across SFs is
-        // not a carry, it is a fabrication
-        val sfOk = "\"sf\"\\s*:\\s*\"([^\"]*)\"".r
-          .findFirstMatchIn(raw).forall(_.group(1) == sfDir)
-        if (sfOk) (flatObj(raw, "queries"), oneRep)
-        else (Map.empty[String, Double], 0)
-      }
-    def wasOneRepDraw(k: String, i: Int): Boolean =
-      arts(i)._2 > 0 && {
-        // replay of the r13 qualification: agreement of the two
-        // artifacts behind artifact i
-        val a = if (i + 1 < artCount) arts(i + 1)._1.get(k) else None
-        val b = if (i + 2 < artCount) arts(i + 2)._1.get(k) else None
-        (a, b) match {
-          case (Some(x), Some(y)) =>
-            math.abs(x - y) / math.min(x, y) <= AgreeBar
-          case _ => false
-        }
-      }
-    // newest-first trusted readings of line k across prior artifacts
-    def trustedReadings(k: String): Seq[Double] =
-      (0 until artCount).flatMap(i =>
-        arts(i)._1.get(k).filter(_ => !wasOneRepDraw(k, i)))
-    // Qualification: the two newest TRUSTED readings agree within the
-    // bar, the value is >= 0.5 s (below that, 2-decimal artifact
-    // parsing dominates the 15% bar — ADVICE r13), and the value was
-    // not ALREADY carried twice: two identical newest artifact values
-    // mean the same measurement has been committed two rounds running
-    // (a carry is an exact copy, so equality detects it without a
-    // list), and the third round re-measures — the ADVICE r13 "force
-    // full reps every N rounds" cadence with N = 3, bounding how long
-    // a stale number can ride the carry.
-    def carriedTwice(k: String): Boolean =
-      artCount >= 2 && ((arts(0)._1.get(k), arts(1)._1.get(k)) match {
-        case (Some(x), Some(y)) => x == y
-        case _ => false
-      })
-    // prior trusted value a qualified line will carry
-    val carrySource: Map[String, Double] =
-      // SPARK_GRAFT_PRIOR_BENCH is the operator's ignore-prior-state
-      // knob (documented at the quiet section, '/dev/null to force
-      // all children') — a fully-measured round must mean fully
-      // measured HERE too (round-13 review)
-      if (reps <= 1 || sys.env.contains("SPARK_GRAFT_PRIOR_BENCH"))
-        Map.empty
-      else {
-        // current round index, derived from the newest prior
-        // artifact's filename — the stagger's phase input
-        val curRound = priorBenchFiles.headOption
-          .flatMap(f => "\\d+".r.findFirstIn(f.getName))
-          .map(_.toInt + 1).getOrElse(1)
-        names.flatMap { n =>
-          val k = shortKey(n)
-          trustedReadings(k) match {
-            case Seq(x, y, _*) if x >= 0.5 && !carriedTwice(k) &&
-                !staggerRemeasure(k, curRound) &&
-                math.abs(x - y) / math.min(x, y) <= AgreeBar =>
-              Some(n -> x)
-            case _ => None
-          }
-        }.toMap
-      }
-    // ONCE-PER-ROUND gate lines (VERDICT r13 item 6, the rows-only
-    // ledger precedent applied to bench reps): a full-oracle gate
-    // whose bench line is an inherently sequential multi-rung walk
-    // runs ONE rep regardless of stability history — q102 re-derives
-    // the entire recall walk and is ~5% of the suite wall by itself
-    // at 3 reps. Its single draw still carries the prior trusted
-    // value when it agrees within the bar (the probe discipline);
-    // the quiet section arbitrates its trusted number.
-    // q102 = the coarse walk, q105 = the full-chain PQ walk (round
-    // 15): both sequential multi-rung gates
-    val oncePerRound: Set[String] = names.filter { n =>
-      Set("q102", "q105").contains(shortKey(n)) && reps > 1
-    }.toSet
-    val stableOneRep: Set[String] = carrySource.keySet ++ oncePerRound
+
+    val osBean = ManagementFactory.getOperatingSystemMXBean
+    def loadAvg(): Double = osBean.getSystemLoadAverage
+    // Cores OTHER processes burned since the previous call: CPU load
+    // is integrated over the window since the last read, so
+    // (system − this process) × cores is external contention alone.
+    // -1 when the JVM cannot tell.
+    def extCores(): Double = osBean match {
+      case b: com.sun.management.OperatingSystemMXBean =>
+        val (system, proc) = (b.getCpuLoad, b.getProcessCpuLoad)
+        if (system.isNaN || proc.isNaN || system < 0 || proc < 0) -1.0
+        else math.max(0.0, (system - proc) * Runtime.getRuntime.availableProcessors())
+      case _ => -1.0
+    }
+    extCores() // the first read only opens the window
+
+    val spark = SessionTuning.session(cpus, sfDir)
     var warmupFailures = 0
-    val fns = SparkEntry.queries
     names.foreach { name =>
       try Measure.force(fns(name)(spark, warmupDir))
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         warmupFailures += 1
         System.err.println(s"bench: warmup $name failed: $e")
       }
       finally CacheScope.releaseAll()
     }
-    // A failed query must be VISIBLE: it reports in "failed" (and on
-    // stderr) rather than hiding inside a fast-looking elapsed time.
-    //
-    // Each query is timed as the MIN of `reps` runs, and the reps are
-    // INTERLEAVED across queries (A,B,C,…,A,B,C,… — not A,A,B,B):
-    // this is a shared box, and back-to-back reps share any sustained
-    // contamination window. Round 3 recorded q36 at 348 s where three
-    // isolated runs measure ~7 s; round 5's min-of-2 back-to-back
-    // still recorded 52.8 s vs 13.6 s isolated, because the load spike
-    // covered BOTH reps. With interleaving a contamination window of
-    // less than a full round-trip hits different queries on different
-    // reps, so each query's min is far more likely to see a quiet
-    // window. min-of-N is the right statistic: external contention
-    // only ever ADDS time, so the min estimates the query's own cost.
-    //
-    // Per rep we also record a LOAD SENTINEL — the OS 1-minute load
-    // average (via OperatingSystemMXBean) sampled at rep start — and
-    // emit, per query, the sentinel of the rep whose time won the min.
-    // A judge can then see whether the committed number was measured
-    // under external load (sentinel >> this JVM's own core count).
-    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-    def loadAvg(): Double = osBean.getSystemLoadAverage
-    // EXTERNAL-contention sentinel (round 9): load_1m can never read
-    // < 5 mid-suite because the bench's own back-to-back 32-thread
-    // queries dominate the 1-minute average (r8 committed 8–11 on a
-    // box that was otherwise idle — VERDICT r8 item 6's literal bar is
-    // unattainable under that metric). getCpuLoad()/getProcessCpuLoad()
-    // integrate over the window SINCE THE PREVIOUS CALL, so sampling
-    // right after each rep yields system-vs-this-JVM CPU shares over
-    // exactly that rep's window: ext_cores = (system − process) ×
-    // nCores is the number of cores OTHER processes burned while the
-    // rep ran — the contention signal load_1m conflates with self-load.
-    val sunBean = osBean match {
-      case b: com.sun.management.OperatingSystemMXBean => Some(b)
-      case _ => None
-    }
-    def extCores(): Double = sunBean.map { b =>
-      val sys = b.getCpuLoad
-      val proc = b.getProcessCpuLoad
-      if (sys.isNaN || proc.isNaN || sys < 0 || proc < 0) -1.0
-      else math.max(0.0,
-        (sys - proc) * Runtime.getRuntime.availableProcessors())
-    }.getOrElse(-1.0)
-    extCores() // prime the usage counters (first call reads -1/NaN)
-    val times = scala.collection.mutable.Map[String, Vector[(Double, Double, Double)]]()
-      .withDefaultValue(Vector.empty)
-    val okFlags = scala.collection.mutable.Map[String, Boolean]()
-      .withDefaultValue(true)
-    // lines whose rep-1 probe exceeded 2× their carry value: they pay
-    // the remaining reps THIS round and commit the fresh min (the
-    // carry's regression backstop)
-    val demoted = scala.collection.mutable.Set[String]()
-    (1 to reps).foreach { r =>
-      names.foreach { name =>
-        val runThis =
-          if (oncePerRound(name)) r == 1
-          else r == 1 || !stableOneRep(name) || demoted(name)
-        if (runThis) {
-        val sentinel = loadAvg()
-        extCores() // reset the usage window to this rep's start
-        val t0 = System.nanoTime()
-        try Measure.force(fns(name)(spark, sfDir))
-        catch { case e: Throwable =>
-          System.err.println(s"bench: $name FAILED: $e"); okFlags(name) = false
-        }
-        val elapsed = (System.nanoTime() - t0) / 1e9
-        val ext = extCores() // external cores over THIS rep's window
-        // blocking: evict NOW, outside any timing, rather than letting
-        // async eviction bleed into the next run's measured region
-        CacheScope.releaseAll(blocking = true)
-        times(name) = times(name) :+ ((elapsed, sentinel, ext))
-        if (r == 1 && stableOneRep(name) &&
-            carrySource.get(name).exists(pv =>
-              probeDemotes(elapsed, pv, AgreeBar)))
-          demoted += name
-        // nudge the ContextCleaner between queries so broadcast/shuffle
-        // state from prior plans is reclaimed outside any timed region
-        System.gc()
-        }
+    // per line: (seconds, external cores) of each rep
+    val runs = names.map(_ -> mutable.ArrayBuffer.empty[(Double, Double)]).toMap
+    val failed = mutable.Set.empty[String]
+    for (_ <- 1 to Reps; name <- names) {
+      extCores()
+      val t0 = System.nanoTime()
+      // a failed line reports in `failed`, never as a fast time alone
+      try Measure.force(fns(name)(spark, sfDir))
+      catch { case NonFatal(e) =>
+        System.err.println(s"bench: $name FAILED: $e")
+        failed += name
       }
-    }
-    // Committed value per line: a stable line's probe either upholds
-    // the carry (commit the prior trusted value — the last actual
-    // measurement) or demoted it (fresh min). A once-per-round line
-    // outside the carry set commits its single draw unless the draw
-    // agrees with the newest trusted reading within the bar (then the
-    // trusted reading is the better estimate of the same number).
-    val carriedNames = scala.collection.mutable.LinkedHashSet[String]()
-    val results = names.map { name =>
-      val (fresh, s, e) = times(name).minBy(_._1)
-      val v =
-        if (!okFlags(name) || demoted(name)) fresh
-        else carrySource.get(name) match {
-          case Some(pv) => carriedNames += name; pv
-          // the ignore-prior-state knob must disable THIS carry too:
-          // r15's "fully fresh" baseline committed one once-line carry
-          // through this branch because only carrySource checked the
-          // env (ADVICE r15) — a baseline run with
-          // SPARK_GRAFT_PRIOR_BENCH set is now fresh on every line
-          case None if oncePerRound(name) &&
-              !sys.env.contains("SPARK_GRAFT_PRIOR_BENCH") =>
-            trustedReadings(shortKey(name)).headOption
-              .filter(pv =>
-                math.abs(fresh - pv) / math.min(fresh, pv) <= AgreeBar)
-              .map { pv => carriedNames += name; pv }
-              .getOrElse(fresh)
-          case None => fresh
-        }
-      (name, v, s, e, okFlags(name))
-    }
-    // ---- QUIET re-measurement (VERDICT r9 item 2) ----------------
-    // Three rounds running, the committed heavy-line numbers needed
-    // judge re-measurement to interpret (q80 8.85 committed vs 4.90
-    // judge-quiet in r9). ext_cores proves the inflation is not
-    // external contention; it is WITHIN-JVM suite state — ~90 queries
-    // of cache/JIT/GC history in one 32-thread session. The fix is
-    // the judge's own measurement, automated: the top-N committed
-    // lines re-run in a FRESH JVM each (a spawned RunOne subprocess,
-    // min-of-3 inside one child), gated on the 1-min load average
-    // decaying below `QuietBar` so the suite's own thread history is
-    // outside the window. The child inherits this JVM's input args
-    // (add-opens, -Xmx, -D flags) and classpath, so "quiet" IS an
-    // independent RunOne measurement by construction.
-    // Gate on ACTUAL busy cores (the round-9 ext_cores sentinel), not
-    // the 1-minute load average: load_1m lags ~2 min behind reality —
-    // after a child's 32-core burst exits, the box is instantly idle
-    // but load_1m still reads 15+, so a load gate either waits ~2 min
-    // of true idle per child (gate 4) or launches ~19% inflated
-    // (gate 6). A 3 s getCpuLoad window answers "is anything running
-    // NOW" exactly; < 2 busy cores on 32 bounds inflation under ~7%,
-    // inside the 15% agreement bar the section exists to meet.
-    val QuietCores = 2.0
-    val QuietBar = 6.0 // loadAvg fallback when getCpuLoad unsupported
-    // Agreement skip (round 12 — VERDICT r11 item 6): the section
-    // exists to catch committed heavy lines inflated by within-JVM
-    // suite state beyond its own 15% agreement bar. A heavy line whose
-    // committed number ALREADY agrees with the prior round's quiet
-    // re-measurement inside that bar needs no fresh-JVM child — the
-    // prior quiet is an independent isolated measurement of the same
-    // code path, and agreement with it is exactly the property the
-    // child would re-establish (~90 s of gate wait + reps per child;
-    // most lines are stable round-over-round, so this is the bulk of
-    // the section's wall-clock). Skipped lines are PRINTED in
-    // quiet_agreed (committed value, prior quiet alongside) — the
-    // agreement is a reported property, not silence; a drifted or
-    // new line still pays the full child. Prior source:
-    // SPARK_GRAFT_PRIOR_BENCH (set to /dev/null to force all
-    // children), else the highest-numbered BENCH_r*.json in cwd.
-    val priorQuiet: Map[String, Double] = sys.env
-      .get("SPARK_GRAFT_PRIOR_BENCH")
-      .orElse(priorBenchFiles.headOption.map(_.getPath))
-      .map { p =>
-        try {
-          // works on the raw bench line AND the driver's wrapper
-          // (which stores the escaped tail of it): unescape, then
-          // regex the flat objects out (the shared artifactText /
-          // flatObj helpers above)
-          val raw = artifactText(p)
-          val measured = flatObj(raw, "quiet")
-          // a line the PRIOR round skipped carries its last true
-          // measurement in quiet_agreed's second element — read it
-          // too, or a stable line would alternate skip/re-measure
-          // forever (the prior quiet propagates unchanged, so the
-          // 15% agreement is always judged against the last ACTUAL
-          // fresh-JVM measurement, never a drifting baseline)
-          val carried =
-            "\"(q\\d+)\"\\s*:\\s*\\[[0-9.]+\\s*,\\s*([0-9.]+)\\]".r
-              .findAllMatchIn(
-                "\"quiet_agreed\"\\s*:\\s*\\{([^}]*)\\}".r
-                  .findFirstMatchIn(raw).map(_.group(1)).getOrElse(""))
-              .map(m => m.group(1) -> m.group(2).toDouble)
-              .filter(_._2 > 0).toMap
-          carried ++ measured // a fresh measurement wins over a carry
-        } catch { case _: Throwable => Map.empty[String, Double] }
-      }
-      .getOrElse(Map.empty)
-    var quietPairs = Seq.empty[(String, Double, Double)]
-    var agreedPairs = Seq.empty[(String, Double, Double)]
-    if (quietN > 0) {
-      spark.stop() // park the suite JVM's executors for good
+      val elapsed = (System.nanoTime() - t0) / 1e9
+      val ext = extCores()
+      // evict and collect outside the timed region, so neither bleeds
+      // into the next rep
+      CacheScope.releaseAll(blocking = true)
+      runs(name) += ((elapsed, ext))
       System.gc()
-      val committedByName = results.map(r => (r._1, r._2)).toMap
-      val allHeavies = results.filter(_._5).sortBy(-_._2).take(quietN)
-        .map(_._1)
-      val (agreedNames, heavies) = allHeavies.partition { name =>
-        priorQuiet.get(shortKey(name)).exists(pq =>
-          math.abs(committedByName(name) - pq) / pq <= AgreeBar)
-      }
-      agreedPairs = agreedNames.map(n =>
-        (n, committedByName(n), priorQuiet(shortKey(n))))
-      val jvmArgs = {
-        import scala.jdk.CollectionConverters._
-        java.lang.management.ManagementFactory.getRuntimeMXBean
-          .getInputArguments.asScala.toSeq
-      }
-      val cp = System.getProperty("java.class.path")
-      val javaBin = new java.io.File(new java.io.File(
-        System.getProperty("java.home"), "bin"), "java").getPath
-      // section-level budget: the per-child gate waits compound (each
-      // finished child's burst re-inflates load_1m), and the bench
-      // step must stay bounded for the driver — past the budget the
-      // remaining heavies keep their suite numbers (absent from
-      // `quiet`), which the note explains
-      val sectionDeadline = System.currentTimeMillis + 1500000L
-      // iterator, not Seq: takeWhile must re-check the clock as each
-      // child finishes, not once up front
-      quietPairs = heavies.iterator.takeWhile(_ =>
-          System.currentTimeMillis < sectionDeadline).map { name =>
-        val deadline = System.currentTimeMillis + 240000L
-        // each busyCores() call integrates system-vs-process CPU over
-        // a fresh 3 s window (the extCores discipline); the parent is
-        // idle here (spark stopped), so this reads other-process cores
-        def busyCores(): Double = {
-          extCores(); Thread.sleep(3000); extCores()
-        }
-        var busy = busyCores()
-        while (System.currentTimeMillis < deadline &&
-            ((busy >= 0 && busy >= QuietCores) ||
-             (busy < 0 && loadAvg() >= QuietBar)))
-          busy = busyCores()
-        // recorded per child: the busy-core reading that opened the
-        // gate (the actual criterion; loadAvg would read a stale 15+)
-        val gateLoad = if (busy >= 0) busy else loadAvg()
-        val cmd = (Seq(javaBin) ++ jvmArgs ++
-          Seq("-cp", cp, "graft.RunOne", name, sfDir, "time"))
-        val pb = new ProcessBuilder(cmd: _*)
-        // min-of-5, not 3: a fresh JVM's first reps carry warmup
-        // luck (q80 measured 15.4/5.6/5.7 — the min over 3 samples
-        // still varies ~18% run-to-run); two more ~6 s reps per
-        // child buy convergence inside the 15% agreement bar.
-        // RUNS_STABLE=2 (round 11): the child stops early once 2
-        // consecutive reps fail to improve the running min by > 5%
-        // (never before rep 3) — a converged line pays 3 reps, an
-        // unstable one keeps the full 5; trims the section's ~18 min
-        // wall-clock without moving any stable number
-        pb.environment().put("SPARK_GRAFT_RUNS", "5")
-        pb.environment().put("SPARK_GRAFT_RUNS_STABLE", "2")
-        pb.redirectErrorStream(false)
-        pb.redirectError(ProcessBuilder.Redirect.DISCARD)
-        val t = try {
-          val p = pb.start()
-          // watchdog: a hung child must not hang the artifact line
-          val killer = new Thread(() => {
-            if (!p.waitFor(15, java.util.concurrent.TimeUnit.MINUTES))
-              p.destroyForcibly()
-          })
-          killer.setDaemon(true); killer.start()
-          val out = new String(p.getInputStream.readAllBytes(),
-            java.nio.charset.StandardCharsets.UTF_8)
-          val finished = p.waitFor()
-          val secs = """in ([0-9.]+)s""".r.findAllMatchIn(out)
-            .map(_.group(1).toDouble).toSeq
-          if (finished == 0 && secs.nonEmpty) secs.min else -1.0
-        } catch { case e: Throwable =>
-          System.err.println(s"bench: quiet $name failed: $e"); -1.0
-        }
-        (name, t, gateLoad)
-      }.toSeq
     }
-    // qNN short keys + 3-decimal times: the driver's artifact capture
-    // keeps only the ~2 KB TAIL of this line, and round 7's full-name
-    // keys at 9-decimal precision pushed ~2.5 KB of timings past the
-    // window, clipping q01–q18 out of BENCH_r07 (VERDICT r7 item 1).
-    // Every query name is qNN_<slug> with a unique qNN prefix (the
-    // early require above), so the short key is lossless against the
-    // catalog; 80 entries at "qNN":N.NNN is ~1.1 KB — timings +
-    // failed fit with room. Locale.ROOT: the f-interpolator uses the
-    // JVM default locale, and a comma-decimal locale would emit
-    // "q44":3,490 — invalid JSON for the whole round's timings.
-    def num(v: Double, decimals: Int): String =
-      String.format(java.util.Locale.ROOT, s"%.${decimals}f",
-        java.lang.Double.valueOf(v))
-    val qs = results.map { case (k, v, _, _, _) =>
-      "\"" + shortKey(k) + "\":" + num(v, 3) }
-      .mkString("{", ",", "}")
-    val loads = results.map { case (k, _, s, _, _) =>
-      "\"" + shortKey(k) + "\":" + num(s, 1) }
-      .mkString("{", ",", "}")
-    val exts = results.map { case (k, _, _, e, _) =>
-      "\"" + shortKey(k) + "\":" + num(e, 1) }
-      .mkString("{", ",", "}")
-    val failed = results.collect { case (k, _, _, _, false) =>
-      "\"" + shortKey(k) + "\"" }
-      .mkString("[", ",", "]")
-    val quietJson = quietPairs.map { case (k, t, _) =>
-      "\"" + shortKey(k) + "\":" + num(t, 3) }
-      .mkString("{", ",", "}")
-    val quietLoads = quietPairs.map { case (k, _, l) =>
-      "\"" + shortKey(k) + "\":" + num(l, 1) }
-      .mkString("{", ",", "}")
-    // committed value first, prior-round quiet second: the pair IS
-    // the agreement the skip relied on, printed for the judge
-    val agreedJson = agreedPairs.map { case (k, c, p) =>
-      "\"" + shortKey(k) + "\":[" + num(c, 3) + "," + num(p, 3) + "]" }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    // suite-level contention verdict: share of winning reps whose
-    // window saw < 5 external cores (the round-9 quiet criterion)
-    val extKnown = results.filter(_._4 >= 0)
+    spark.stop()
+    val lines = names.map { n =>
+      val (min, median) = summary(runs(n).map(_._1).toSeq)
+      Line(n, shortKey(n), min, median, runs(n).minBy(_._1)._2)
+    }
+    // share of winning reps that saw < 5 external cores
+    val extKnown = lines.filter(_.extAtMin >= 0)
     val quietShare =
       if (extKnown.isEmpty) -1.0
-      else extKnown.count(_._4 < 5.0).toDouble / extKnown.size
+      else extKnown.count(_.extAtMin < 5.0).toDouble / extKnown.size
+
+    System.gc()
+    val jvmArgs = ManagementFactory.getRuntimeMXBean.getInputArguments.asScala.toSeq
+    val javaBin = new java.io.File(new java.io.File(
+      System.getProperty("java.home"), "bin"), "java").getPath
+    val childCmd = Seq(javaBin) ++ jvmArgs ++
+      Seq("-cp", System.getProperty("java.class.path"), "graft.RunOne")
+    // min of the child's RunOne timings; -1 when the child fails
+    def quietChild(name: String): Double = {
+      val pb = new ProcessBuilder((childCmd ++ Seq(name, sfDir, "time")): _*)
+        .redirectError(ProcessBuilder.Redirect.DISCARD)
+      pb.environment().put("SPARK_GRAFT_RUNS", Reps.toString)
+      try {
+        val p = pb.start()
+        val killer = new Thread(() =>
+          if (!p.waitFor(ChildCapMinutes, TimeUnit.MINUTES)) p.destroyForcibly())
+        killer.setDaemon(true); killer.start()
+        val out = new String(p.getInputStream.readAllBytes(),
+          java.nio.charset.StandardCharsets.UTF_8)
+        val secs = "in ([0-9.]+)s".r.findAllMatchIn(out).map(_.group(1).toDouble).toSeq
+        if (p.waitFor() == 0 && secs.nonEmpty) secs.min else -1.0
+      } catch { case NonFatal(e) =>
+        System.err.println(s"bench: quiet $name failed: $e"); -1.0
+      }
+    }
+    // the parent is idle here, so a 3 s window reads other processes
+    def busyCores(): Double = { extCores(); Thread.sleep(3000); extCores() }
+    def now = System.currentTimeMillis
+    val sectionEnd = now + SectionCapMs
+    val heavies = lines.filterNot(l => failed(l.name)).sortBy(-_.min).take(QuietN)
+    // (key, quiet seconds, busy-core reading that opened the gate);
+    // a line past the section cap keeps only its suite number
+    val quiet = heavies.iterator.takeWhile(_ => now < sectionEnd).map { l =>
+      val gateEnd = now + GateCapMs
+      var busy = busyCores()
+      while (now < gateEnd &&
+          (if (busy >= 0) busy >= QuietCores else loadAvg() >= QuietLoad))
+        busy = busyCores()
+      (l.key, quietChild(l.name), if (busy >= 0) busy else loadAvg())
+    }.toList
+
+    val failedKeys = lines.filter(l => failed(l.name)).map(_.key)
     val warmupNote =
       if (warmupFailures > 0)
         s"INCOMPLETE: $warmupFailures queries failed warmup at $warmupDir"
-      else s"all queries once at $warmupDir (steady-state timing; codegen/JIT outside the timed region)"
-    // JSON string escape for interpolated path/note fields — same
-    // rationale as Verify's q(): an unescaped quote or backslash in a
-    // dir path would invalidate the ONE line the driver captures.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    // Key order is truncation-aware: the driver's artifact capture
-    // keeps only the ~2 KB TAIL of this line, so the keys the gate
-    // needs most go LAST — load sentinels, then failed, then the
-    // timings — and any head-truncation clips prose, not numbers
-    // (round 6 lost timings to sentinel-last ordering, round 7 to
-    // full-name 9-decimal keys; see shortKey above).
-    val carriedJson = carriedNames.toSeq.map(shortKey).sorted
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
-    // per-line PROBE DRAW beside every carried value (ADVICE r14): a
-    // genuine regression between the 15% agreement bar and the 2×
-    // demotion bar rides the carry invisibly for up to a cadence
-    // window — emitting the probe's own draw makes sub-2× drift
-    // visible in the artifact the round it happens (verbose line
-    // only; the draw is a one-rep reading, never a committed number)
-    val probeJson = carriedNames.toSeq.sortBy(shortKey)
-      .map { n => "\"" + shortKey(n) + "\":" +
-        num(times(n).map(_._1).min, 3) }
-      .mkString("{", ",", "}")
-    val onceJson = oncePerRound.toSeq.map(shortKey).sorted
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
-    val demotedJson = demoted.toSeq.map(shortKey).sorted
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
-    println(s"""{"metric":"total","value":${num(total, 3)},"unit":"sec","sf":${q(sfDir)},"suite_carried":$carriedJson,"suite_probe_draw":$probeJson,"suite_once":$onceJson,"suite_demoted":$demotedJson,"timing":"min of $reps INTERLEAVED rounds (suite_carried lines ran ONE rep as a sanity probe and COMMITTED THEIR PRIOR TRUSTED VALUE — the last actual full-reps measurement, so the artifact never mixes measurement modes; a probe above 2x its carry value OR below it by more than the 15% agreement bar (a code speedup — contention only adds time, so a low probe is real) demotes the line to full reps this round (suite_demoted); suite_once lines are sequential multi-rung walk gates run once per round; a drifting or new line pays full reps) (A,B,C,A,B,C — a sustained shared-box contamination window hits different queries on different reps; back-to-back min-of-2 shared the window, r3/r5 lesson); per-query load_1m_at_min_rep is the OS 1-min load average sampled when the winning rep started — it INCLUDES this bench's own 32-thread self-load decaying through the 1-min window, so mid-suite values of 8-11 are expected on an otherwise-idle box; ext_cores_at_min_rep is the round-9 contention sentinel: (systemCpu - processCpu) x nCores integrated over exactly the winning rep's window — cores OTHER processes burned while the rep ran; quiet_share is the fraction of winning reps with ext < 5 cores; full-plan materialization via queryExecution.toRdd; keys are the unique qNN prefixes of the catalog names","warmup":${q(warmupNote)},"load_1m_at_min_rep":$loads,"ext_cores_at_min_rep":$exts,"quiet_share":${num(quietShare, 2)},"quiet_note":"quiet = the top-${quietPairs.size} committed lines re-measured in a FRESH JVM each (spawned RunOne child, min of up to 5 reps, early-stopped at >=3 once 2 consecutive reps fail to improve the running min by >5%), gated on OTHER-PROCESS busy cores < $QuietCores over a 3 s getCpuLoad window (NOT load_1m, which lags ~2 min behind an exited burst; quiet_gate_load = the busy-core reading that opened each child's gate; 240 s cap per child, 25 min budget for the section — a heavy line past the budget keeps its suite number and is absent here); these are the numbers to trust for heavy lines — the interleaved suite carries ~90 queries of within-JVM state; -1 = child failed; quiet_agreed = heavy lines whose committed number already agrees with the PRIOR round's quiet inside the same 15% bar ([committed, prior_quiet]) — the child re-measure is skipped because the prior quiet is an independent isolated measurement of the same code path and agreement with it is the property the child would re-establish","quiet_agreed":$agreedJson,"quiet_gate_load":$quietLoads,"quiet":$quietJson,"failed":$failed,"queries":$qs}""")
-    // DRIVER-PARSEABLE COMPACT LINE (round 13 — VERDICT r12 item 4):
-    // the driver keeps only the last ~2 KB of output and tries to
-    // parse a JSON object out of it; the verbose line above is ~4 KB
-    // of prose + diagnostics, so its HEAD always clipped out of the
-    // window and the artifact's `parsed` came out null every round.
-    // This final line carries only what the gate and the judge read —
-    // total, quiet/agreed, failures, 2-decimal timings — and fits the
-    // 2 KB window with sbt's epilogue behind it. The verbose line
-    // stays for humans reading full stdout; all prior-round parsers
-    // (flatObj on "quiet"/"quiet_agreed"/"queries") read either line
-    // identically. GROWTH MARGIN (round-13 review): ~1.45 KB at 103
-    // queries, ~13 bytes per new catalog line, ~1.9 KB budget — room
-    // for ~35 more queries; if the catalog ever approaches that, trim
-    // quiet_agreed to committed-only values (the verbose line keeps
-    // the pairs) before timings lose decimals.
-    val qs2 = results.map { case (k, v, _, _, _) =>
-      "\"" + shortKey(k) + "\":" + num(v, 2) }.mkString("{", ",", "}")
-    val quiet2 = quietPairs.map { case (k, t, _) =>
-      "\"" + shortKey(k) + "\":" + num(t, 2) }.mkString("{", ",", "}")
-    val agreed2 = agreedPairs.map { case (k, c, p) =>
-      "\"" + shortKey(k) + "\":[" + num(c, 2) + "," + num(p, 2) + "]" }
-      .mkString("{", ",", "}")
-    // "carried"/"once" counts, never the r13-era "reps1" key: the
-    // next round's trust replay treats any artifact with reps1 > 0 as
-    // mode-mixed; carried values are exact copies of full-reps mins,
-    // so a carried artifact is fully trusted (and self-describing —
-    // a carry is detectable as value equality against the prior
-    // artifact, which is also what bounds the carry cadence to 3
-    // rounds without shipping the line list through the 2 KB window).
-    println(s"""{"metric":"total","value":${num(total, 2)},"unit":"sec","sf":${q(sfDir)},"quiet_share":${num(quietShare, 2)},"carried":${carriedNames.size},"once":${oncePerRound.size},"demoted":${demoted.size},"failed":$failed,"quiet_agreed":$agreed2,"quiet":$quiet2,"queries":$qs2}""")
-    spark.stop()
+      else s"all queries once at $warmupDir, so codegen and JIT stay outside the timed region"
+    println(obj(Seq(
+      "metric" -> "\"total\"",
+      "value" -> num(lines.map(_.min).sum, 3),
+      "unit" -> "\"sec\"",
+      "sf" -> Verify.jsonString(sfDir),
+      "timing" -> Verify.jsonString(s"each line is the min of $Reps reps interleaved across lines (A,B,C,A,B,C), fully materialized via queryExecution.toRdd; min_median is [min, median] of those reps and ext_cores_at_min_rep the cores other processes burned during the fastest one."),
+      "warmup" -> Verify.jsonString(warmupNote),
+      "min_median" -> obj(lines.map(l => l.key -> s"[${num(l.min, 3)},${num(l.median, 3)}]")),
+      "ext_cores_at_min_rep" -> nums(lines.map(l => l.key -> l.extAtMin), 1),
+      "quiet_share" -> num(quietShare, 2),
+      "quiet_note" -> Verify.jsonString(s"quiet = the ${quiet.size} slowest lines re-timed after the suite, each as the min of $Reps reps in a fresh RunOne JVM started once other processes' busy cores over 3 s fall below $QuietCores (quiet_gate_load; ${GateCapMs / 1000} s gate cap per child, ${SectionCapMs / 60000} min for the section), -1 = child failed."),
+      "quiet_gate_load" -> nums(quiet.map(q => q._1 -> q._3), 1),
+      "quiet" -> nums(quiet.map(q => q._1 -> q._2), 3),
+      "failed" -> strs(failedKeys),
+      "queries" -> nums(lines.map(l => l.key -> l.min), 3))))
+    println(compactLine(sfDir, lines.map(l => l.key -> l.min),
+      quiet.map(q => q._1 -> q._2), failedKeys, quietShare))
   }
 }

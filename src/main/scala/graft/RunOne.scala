@@ -1,70 +1,34 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc single-query runner for iterating on one plan:
   * `sbt "runMain graft.RunOne <queryName> <sfDir> [explain|time]"`.
-  * Prints the row count (and optionally the formatted plan or 3
-  * repeated timings) for just that query — Verify/Bench run the full
-  * catalog.
+  * Prints the row count (and optionally the formatted plan or
+  * SPARK_GRAFT_RUNS repeated timings, default 3) for just that query —
+  * Verify/Bench run the full catalog. Bench's quiet section runs it as
+  * a fresh-JVM child and reads the `in <secs>s` timings.
   */
 object RunOne {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
     val mode = if (args.length > 2) args(2) else "count"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // same tuning as Bench — RunOne is the quiet section's child,
-      // so the two must measure under identical session settings
-      .config("spark.sql.shuffle.partitions",
-        SessionTuning.shufflePartitionsConf(sfDir, cpus.toInt))
-      .config("spark.sql.codegen.cache.maxEntries",
-        SessionTuning.codegenCacheConf)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors())
+    val spark = SessionTuning.session(cpus, sfDir)
     val fn = SparkEntry.queries(name)
     mode match {
       case "explain" =>
         fn(spark, sfDir).explain("formatted")
       case "time" =>
         val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt
-        // Early stop for the Bench quiet section (round 11, VERDICT
-        // r10 item 7): a fresh JVM's min typically converges by rep
-        // 3 — once `stable` consecutive reps have failed to improve
-        // the running min by > 5%, further reps only re-confirm the
-        // same number (the section's consumer is a 15% agreement
-        // bar). 0 (the default) = off: plain fixed-rep behavior.
-        val stable = sys.env.getOrElse("SPARK_GRAFT_RUNS_STABLE", "0").toInt
-        var best = Double.MaxValue
-        var noImprove = 0
-        var i = 1
-        var go = true
-        while (go && i <= runs) {
+        (1 to runs).foreach { i =>
           val t0 = System.nanoTime()
           val n = Measure.force(fn(spark, sfDir))
           // record before releaseAll (the Bench methodology): cache
           // eviction is bookkeeping, not query cost
-          val elapsed = System.nanoTime() - t0
+          val secs = (System.nanoTime() - t0) / 1e9
           CacheScope.releaseAll(blocking = true)
-          val secs = elapsed / 1e9
           println(f"[runone] run $i: $n rows in $secs%.2fs (ended ${System.currentTimeMillis() / 1000})")
-          if (secs < best * 0.95) noImprove = 0 else noImprove += 1
-          if (secs < best) best = secs
-          if (stable > 0 && i >= 3 && noImprove >= stable) {
-            // NOT "min $best%.2fs": Bench's child-output regex is
-            // `in ([0-9.]+)s`, and the trailing "in " of "min" made
-            // this line match it (ADVICE r11) — keep the early-stop
-            // message free of the `in <num>s` shape
-            println(f"[runone] early stop after $i reps: best $best%.2f sec, stable for $noImprove reps")
-            go = false
-          }
-          i += 1
         }
       case "show" =>
         // small gates only: prints the full result (row-capped)

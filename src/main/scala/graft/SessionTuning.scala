@@ -1,8 +1,12 @@
 package graft
 
+import org.apache.spark.SparkConf
+import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
+
 /** Session-level tuning shared by the runner entrypoints (Bench,
-  * Verify, RunOne, ShuffleAudit) — round-15 optimization, measured
-  * and justified in OPTIMIZATION_r15.md.
+  * Verify, RunOne, ShuffleAudit), measured and justified in
+  * OPTIMIZATION_r15.md.
   *
   * 1. INITIAL SHUFFLE PARTITIONS DERIVED FROM INPUT SIZE (guide §2:
   *    "make partitioning scale-adaptive ... rather than a constant
@@ -13,18 +17,18 @@ package graft
   *    measured 17% of the heavy-subset wall (126.5 → 105.4 s at 8
   *    partitions, per-query table in OPTIMIZATION_r15.md). The rule
   *    targets ~2 MB per partition in the overhead-bound small regime
-  *    and ~256 MB per partition at scale (the guide §2.2/§9 band),
-  *    never dropping below 1 or the size-derived floor:
+  *    and ~256 MB of shuffle payload per partition at scale (the guide
+  *    §2.2/§9 band), never dropping below 1 or the size-derived floor:
   *
   *      parts = clamp(bytes / 2 MB, 1, max(cores, bytes * 4 / 256 MB))
   *
-  *    15.7 MB → 8; 2 MB → 1; 100 GB → 1,600 (64 MB of parquet ≈
-  *    256 MB of row-format shuffle each — the ×4 expansion factor,
-  *    ADVICE r15); 100 TB → ~1.6M. Cores only CAP the small regime —
-  *    at cluster scale the byte-derived term dominates, so nothing
-  *    here is tuned to local[32]. A dir resolving to zero bytes falls
-  *    back to the core count (never 1) with a warning; sizes resolve
-  *    through Hadoop FileSystem so remote URIs work.
+  *    15.7 MB → 8; 2 MB → 1; 100 GB → 1,600; 100 TB → ~1.6M. The
+  *    byte-derived cap overtakes the core cap at cores × 64 MB of
+  *    input (~2 GB at 32 cores), so cores only cap the small regime
+  *    and nothing here is tuned to local[32]. A dir resolving to zero
+  *    bytes falls back to the core count (never 1) with a warning;
+  *    sizes resolve through Hadoop FileSystem with the `spark.hadoop.*`
+  *    settings applied, so remote URIs size with their credentials.
   *    Override: SPARK_GRAFT_SHUFFLE_PARTITIONS.
   *
   * 2. CODEGEN CACHE SIZED TO THE ENGINE (spark.sql.codegen.cache
@@ -39,32 +43,52 @@ package graft
 object SessionTuning {
   private val SmallTarget = 2L << 20 // 2 MB/partition: overhead-bound regime
   private val LargeTarget = 256L << 20 // 256 MB/partition at scale (guide §9)
-  // Parquet bytes understate shuffle bytes: the large-regime cap sizes
-  // SHUFFLE partitions, and row-format shuffle data of a parquet scan
-  // decompresses/de-encodes ~3-6x (ADVICE r15). The cap therefore
-  // charges each input byte an expansion factor so a "256 MB" partition
-  // is ~256 MB of SHUFFLE payload (~64 MB of parquet), keeping the
-  // guide §2.2 100 MB-1 GB band honest at scale. AQE's advisory size
-  // still splits/coalesces residual outliers at runtime.
+  // The large-regime cap sizes SHUFFLE partitions from PARQUET bytes,
+  // so each input byte is charged as this many shuffle bytes: a
+  // "256 MB" partition is then ~64 MB of parquet. The factor is
+  // unmeasured; row-format shuffle data of a parquet scan is commonly
+  // 3–6× its compressed size. AQE's advisory size still splits or
+  // coalesces outliers at runtime.
   private val ShuffleExpansion = 4L
 
+  /** The local session every runner entrypoint measures with:
+    * `local[cpus]`, input-derived shuffle partitions for `dir`, the
+    * codegen cache size, AQE on, UTC, no UI, WARN logging. */
+  def session(cpus: Int, dir: String): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", shufflePartitionsConf(dir, cpus))
+      .config("spark.sql.codegen.cache.maxEntries", codegenCacheConf)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** Recursive byte size of the inputs under `dir`, resolved through
-    * the Hadoop FileSystem for the path's own scheme — a remote URI
-    * (hdfs://, s3a://) sizes correctly instead of silently reading 0
-    * through a java.io walk (ADVICE r15). Returns 0 when the path is
-    * missing or unreadable; the caller treats that loudly. */
+    * the Hadoop FileSystem for the path's own scheme, configured with
+    * the `spark.hadoop.*` entries of the Spark conf as a session's own
+    * Hadoop conf would be. Returns 0 when the path is missing; an
+    * unreadable path also returns 0 and prints its cause. */
   def inputBytes(dir: String): Long =
     try {
+      val conf = new org.apache.hadoop.conf.Configuration()
+      new SparkConf().getAllWithPrefix("spark.hadoop.")
+        .foreach { case (k, v) => conf.set(k, v) }
       val path = new org.apache.hadoop.fs.Path(dir)
-      val fs = path.getFileSystem(new org.apache.hadoop.conf.Configuration())
+      val fs = path.getFileSystem(conf)
       if (fs.exists(path)) fs.getContentSummary(path).getLength else 0L
-    } catch { case _: Throwable => 0L }
+    } catch { case NonFatal(e) =>
+      System.err.println(s"[graft] SessionTuning: cannot size $dir: $e")
+      0L
+    }
 
   /** Input-derived initial shuffle partition count (rule above). A
     * dir that resolves to zero bytes (missing, empty, unreadable)
     * falls back to the CORE COUNT with a warning — never to 1, which
-    * would serialize every shuffle of a misconfigured runner
-    * (ADVICE r15 medium). */
+    * would serialize every shuffle of a misconfigured runner. */
   def shufflePartitions(dir: String, cpus: Int): Int = {
     val bytes = inputBytes(dir)
     if (bytes <= 0L) {

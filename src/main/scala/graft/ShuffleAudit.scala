@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.AtomicLong
+import scala.util.control.NonFatal
 
 /** Shuffle-payload audit: runs each query and reports the MEASURED
   * shuffle write/read bytes and spill — the resources that actually
@@ -45,7 +46,7 @@ object ShuffleAudit {
     val rows = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val before = snap()
       try Measure.force(fn(spark, sfDir))
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"shuffle-audit: $name FAILED: $e")
       }
       finally CacheScope.releaseAll(blocking = true)
