@@ -25,7 +25,7 @@ object BpeTrainDemo {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = graft.Tables(spark, sfDir).documents
     val merges = Bpe.trainOnCorpus(docs, "text", numMerges)
     val body = "# BPE merges (Sennrich) — trained by graft.examples.BpeTrainDemo\n" +
       merges.map { case (a, b) => s"$a $b" }.mkString("\n") + "\n"

@@ -38,7 +38,7 @@ object CurationPipelineDemo {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val raw = spark.read.parquet(s"$dir/documents.parquet")
+    val raw = graft.Tables(spark, dir).documents
     println(s"== corpus: ${raw.count()} docs")
 
     // 0a. PII scrub: typed placeholders, document text rewritten once

@@ -73,8 +73,9 @@ object GenScale {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
+    val tables = graft.Tables(spark, src)
     def replicated(name: String): DataFrame =
-      spark.read.parquet(s"$src/$name.parquet")
+      tables.table(name)
         .crossJoin(spark.range(reps).select(col("id").cast("int").as("rep")))
 
     // Block offsets are only bijective if every source key fits UNDER
@@ -83,7 +84,7 @@ object GenScale {
     // blocks and corrupt the linear-workload construction the SCALE.md
     // curves rest on. Fail loudly instead (review r9).
     def requireKeyRange(name: String, keyCol: String, offset: Long): Unit = {
-      val mx = spark.read.parquet(s"$src/$name.parquet")
+      val mx = tables.table(name)
         .agg(max(col(keyCol))).collect()(0).getLong(0)
       require(mx >= 0 && mx < offset,
         s"$name.$keyCol max $mx must fit in [0, $offset): block " +
@@ -111,7 +112,7 @@ object GenScale {
     // hex, array_sort on struct(h, i) is (h, i) lexicographic, and
     // Scala's String ordering agrees on ASCII hex; sign(rep, j) =
     // parity of the first md5 byte of "s<rep>:<j>".
-    val dim = spark.read.parquet(s"$src/embeddings.parquet")
+    val dim = tables.embeddings
       .select(size(col("embedding"))).limit(1).collect()(0).getInt(0)
     def md5Hex(s: String): String =
       java.security.MessageDigest.getInstance("MD5")

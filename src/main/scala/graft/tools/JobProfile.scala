@@ -16,7 +16,8 @@ import java.util.concurrent.ConcurrentHashMap
   * Run: sbt "runMain graft.tools.JobProfile <query> [sfDir] [reps]"
   * Prints one line per job (start-offset, duration, gap since the
   * previous job's end, #tasks, callsite) and a summary: total wall,
-  * Σjob, Σgap.
+  * Σjob, Σgap, and Σoverlap (the time a job started before the previous
+  * one ended, which the gap clamps to 0).
   */
 object JobProfile {
   def main(args: Array[String]): Unit = {
@@ -48,8 +49,9 @@ object JobProfile {
     @volatile var order = Vector.empty[Int]
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val site = Option(e.properties)
-          .map(_.getProperty("callSite.short", "?")).getOrElse("?")
+        // the result stage (highest id) is named after the job's short
+        // call site; nothing sets the `callSite.short` local property
+        val site = if (e.stageInfos.isEmpty) "?" else e.stageInfos.maxBy(_.stageId).name
         jobs.put(e.jobId, J(e.jobId, e.time, -1L,
           e.stageInfos.map(_.numTasks).sum, site))
         order = order :+ e.jobId
@@ -68,27 +70,28 @@ object JobProfile {
       graft.CacheScope.releaseAll(blocking = true)
       org.apache.spark.sql.graft.ListenerDrain.drain(spark.sparkContext)
       // a job whose onJobEnd never arrived (end = -1) would turn into a
-      // large negative duration silently corrupting Σjob/Σgap (ADVICE
-      // r15) — drop it loudly; likewise clamp gaps at 0 so overlapping
-      // (concurrent) jobs don't drive Σgap negative
+      // large negative duration silently corrupting Σjob/Σgap — drop it
+      // loudly. A job that starts before the previous one ended adds
+      // its negative gap to Σoverlap, not to Σgap.
       val (js, unfinished) = order.flatMap(id => Option(jobs.get(id)))
         .partition(_.end >= 0)
       if (unfinished.nonEmpty)
         println(s"  [jobprofile] WARNING: ${unfinished.size} jobs never " +
           s"reported onJobEnd (ids ${unfinished.map(_.id).mkString(",")}) — excluded")
       var prevEnd = -1L
-      var sumJob = 0.0; var sumGap = 0.0
+      var sumJob = 0.0; var sumGap = 0.0; var sumOverlap = 0.0
       val base = js.headOption.map(_.start).getOrElse(0L)
       println(f"== rep $r: $name $n rows in $wall%.2fs, ${js.size} jobs ==")
       js.foreach { j =>
         val dur = (j.end - j.start) / 1e3
-        val gap = if (prevEnd < 0) 0.0 else math.max(0.0, (j.start - prevEnd) / 1e3)
-        sumJob += dur; sumGap += gap
+        val raw = if (prevEnd < 0) 0.0 else (j.start - prevEnd) / 1e3
+        val gap = math.max(0.0, raw)
+        sumJob += dur; sumGap += gap; sumOverlap -= math.min(0.0, raw)
         if (r == reps)
           println(f"  job ${j.id}%3d +${(j.start - base) / 1e3}%7.2fs dur $dur%6.3fs gap $gap%6.3fs tasks ${j.tasks}%4d  ${j.site}")
         prevEnd = j.end
       }
-      println(f"  [jobprofile] wall $wall%.2fs  sum_job $sumJob%.2fs  sum_gap $sumGap%.2fs  pre_first ${if (js.nonEmpty) (js.head.start - base) / 1e3 else 0.0}%.2fs")
+      println(f"  [jobprofile] wall $wall%.2fs  sum_job $sumJob%.2fs  sum_gap $sumGap%.2fs  sum_overlap $sumOverlap%.2fs  pre_first ${if (js.nonEmpty) (js.head.start - base) / 1e3 else 0.0}%.2fs")
       // cumulative Janino compile time/count (driver-wide): reveals
       // per-iteration codegen cache misses — a plan whose only change
       // is an inlined literal VALUE recompiles every job

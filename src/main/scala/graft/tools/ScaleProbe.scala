@@ -468,7 +468,7 @@ object ScaleProbe {
     if (args(1) == "idxfloor") {
       import graft.operators.{KMeansPortable, SimilaritySearch}
       val floor = if (args.length > 2) args(2).toDoubleOption.getOrElse(0.8) else 0.8
-      val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+      val emb = graft.Tables(spark, dir).embeddings
       val n = emb.count()
       val nlist = KMeansPortable.autoNlist(n)
       println(s"[idxfloor] n=$n nlist=$nlist floor=$floor")

@@ -11,7 +11,10 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
 import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY, DOUBLE, INT64}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ListenerDrain
 import org.apache.spark.sql.types.{LongType, StringType, TimestampNTZType, TimestampType}
 
 /** Guards the `Tables.events` loader against parquet-timestamp
@@ -26,6 +29,10 @@ import org.apache.spark.sql.types.{LongType, StringType, TimestampNTZType, Times
   * Ground truth is read with parquet-mr's example reader (raw int64 +
   * the footer's TimeUnit annotation), fully independent of Spark's
   * timestamp inference path.
+  *
+  * Also pins the loader's schema cache: a repeat read of unchanged
+  * files launches no Spark job, a rewritten table is re-inferred, and a
+  * missing table still fails with Spark's own error.
   */
 class TablesLoaderSpec extends SparkSpec {
 
@@ -125,6 +132,76 @@ class TablesLoaderSpec extends SparkSpec {
     assert(truth.nonEmpty)
 
     assert(loadedMicros(file.getParent) === truth)
+  }
+
+  /** Spark jobs launched by `f` on this thread, counted through a job
+    * group so jobs of other threads cannot leak into the count. */
+  private def jobsDuring[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"tables-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, group)
+    try {
+      val out = f
+      ListenerDrain.drain(sc)
+      (out, jobs.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  private def tempDir(): String = Files.createTempDirectory("graft-tables").toString
+
+  test("a repeat accessor call reuses the inferred schema and launches no Spark job") {
+    val dir = tempDir()
+    spark.range(5).withColumnRenamed("id", "l_orderkey").write.parquet(s"$dir/lineitem.parquet")
+    val (miss, missJobs) = jobsDuring(Tables(spark, dir).lineitem)
+    assert(missJobs > 0, "the first read infers the schema with a Spark job")
+    val (hit, hitJobs) = jobsDuring(Tables(spark, dir).lineitem)
+    assert(hitJobs === 0)
+    assert(hit.schema === miss.schema)
+    // only the schema is shared: each call is its own relation, so a
+    // self-join of two reads resolves
+    assert(hit.queryExecution.analyzed.output.map(_.exprId).toSet
+      .intersect(miss.queryExecution.analyzed.output.map(_.exprId).toSet).isEmpty)
+    assert(miss.join(hit, miss("l_orderkey") === hit("l_orderkey")).count() === 5)
+  }
+
+  test("a table rewritten in place is re-inferred on the next accessor call") {
+    val dir = tempDir()
+    spark.range(3).withColumnRenamed("id", "r_regionkey").write.parquet(s"$dir/region.parquet")
+    assert(Tables(spark, dir).region.columns.toSeq === Seq("r_regionkey"))
+    Tables(spark, dir).region // served from the cache
+    spark.range(4).select(col("id").as("a"), col("id").cast("string").as("b"))
+      .write.mode("overwrite").parquet(s"$dir/region.parquet")
+    val rewritten = Tables(spark, dir).region
+    assert(rewritten.columns.toSeq === Seq("a", "b"))
+    assert(rewritten.count() === 4)
+  }
+
+  test("events on TIMESTAMP(NANOS) read the same on the inferring and the cached call") {
+    val dir = writeEventsParquet(TimeUnit.NANOS, nanosRows)
+    val expect = nanosRows.map { case (id, ns) => id -> Math.floorDiv(ns, 1000L) }.toMap
+    assert(loadedMicros(dir) === expect)
+    val (_, hitJobs) = jobsDuring(Tables(spark, dir).events)
+    assert(hitJobs === 0)
+    assert(loadedMicros(dir) === expect)
+  }
+
+  test("a missing or empty table still fails with Spark's own error") {
+    val dir = tempDir()
+    val missing = intercept[AnalysisException](Tables(spark, dir).lineitem)
+    assert(missing.getCondition === "PATH_NOT_FOUND")
+    Files.createDirectory(java.nio.file.Paths.get(s"$dir/orders.parquet"))
+    val empty = intercept[AnalysisException](Tables(spark, dir).orders)
+    assert(empty.getCondition === "UNABLE_TO_INFER_SCHEMA")
   }
 
   test("eventsNormalizeTs: nanos-Long branch truncates; NTZ branch casts; Timestamp passes through") {
