@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.TextFunctions.tokens
+import graft.queries.Num
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -124,7 +125,7 @@ object DataSelection {
       .join(broadcast(weights), Seq("bucket"), "left")
       .groupBy(col("id"), col("domain"))
       .agg(coalesce(sum(when(col("w").isNotNull,
-          round(col("w") * col("n"), 12).cast(dec12))),
+          Num.round12(col("w") * col("n")))),
         lit(0).cast(dec12)).as("score")))
     Sampling.qualityFilter(scores, "domain", col("score"),
         keepNum, keepDenom, "id")

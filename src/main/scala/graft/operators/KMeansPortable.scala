@@ -1,10 +1,10 @@
 package graft.operators
 
+import graft.queries.Num
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.{RhpExpressions, RhpKernels}
-import org.apache.spark.sql.types.DecimalType
 
 /** ENGINE-PORTABLE Lloyd k-means — the oracle twin of the coarse
   * quantizer training that [[Dedup.semanticDedup]] (q54) and the IVF
@@ -232,7 +232,7 @@ object KMeansPortable {
       val means = assigned
         .select(col("cell"), posexplode(col("vec")).as(Seq("d", "x")))
         .groupBy(col("cell"), col("d"))
-        .agg((sum(round(col("x"), 12).cast(DecimalType(38, 12)))
+        .agg((sum(Num.round12(col("x")))
             .cast("double") / count(lit(1))).as("c"),
           count(lit(1)).as("n"))
         .collect()
@@ -479,7 +479,7 @@ object KMeansPortable {
       val means = assigned
         .select(col("cell"), posexplode(col("vec")).as(Seq("d", "x")))
         .groupBy(col("cell"), col("d"))
-        .agg((sum(round(col("x"), 12).cast(DecimalType(38, 12)))
+        .agg((sum(Num.round12(col("x")))
             .cast("double") / count(lit(1))).as("c"))
         .collect()
       val next = cents.map(_.clone())

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.TextFunctions.tokens
+import graft.queries.Num
 import org.apache.spark.ml.classification.{LogisticRegression, LogisticRegressionModel}
 import org.apache.spark.ml.feature.HashingTF
 import org.apache.spark.sql.DataFrame
@@ -95,8 +96,7 @@ object QualityClassifier {
     val margins = portableFeatureCounts(docs, idCol, textCol, weights.length)
       .join(wDf, Seq("bucket"))
       .groupBy(col("id"))
-      .agg((sum(round(col("w") * col("n"), 12)
-          .cast(org.apache.spark.sql.types.DecimalType(38, 12)))
+      .agg((sum(Num.round12(col("w") * col("n")))
         .cast("double") + lit(intercept)).as("__margin"))
     docs.select(col(idCol).as("id")).distinct()
       .join(margins, Seq("id"), "left")

@@ -1,8 +1,8 @@
 package graft.operators
 
+import graft.queries.Num
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Scalar (int8) embedding quantization — the dimension-level
   * compression every vector store ships (FAISS `SQ8`, pgvector
@@ -71,7 +71,7 @@ object Quantization {
     errRows.groupBy(col("id"))
       .agg(count(lit(1)).as("n_dims"),
         max(round(col("err"), 9)).as("max_abs_err"),
-        (sum(round(col("err") * col("err"), 12).cast(DecimalType(38, 12)))
+        (sum(Num.round12(col("err") * col("err")))
           .cast("double") / count(lit(1))).as("mse"))
   }
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.RhpKernels
 
 /** Vector aggregation + chamfer similarity (SURVEY A10/A11, P6/E7).
   *
@@ -84,20 +85,16 @@ object VectorAgg {
     * (measured split in SCALE.md round 15).
     *
     * Parity construction, element by element:
-    *   1. `round(x, 12)` — Spark's Round: the canonical-string
-    *      BigDecimal of the double, setScale(12, HALF_UP), back to
-    *      double (`BigDecimal.valueOf` IS the canonical-string
-    *      constructor);
-    *   2. the decimal(38,12) cast of that double — canonical-string
-    *      BigDecimal again, setScale(12, HALF_UP) — whose unscaled
-    *      value is an exact integer in 10⁻¹² units (longValueExact:
-    *      elements past ~9.2×10⁶ in magnitude would overflow the
+    *   1. `round(x, 12)` then its decimal(38,12) cast —
+    *      [[RhpKernels.round12]], Spark's Round then Cast, as an
+    *      exact integer in 10⁻¹² units
+    *      (elements past ~9.2×10⁶ in magnitude would overflow the
     *      scaled long and throw loudly — far outside any embedding
     *      domain);
-    *   3. exact 128-bit integer accumulation of those units (decimal
+    *   2. exact 128-bit integer accumulation of those units (decimal
     *      sums are exact integer arithmetic — partitioning-proof by
     *      construction, like the decimal aggregate it replaces);
-    *   4. finish: reconstruct the exact BigDecimal (scale 12), take
+    *   3. finish: reconstruct the exact BigDecimal (scale 12), take
     *      `.doubleValue` (what decimal→double casting does), divide
     *      by the count (one shared IEEE division).
     * Parity with the posexplode aggregation is spec-pinned
@@ -105,13 +102,6 @@ object VectorAgg {
     * trainThreeLevel twin-parity induction. */
   class DecimalVecMeanAggregator
       extends Aggregator[(Int, Array[Double]), DecBuf, Array[Double]] {
-    private def scaled(x: Double): Long = {
-      val r = java.math.BigDecimal.valueOf(x)
-        .setScale(12, java.math.RoundingMode.HALF_UP).doubleValue()
-      java.math.BigDecimal.valueOf(r)
-        .setScale(12, java.math.RoundingMode.HALF_UP)
-        .unscaledValue().longValueExact()
-    }
     private def add128(b: DecBuf, d: Int, s: Long): Unit = {
       val sum = b.lo(d) + s
       val carry = ((b.lo(d) & s) | ((b.lo(d) | s) & ~sum)) >>> 63
@@ -137,7 +127,7 @@ object VectorAgg {
         s"decimalVecMeans: ragged vector set in cell ${row._1} — " +
           s"${v.length} vs ${buf.lo.length}")
       var d = 0
-      while (d < v.length) { add128(buf, d, scaled(v(d))); d += 1 }
+      while (d < v.length) { add128(buf, d, RhpKernels.round12(v(d))); d += 1 }
       buf.n += 1
       buf
     }

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.RhpExpressions.exactDecimalCast
 import org.apache.spark.sql.types.DecimalType
 
 /** A named query: Spark implementation + (optionally) an equivalent
@@ -25,12 +26,19 @@ final case class Q(
   * then cast the exact result to DOUBLE — identical input decimal →
   * identical nearest double → identical bits. Source columns hold
   * money-like 2-decimal values, so DECIMAL(18,2) casts are lossless.
+  * A double's casts go through `exactDecimalCast`, which rounds
+  * without building `Double.toString` per row, to the same value.
   */
 object Num {
   /** Money-ish column → exact decimal. */
-  def dec2(c: Column): Column = c.cast(DecimalType(18, 2))
+  def dec2(c: Column): Column = exactDecimalCast(c.cast(DecimalType(18, 2)))
   /** Higher-scale exact decimal (e.g. event values, embedding floats). */
-  def dec9(c: Column): Column = c.cast("double").cast(DecimalType(28, 9))
+  def dec9(c: Column): Column =
+    exactDecimalCast(c.cast("double").cast(DecimalType(28, 9)))
+  /** `round(c, 12)` as exact DECIMAL(38,12): the decimal-parity term
+    * of the Lloyd mean and of the weighted scores. */
+  def round12(c: Column): Column =
+    exactDecimalCast(round(c, 12).cast(DecimalType(38, 12)))
   /** Exact decimal sum rendered as a bit-stable double. */
   def dsum(c: Column): Column = sum(c).cast("double")
 }

@@ -1,8 +1,9 @@
 package graft.tools
 
+import graft.queries.Num
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{array_sort, col, collect_list,
-  count, expr, lit, posexplode, round, struct, sum, transform}
+  count, expr, lit, posexplode, struct, sum, transform}
 
 /** Parameterized scaling probe for the SemDeDup pipeline — the
   * SCALE.md evidence runner for the one knob the fixed-parameter q80
@@ -295,7 +296,6 @@ object ScaleProbe {
     //         args(3) rows (default 1M), args(4) log2(nlist)
     //         (default 19). The winner is what trainThreeLevel runs.
     if (args(1) == "relmeans") {
-      import org.apache.spark.sql.types.DecimalType
       val dim = if (args.length > 2) args(2).toIntOption.getOrElse(1024) else 1024
       val rows = if (args.length > 3) args(3).toLong else 1000000L
       val nlist = 1 << (if (args.length > 4)
@@ -310,7 +310,7 @@ object ScaleProbe {
       val slow = assigned
         .select(col("cell"), posexplode(col("vec")).as(Seq("d", "x")))
         .groupBy(col("cell"), col("d"))
-        .agg((sum(round(col("x"), 12).cast(DecimalType(38, 12)))
+        .agg((sum(Num.round12(col("x")))
             .cast("double") / count(lit(1))).as("c"))
         .groupBy(col("cell"))
         .agg(array_sort(collect_list(struct(col("d"), col("c"))))

@@ -5,58 +5,103 @@ package org.apache.spark.sql.graft
 import java.math.{BigDecimal => JBigDecimal, BigInteger, RoundingMode}
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, EmptyBlock, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
 /** Fused kernels for the PORTABLE random-hyperplane LSH path
-  * (q71's `cosineNearDupPairsPortable`).
+  * (q71's `cosineNearDupPairsPortable`), the decimal-cosine gates and
+  * the Lloyd means, plus the exact double→DECIMAL rounding they share.
   *
-  * The round-5 relational formulation derived its determinism from
-  * DECIMAL aggregation: per-dimension products rounded to 12 dp, cast
-  * to DECIMAL(18,12) and summed — integer arithmetic whose value no
+  * The relational formulation derives its determinism from DECIMAL
+  * aggregation: per-dimension products rounded to 12 dp, cast to
+  * DECIMAL(18,12) and summed — integer arithmetic whose value no
   * partitioning can perturb, so a SQL oracle re-derives every sign
   * bit and score. That guarantee lives in the VALUES, not in the
   * relational plan shape: these kernels compute the identical scaled
-  * integers with the identical roundings (`BigDecimal.valueOf(x*c)
-  * .setScale(12, HALF_UP)` is Spark's own `round(double, 12)`;
-  * shortest-repr double→decimal is Spark's own double→DECIMAL cast;
-  * `Math.addExact` over unscaled longs is the decimal sum, loud on
-  * overflow) inside ONE whole-stage-codegen projection per row —
-  * replacing the 64×-row `posexplode` product stream, its broadcast
-  * plane join, the (id, table) aggregation, and the two (id, dim)
-  * sort-merge verify joins with zero-shuffle per-row folds. Measured
-  * at sf0.1: q71 9.5 s → see SCALE.md round-7 entry. At 100 TB the
-  * win compounds: the corpus never inflates 64× and never shuffles
-  * by (id, dim); candidate verification touches two array columns.
+  * integers with the identical roundings (`Math.addExact` over
+  * unscaled longs is the decimal sum, loud on overflow) inside ONE
+  * whole-stage-codegen projection per row. The 64×-row `posexplode`
+  * product stream, its plane join and the (id, dim) verify joins they
+  * replace are gone: the corpus never inflates and never shuffles by
+  * (id, dim).
+  *
+  * Rounding invariant. Spark's double→DECIMAL(p, s) cast and its
+  * `round(double, s)` both round `Double.toString(v)` half-up at
+  * scale s. [[halfUpUnscaled]] returns that rounding's unscaled value
+  * without building the string: for |v| < 10^(15−s) it forms
+  * t = |v|·10^s, whose fractional part `t − floor(t)` is exact.
+  * `Double.toString(v)` lies within ulp(v) of v, so its exact scaled
+  * value lies within ulp(|v|)·10^s + ulp(t) of t. When t's fractional
+  * part is farther than four times that from ½, no half-way point lies
+  * between the two, and both round to the integer nearest t. Otherwise
+  * — and for NaN, ±∞ and |v| past the bound — it answers
+  * [[Undecided]], and the caller runs the `BigDecimal` chain.
   */
 object RhpKernels {
 
+  /** [[halfUpUnscaled]]'s answer when only the exact chain can decide. */
+  final val Undecided = Long.MinValue
+
+  /** Largest scale [[halfUpUnscaled]] serves; the bound at scale s is
+    * 10^(MaxFastScale − s), so t < 10^15 and every rounded decimal it
+    * returns has at most 15 significant digits. */
+  final val MaxFastScale = 15
+
+  private val Pow10: Array[Double] = Array.iterate(1.0, MaxFastScale + 1)(_ * 10)
+
+  /** Half-up rounding of `Double.toString(v)` at `scale` (0 ≤ scale ≤
+    * [[MaxFastScale]]) as an unscaled long, or [[Undecided]] (see the
+    * rounding invariant above). */
+  def halfUpUnscaled(v: Double, scale: Int): Long = {
+    val a = Math.abs(v)
+    if (!(a < Pow10(MaxFastScale - scale))) Undecided
+    else {
+      val p = Pow10(scale)
+      val t = a * p
+      val whole = Math.floor(t)
+      val frac = t - whole
+      if (Math.abs(frac - 0.5) <= 4 * (Math.ulp(a) * p + Math.ulp(t))) Undecided
+      else {
+        val n = whole.toLong + (if (frac > 0.5) 1L else 0L)
+        if (v < 0) -n else n
+      }
+    }
+  }
+
+  /** Spark's `round(v, 12)` (a double) cast to DECIMAL(_, 12), done
+    * literally: the rounded value round-trips through a double. Below
+    * |v| < 1000 the trip is the identity (≤ 15 significant digits). */
+  private def round12Exact(v: Double): JBigDecimal = {
+    val rounded = JBigDecimal.valueOf(v).setScale(12, RoundingMode.HALF_UP).doubleValue()
+    JBigDecimal.valueOf(rounded).setScale(12, RoundingMode.HALF_UP)
+  }
+
+  /** `round(v, 12)::DECIMAL(38,12)` as the unscaled long; throws past
+    * the long range (|v| ≳ 9.2×10⁶). */
+  def round12(v: Double): Long = {
+    val u = halfUpUnscaled(v, 12)
+    if (u != Undecided) u else round12Exact(v).unscaledValue().longValueExact()
+  }
+
+  private val Decimal18Limit = BigInteger.TEN.pow(18)
+
   /** round(x*c, 12) then double→DECIMAL(18,12), as the unscaled long
     * — exactly Spark's `round(col, 12).cast(DecimalType(18, 12))`.
-    *
-    * The relational path round-trips the rounded value through a
-    * DOUBLE (`round` returns double, the cast re-parses its shortest
-    * repr). For |x·c| < 1000 the rounded decimal has ≤ 15 significant
-    * digits, which round-trip binary64 exactly (the classic 15-digit
-    * guarantee), so the trip is the identity and ONE BigDecimal chain
-    * suffices — measured 2× on this operator's hot fold, and the
-    * overwhelmingly common case for embedding components. Larger
-    * magnitudes (legal in DECIMAL(18,12) up to 10⁶) take the slow
-    * path that replays the relational double round-trip literally;
-    * longValueExact throws loudly at genuine DECIMAL(18) overflow
-    * instead of silently diverging. */
+    * Throws an ArithmeticException where that cast overflows
+    * (|round(x·c, 12)| ≥ 10⁶). */
   def scaledTerm(x: Double, c: Double): Long = {
     val v = x * c
-    if (Math.abs(v) < 999.0)
-      JBigDecimal.valueOf(v)
-        .setScale(12, RoundingMode.HALF_UP).unscaledValue().longValueExact()
+    val u = halfUpUnscaled(v, 12)
+    if (u != Undecided) u
     else {
-      val rounded = JBigDecimal.valueOf(v)
-        .setScale(12, RoundingMode.HALF_UP).doubleValue()
-      JBigDecimal.valueOf(rounded)
-        .setScale(12, RoundingMode.HALF_UP).unscaledValue().longValueExact()
+      val unscaled = round12Exact(v).unscaledValue()
+      if (unscaled.abs().compareTo(Decimal18Limit) >= 0)
+        throw new ArithmeticException(s"round($v, 12) overflows DECIMAL(18,12)")
+      unscaled.longValue()
     }
   }
 
@@ -205,6 +250,91 @@ case class DecimalScaledDot(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** A double→DECIMAL(p, s) cast — `child` is a [[Cast]] — that skips
+  * `Double.toString`/`BigDecimal` where [[RhpKernels.halfUpUnscaled]]
+  * decides, and otherwise runs the wrapped cast unchanged, so null,
+  * NaN, ±∞, overflow and ANSI errors are the cast's own. A cast of
+  * `round(x, s)` at the target scale rounds x directly: below the
+  * kernel's bound the rounded decimal has ≤ 15 significant digits, so
+  * its trip through a double is the identity. Any other input type,
+  * and p < 15 or s > 15, is the plain cast. */
+case class ExactDecimalCast(child: Expression) extends UnaryExpression {
+
+  override def dataType: DataType = child.dataType
+  override def nullable: Boolean = child.nullable
+
+  /** The double the fast path rounds, when the wrapped expression is
+    * one it serves (resolved only after analysis). */
+  @transient lazy val fastInput: Option[Expression] = child match {
+    case c: Cast => c.dataType match {
+      // fast results are < 10¹⁵ in magnitude: any precision ≥ 15 holds them
+      case dt: DecimalType if dt.precision >= RhpKernels.MaxFastScale &&
+          dt.scale >= 0 && dt.scale <= RhpKernels.MaxFastScale =>
+        c.child match {
+          case r: Round if r.child.dataType == DoubleType && r.scale.foldable &&
+              r.scale.eval() == dt.scale => Some(r.child)
+          case x if x.dataType == DoubleType => Some(x)
+          case _ => None
+        }
+      case _ => None
+    }
+    case _ => None
+  }
+
+  private def decimalType = dataType.asInstanceOf[DecimalType]
+
+  override def eval(input: InternalRow): Any = {
+    val u = fastInput.fold(RhpKernels.Undecided) { x =>
+      val v = x.eval(input)
+      if (v == null) RhpKernels.Undecided
+      else RhpKernels.halfUpUnscaled(v.asInstanceOf[Double], decimalType.scale)
+    }
+    if (u == RhpKernels.Undecided) child.eval(input)
+    else Decimal.createUnsafe(u, decimalType.precision, decimalType.scale)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    fastInput match {
+      case None => child.genCode(ctx)
+      case Some(x) =>
+        val in = x.genCode(ctx)
+        // the fallback reuses the evaluated input: emitting its code a
+        // second time redefines whole-stage input variables
+        val cast = child.transformDown {
+          case e if e eq x => EvaluatedInput(in, x.dataType, x.nullable)
+        }.genCode(ctx)
+        val u = ctx.freshName("unscaled")
+        val dt = decimalType
+        val decimal = classOf[Decimal].getName
+        ev.copy(code = code"""
+          ${in.code}
+          long $u = ${in.isNull} ? ${RhpKernels.Undecided}L
+            : org.apache.spark.sql.graft.RhpKernels.halfUpUnscaled(${in.value}, ${dt.scale});
+          boolean ${ev.isNull} = false;
+          $decimal ${ev.value} = null;
+          if ($u != ${RhpKernels.Undecided}L) {
+            ${ev.value} = $decimal.createUnsafe($u, ${dt.precision}, ${dt.scale});
+          } else {
+            ${cast.code}
+            ${ev.isNull} = ${cast.isNull};
+            ${ev.value} = ${cast.value};
+          }
+          """)
+    }
+
+  override protected def withNewChildInternal(newChild: Expression): ExactDecimalCast =
+    copy(child = newChild)
+}
+
+/** An input whose code [[ExactDecimalCast]] has already emitted. */
+private case class EvaluatedInput(evaluated: ExprCode, dataType: DataType,
+    nullable: Boolean) extends LeafExpression {
+  override def eval(input: InternalRow): Any =
+    throw new UnsupportedOperationException("EvaluatedInput is codegen-only")
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    evaluated.copy(code = EmptyBlock)
+}
+
 object RhpExpressions {
   import org.apache.spark.sql.classic.ExpressionUtils
 
@@ -216,4 +346,9 @@ object RhpExpressions {
   def decimalScaledDot(a: Column, b: Column): Column =
     ExpressionUtils.column(DecimalScaledDot(
       ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
+
+  /** `cast`, a `.cast(DecimalType(p, s))` column, through
+    * [[ExactDecimalCast]]. */
+  def exactDecimalCast(cast: Column): Column =
+    ExpressionUtils.column(ExactDecimalCast(ExpressionUtils.expression(cast)))
 }
