@@ -5,8 +5,8 @@ import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 
 /** Session-level tuning shared by the runner entrypoints (Bench,
-  * Verify, RunOne, ShuffleAudit), measured and justified in
-  * OPTIMIZATION_r15.md.
+  * Verify, RunOne, ShuffleAudit, tools.JobProfile), measured and
+  * justified in OPTIMIZATION_r15.md.
   *
   * 1. INITIAL SHUFFLE PARTITIONS DERIVED FROM INPUT SIZE (guide §2:
   *    "make partitioning scale-adaptive ... rather than a constant

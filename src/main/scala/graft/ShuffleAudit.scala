@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.AtomicLong
 import scala.util.control.NonFatal
 
@@ -18,16 +17,8 @@ object ShuffleAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        SessionTuning.shufflePartitionsConf(sfDir, cpus.toInt))
-      .config("spark.sql.codegen.cache.maxEntries",
-        SessionTuning.codegenCacheConf)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      Runtime.getRuntime.availableProcessors().toString).toInt
+    val spark = SessionTuning.session(cpus, sfDir)
     val write = new AtomicLong; val read = new AtomicLong
     val spill = new AtomicLong; val records = new AtomicLong
     spark.sparkContext.addSparkListener(new SparkListener {

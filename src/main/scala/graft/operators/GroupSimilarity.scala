@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.queries.Num
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -94,7 +95,7 @@ object GroupSimilarity {
     x.join(y, "gid")
       .withColumn("c", round(fastCosine(col("x_vec"), col("y_vec")), 4))
       .withColumn("kern",
-        round(exp(lit(gamma) * (col("c") - 1.0)), 6).cast("decimal(38,12)"))
+        Num.dec(round(exp(lit(gamma) * (col("c") - 1.0)), 6), 38, 12))
       .groupBy(col("gid"))
       .agg(sum(col("kern")).cast("double").as("ksum"), count(lit(1)).as("nn"))
       .select(col("gid"), (col("ksum") / col("nn")).as("kmass"))
@@ -116,7 +117,7 @@ object GroupSimilarity {
         round(fastCosine(col("a_vec"), col("b_vec")), 4).as("c"))
     val kernSums = cross
       .withColumn("kern",
-        round(exp(lit(gamma) * (col("c") - 1.0)), 6).cast("decimal(38,12)"))
+        Num.dec(round(exp(lit(gamma) * (col("c") - 1.0)), 6), 38, 12))
       .groupBy(col("a_gid"), col("b_gid"))
       .agg(sum(col("kern")).cast("double").as("ksum"), count(lit(1)).as("nm"))
     // chamfer sides: per-member best (raw) and best-non-duplicate
@@ -127,8 +128,8 @@ object GroupSimilarity {
           coalesce(max(when(col("c") < dupThresh, col("c"))), lit(0.0))
             .as("best_style"))
         .groupBy(col("a_gid"), col("b_gid"))
-        .agg(sum(col("best").cast("decimal(28,10)")).cast("double").as(aName),
-          sum(col("best_style").cast("decimal(28,10)")).cast("double").as(sName),
+        .agg(sum(Num.dec(col("best"), 28, 10)).cast("double").as(aName),
+          sum(Num.dec(col("best_style"), 28, 10)).cast("double").as(sName),
           count(lit(1)).as(nName))
     val aSide = side("ai", "sum_a", "sum_a_style", "na")
     val bSide = side("bi", "sum_b", "sum_b_style", "nb")

@@ -465,27 +465,18 @@ object IvfPqPortable {
        |ORDER BY anchor_id, rank""".stripMargin
   }
 
-  /** RECALL-WALK over the portable two-level tier (round 13 — VERDICT
-    * r12 item 1 under a FULL oracle): train + encode ONCE ([[
-    * topKTwoLevel]]'s exact chain), then climb `ladder` — the
-    * deterministic (probeSupers, nprobe) rungs of
-    * [[SimilaritySearch.recallLadder]] — measuring each rung's mean
-    * recall@k against the exact decimal-cosine ground truth over the
-    * SAME anchors, stopping at the first rung ≥ `floor`. Output: one
-    * row per EVALUATED rung (rung, probe_supers, nprobe, recall,
-    * chosen) — `chosen` marks the stopping rung (the first floor hit,
-    * or the last rung when even it missed — both sides of the oracle
-    * replay the same rule, so the early stop is value-derivable from
-    * the parquet bytes). This is the sizing walk AS a relation: the
-    * reference sizes its recall stage by measured overlap
-    * (Docs/SIMILARITY-PLAN.md:55-75), and this operator emits the
-    * measurement trail a deployment prices its floor against.
-    *
-    * Driver state: one bounded scalar collect per rung (the walk is
-    * inherently sequential — rung i+1 runs only if rung i missed);
-    * everything distributed is the q93-gated machinery. The per-rung
-    * probe fans out over the ANCHOR set only; training, corpus
-    * assignment and PQ encode are shared across rungs.
+  /** Recall walk over the portable two-level tier: train and encode
+    * once ([[topKTwoLevel]]'s exact chain), then climb `ladder` — the
+    * (probeSupers, nprobe) rungs of [[SimilaritySearch.recallLadder]] —
+    * under the [[RecallWalk]] rule. Each rung's recall@k is measured
+    * against the exact decimal-cosine ground truth of ALL `anchorPred`
+    * anchors ([[exactTopKDecimal]]: `round(decimal cosine, 6)`, ties by
+    * `neighbor_id`), the oracle's `extop` relation. Output: one row per
+    * evaluated rung (rung, probe_supers, nprobe, recall, chosen);
+    * `chosen` marks the last rung. The oracle replays the same stop
+    * rule, so the early stop is value-derivable from the parquet
+    * bytes: this is the sizing walk as a relation, the trail a
+    * deployment prices its floor against.
     */
   def topKTwoLevelWalk(vectors: DataFrame, anchorPred: Column, k: Int,
       nlist: Int, coarseIters: Int, m: Int, ksub: Int, subIters: Int,
@@ -496,18 +487,14 @@ object IvfPqPortable {
       subIters, ladder.map { case (p, np) => (p, np, rerank) }, floor,
       idCol, vecCol, supers, emitRerank = false)
 
-  /** [[topKTwoLevelWalk]] over the FULL-CHAIN (probeSupers, nprobe,
-    * rerank) ladder (round 15 — VERDICT r14 item 1b: the round-14
-    * end-to-end floor machinery's hard-gate row). The walk climbs
-    * [[SimilaritySearch.pqRecallLadder]]'s three phases — super pool,
-    * then nprobe AND rerank in lockstep, then the rerank-only tail —
-    * so the rung recalls measure the chain a PQ deployment actually
-    * serves (coarse probe + ADC + rerank; holding rerank fixed while
-    * the sweep doubles is the measured 0.80 → 0.28 ceiling decay of
-    * ADVICE r13). Output adds the `rerank` knob column; the early
-    * stop and everything else is [[topKTwoLevelWalk]]'s, and
-    * [[oracleSqlTwoLevelWalkPq]] re-derives the whole walk — per-rung
-    * rerank included — from the parquet bytes (the q105 gate). */
+  /** [[topKTwoLevelWalk]] over the full-chain (probeSupers, nprobe,
+    * rerank) ladder of [[SimilaritySearch.pqRecallLadder]] — super
+    * pool, then nprobe and rerank in lockstep, then the rerank-only
+    * tail — so the rung recalls measure the chain a PQ deployment
+    * serves (coarse probe + ADC + rerank). Output adds the `rerank`
+    * column; [[oracleSqlTwoLevelWalkPq]] re-derives the whole walk,
+    * per-rung rerank included, from the parquet bytes (the q105
+    * gate). */
   def topKTwoLevelWalkPq(vectors: DataFrame, anchorPred: Column,
       k: Int, nlist: Int, coarseIters: Int, m: Int, ksub: Int,
       subIters: Int, ladder: Seq[(Int, Int, Int)], floor: Double,
@@ -522,9 +509,7 @@ object IvfPqPortable {
       ladder: Seq[(Int, Int, Int)], floor: Double,
       idCol: String, vecCol: String,
       supers: Int, emitRerank: Boolean): DataFrame = {
-    require(ladder.nonEmpty, "walk ladder must be non-empty")
-    require(floor > 0.0 && floor <= 1.0,
-      s"recall floor must be in (0, 1]; got $floor")
+    RecallWalk.checkWalk(ladder, floor)
     val (base, dim) = checkedBase(vectors, idCol, vecCol)
     require(dim % m == 0, s"m=$m must divide dim=$dim")
     val dsub = dim / m
@@ -544,11 +529,7 @@ object IvfPqPortable {
     // structurally (anchors broadcast, the cosineTopK shape)
     val exact = graft.CacheScope.track(
       exactTopKDecimalFromBase(base, anchorPred, k))
-    var walk = Vector.empty[(Int, Int, Int, Double)]
-    var hit = false
-    val it = ladder.iterator
-    while (!hit && it.hasNext) {
-      val (p, np, rr) = it.next()
+    val c = RecallWalk.climb(ladder, floor) { case (p, np, rr) =>
       val probeCells = (if (p == 1)
           KMeansPortable.probeChildren(routed.filter(anchorPred),
             tl.children, tl.groups, np)
@@ -557,30 +538,16 @@ object IvfPqPortable {
             tl.supers, tl.children, tl.groups, np, p))
         .select(col("id").as("anchor_id"), col("vec").as("a_vec"),
           col("cell"))
-      val approxTop = probeScore(base, encoded, probeCells, k, rr)
-      // one bounded scalar per rung — the sequential walk's driver
-      // state is the rung table itself
-      val r = SimilaritySearch.meanRecall(approxTop, exact)
-      walk = walk :+ ((p, np, rr, r))
-      if (r >= floor) hit = true
+      SimilaritySearch.meanRecall(
+        probeScore(base, encoded, probeCells, k, rr), exact)
     }
-    val spark = vectors.sparkSession
-    if (emitRerank) {
-      val rows = walk.zipWithIndex.map { case ((p, np, rr, r), i) =>
-        (i, p, np, rr, r, i == walk.length - 1) }
-      spark.createDataFrame(rows)
-        .toDF("rung", "probe_supers", "nprobe", "rerank", "recall",
-          "chosen")
-        .withColumn("recall", round(col("recall"), 4))
-        .orderBy(col("rung"))
-    } else {
-      val rows = walk.zipWithIndex.map { case ((p, np, _, r), i) =>
-        (i, p, np, r, i == walk.length - 1) }
-      spark.createDataFrame(rows)
-        .toDF("rung", "probe_supers", "nprobe", "recall", "chosen")
-        .withColumn("recall", round(col("recall"), 4))
-        .orderBy(col("rung"))
-    }
+    val rows = c.trail.zipWithIndex.map { case (((p, np, rr), r), i) =>
+      (i, p, np, rr, r, i == c.trail.length - 1) }
+    val walk = vectors.sparkSession.createDataFrame(rows)
+      .toDF("rung", "probe_supers", "nprobe", "rerank", "recall", "chosen")
+      .withColumn("recall", round(col("recall"), 4))
+      .orderBy(col("rung"))
+    if (emitRerank) walk else walk.drop("rerank")
   }
 
   /** EXACT top-k under the portable family's own decimal-cosine

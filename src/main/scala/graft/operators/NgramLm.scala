@@ -1,9 +1,9 @@
 package graft.operators
 
 import graft.functions.TextFunctions.{bindArray, tokens}
+import graft.queries.Num
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** N-gram language-model fluency scoring — the CCNet quality signal
   * (Wenzek et al., "CCNet: Extracting High Quality Monolingual
@@ -93,7 +93,7 @@ object NgramLm {
     val agg = terms.groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_bigrams"),
         sum(col("oov").cast("long")).as("n_oov"),
-        sum(col("bits").cast(DecimalType(28, 6))).cast("double").as("sum_bits"))
+        sum(Num.dec(col("bits"), 28, 6)).cast("double").as("sum_bits"))
     docs.select(col(idCol).cast("long").as("doc_id"))
       .join(agg, Seq("doc_id"), "left")
       .select(col("doc_id"),

@@ -121,13 +121,9 @@ object SimilaritySearch {
   final case class RecallRung(probeSupers: Int, nprobe: Int,
       recall: Double)
 
-  /** The operating point a recall-targeted walk chose (round 13 —
-    * VERDICT r12 item 1: the measured two-level recall frontier gets
-    * a SIZER, not just a detector). `floorMet = false` means even the
-    * terminal exact-sweep rung missed — impossible when exact ground
-    * truth and the tier share the corpus, so in practice it flags a
-    * caller bug (e.g. an anchor set the tier drops). `walk` is every
-    * rung evaluated, in order, for the caller's cost report:
+  /** The operating point a recall-targeted walk chose ([[RecallWalk]]
+    * states the stop rule and what `floorMet = false` means). `walk`
+    * is every rung evaluated, in order, for the caller's cost report:
     * candidate-ranking cost scales with probeSupers/S and swept
     * corpus fraction with nprobe/nlist. */
   final case class AnnOperatingPoint(probeSupers: Int, nprobe: Int,
@@ -148,11 +144,11 @@ object SimilaritySearch {
   final case class PqRecallRung(probeSupers: Int, nprobe: Int,
       rerank: Int, recall: Double)
 
-  /** The operating point a full-chain PQ recall walk chose (round 14
-    * — ADVICE r13: the coarse-only sizer's floor was the PQ tier's
-    * CEILING, not its recall; this point's `recall` is measured on
-    * the same chain the query runs, ADC shortlist and rerank
-    * included, so the floor is END-TO-END). Cost report: sweep scales
+  /** The operating point a full-chain PQ recall walk chose. Its
+    * `recall` is measured on the same chain the query runs, ADC
+    * shortlist and rerank included, so the floor is end-to-end (a
+    * coarse-only walk measures only the PQ tier's ceiling). Cost
+    * report: sweep scales
     * with nprobe/nlist, ranking with probeSupers/S, and the
     * rerank-stage exact re-scores with `rerank` per anchor. */
   final case class PqOperatingPoint(probeSupers: Int, nprobe: Int,
@@ -244,39 +240,17 @@ object SimilaritySearch {
     rungs.toSeq
   }
 
-  /** Recall-TARGETED sizing for the two-level IVF tier (round 13 —
-    * VERDICT r12 item 1; reference anchor: Docs/SIMILARITY-PLAN.md:
-    * 55-75 SIZES the recall stage by measured overlap rather than
-    * only checking it). Trains the coarse structure ONCE, takes exact
-    * ground truth on a bounded deterministic anchor sample (the
-    * `maxAnchors` lowest-id anchors — the reference's sampled-anchor
-    * validation discipline), then walks [[recallLadder]] until the
-    * measured mean recall@k reaches `floor`, re-using the cached
-    * corpus assignment at every rung (each rung re-probes the SAMPLE
-    * anchors only — the corpus-side work is shared).
+  /** Recall-targeted sizing for the two-level IVF tier: trains the
+    * coarse structure once, then climbs [[recallLadder]] under the
+    * [[RecallWalk]] rule, re-using the cached corpus assignment at
+    * every rung. Candidates score by `round(fastCosine, 4)`.
     *
     * `supers = 1` sizes the FLAT tier: the child level then trains
     * exactly like [[ivfCosineTopK]]'s quantizer (same ML fit, same
     * seed — the trainTwoLevelCoarse parity contract), so the chosen
-    * nprobe transfers to the flat door unchanged.
-    *
-    * Driver state: one bounded scalar collect per rung (the measured
-    * mean — the walk is inherently sequential) plus the Lloyd
-    * centroid state every two-level path already holds. The walk
-    * terminates at the exact-sweep rung, so a reachable floor is a
-    * contract, not a hope; the returned point carries the full rung
-    * table so deployments can price the floor (the SCALE.md round-13
-    * frontier rows are this operator's output).
-    *
-    * KNIFE-EDGE NOTE (measured — the flat 100× walk): a rung whose
-    * true mean recall sits a float-epsilon BELOW a floor that is
-    * itself a reachable rational (e.g. measured 0.8000-to-4dp
-    * against floor 0.8) does NOT stop the walk — it overshoots one
-    * rung, the SAFE direction (recall only improves; cost at most
-    * doubles). Callers who care about the marginal rung set the
-    * floor a hair under the target (0.799); gate floors sit well
-    * away from reachable rung values by construction (q102's 0.3 is
-    * ≥ 0.02 from every measured rung at every SF).
+    * nprobe transfers to the flat door unchanged. The returned point
+    * carries the full rung table so deployments can price the floor.
+    * `nprobe0` is clamped into [1, nlist], as in the other sizers.
     */
   def sizeTwoLevelForRecall(vectors: DataFrame, anchorPred: Column,
       k: Int, floor: Double, nlist: Int, nprobe0: Int = 4,
@@ -284,35 +258,24 @@ object SimilaritySearch {
       seed: Long = 42L, trainFraction: Double = 1.0,
       supers: Int = 0, maxAnchors: Int = 64): AnnOperatingPoint = {
     import org.apache.spark.sql.graft.TopKExpressions.topKByScore
-    require(floor > 0.0 && floor <= 1.0,
-      s"recall floor must be in (0, 1]; got $floor")
-    require(maxAnchors >= 1, s"maxAnchors must be >= 1; got $maxAnchors")
     val spark = vectors.sparkSession
     import spark.implicits._
+    RecallWalk.checkFloor(floor)
     val s0 = if (supers > 0) supers else KMeansPortable.defaultSupers(nlist)
+    val ladder = recallLadder(nlist, s0, math.min(math.max(1, nprobe0), nlist))
+    val feat = vectors.select(col(idCol).cast("long").as("id"),
+      col(vecCol).cast("array<double>").as("vec"))
+    val sample = RecallWalk.anchorSample(feat, anchorPred, maxAnchors, k,
+      "sizeTwoLevelForRecall")
     val coarse = trainTwoLevelCoarse(vectors, nlist, vecCol, seed,
       trainFraction, s0)
     val cB = spark.sparkContext.broadcast(coarse)
-    val feat = vectors.select(col(idCol).cast("long").as("id"),
-      col(vecCol).cast("array<double>").as("vec"))
     val assigned = graft.CacheScope.track(feat.as[(Long, Array[Double])]
       .map { case (id, v) => (id, v, nearestChild(v, cB.value)) }
       .toDF("id", "vec", "cell"))
-    // deterministic bounded sample, DECORRELATED from content
-    // (ADVICE r13): on corpora where id correlates with content
-    // (time-ordered ingest, cluster-ordered writes) the lowest-id
-    // prefix samples one region and the measured floor may not
-    // transfer to the full anchor set — so order by a seeded hash of
-    // the id (same sample every call, every partitioning; id
-    // tie-break keeps the order total even under hash collisions)
-    val sample = graft.CacheScope.track(
-      feat.filter(anchorPred)
-        .orderBy(xxhash64(col("id")), col("id")).limit(maxAnchors))
-    val exact = graft.CacheScope.track(
-      cosineTopK(feat, sample, k, "id", "vec"))
     val centDf = childCentDf(spark, coarse)
     def approxAt(p: Int, np: Int): DataFrame = {
-      val anchorsRouted = sample.as[(Long, Array[Double])]
+      val anchorsRouted = sample.rows.as[(Long, Array[Double])]
         .flatMap { case (id, v) =>
           routeSupersTopP(v, cB.value, p).map(su => (id, v, su)) }
         .toDF("id", "a_vec", "super")
@@ -321,7 +284,7 @@ object SimilaritySearch {
         .groupBy(col("id"))
         .agg(topKByScore(col("cs"), col("cell"), np).as("pc"))
         .select(col("id").as("anchor_id"), explode(col("pc.id")).as("cell"))
-      val anch = sample.select(col("id").as("anchor_id"),
+      val anch = sample.rows.select(col("id").as("anchor_id"),
         col("vec").as("a_vec"))
       val cands = probeCells.join(anch, "anchor_id")
         .join(assigned.select(col("cell"), col("id").as("neighbor_id"),
@@ -332,136 +295,98 @@ object SimilaritySearch {
         .select(col("anchor_id"), col("neighbor_id"), col("score"))
       rankTopK(cands, k)
     }
-    val ladder = recallLadder(nlist, s0, nprobe0)
-    var walk = Vector.empty[RecallRung]
-    var found: Option[RecallRung] = None
-    val it = ladder.iterator
-    while (found.isEmpty && it.hasNext) {
-      val (p, np) = it.next()
-      val r = meanRecall(approxAt(p, np), exact)
-      val rung = RecallRung(p, np, r)
-      walk = walk :+ rung
-      if (r >= floor) found = Some(rung)
-    }
-    val last = walk.last
-    AnnOperatingPoint(last.probeSupers, last.nprobe, last.recall,
-      found.isDefined, walk)
+    annPoint(RecallWalk.climb(ladder, floor) { case (p, np) =>
+      meanRecall(approxAt(p, np), sample.exact)
+    })
   }
 
-  /** FULL-CHAIN recall sizing for the IVF-PQ tier (round 14 — ADVICE
-    * r13: [[sizeTwoLevelForRecall]] scores candidates with exact
-    * cosine, so its floor is only the PQ tier's coarse CEILING — the
-    * repo's own measurement read 0.28 end-to-end at rerank 64 under
-    * a 0.80 coarse ceiling). This sizer walks [[pqRecallLadder]] on
-    * the REAL serving chain — the stored index's coarse probe, ADC
-    * shortlist AND exact rerank ([[serveIvfPqIndexed]], the exact
-    * path every query runs) — so the floor it meets is end-to-end by
-    * construction, the [[IvfPqPortable.topKAuto]] contract brought to
-    * the native tier. Trains NOTHING and re-encodes NOTHING: it
-    * sizes the query knobs of a prebuilt index, which is why the
-    * stored-index door can afford it at deployment time (the
-    * reference's validate-then-serve discipline,
-    * Docs/SIMILARITY-PLAN.md:55-75).
-    *
-    * Ground truth: exact cosine top-k of a bounded, deterministic,
-    * content-decorrelated anchor sample (the seeded-hash rule —
-    * ADVICE r13). Per rung: one bounded sample probe (corpus-side
-    * work = the swept cells of ≤ maxAnchors anchors) and one scalar
-    * collect. The terminal rung (S, nlist, |index|) reranks every
-    * candidate of an all-cell sweep — exact search, so any floor
-    * ≤ 1.0 is reachable; its shortlist aggregate is |index| ids per
-    * SAMPLE anchor, the one place the walk's cost is corpus-sized,
-    * and only a floor unreachable below it ever gets there. */
+  private def annPoint(c: RecallWalk.Climb[(Int, Int)]): AnnOperatingPoint = {
+    val walk = c.trail.map { case ((p, np), r) => RecallRung(p, np, r) }
+    AnnOperatingPoint(walk.last.probeSupers, walk.last.nprobe,
+      walk.last.recall, c.floorMet, walk)
+  }
+
+  /** Full-chain recall sizing for the IVF-PQ tier: climbs
+    * [[pqRecallLadder]] under the [[RecallWalk]] rule on the real
+    * serving chain — the stored index's coarse probe, ADC shortlist
+    * and exact rerank ([[serveIvfPqIndexed]], the path every query
+    * runs) — so the floor it meets is end-to-end. A coarse-only sizer
+    * scores candidates with exact cosine, so its floor is only the PQ
+    * tier's ceiling. Trains nothing and re-encodes nothing: it sizes
+    * the query knobs of a prebuilt index. The terminal rung's
+    * shortlist is |index| ids per sample anchor, the one place the
+    * walk's cost is corpus-sized, and only a floor unreachable below
+    * it gets there. */
   def sizeIvfPqForRecall(index: DataFrame, vectors: DataFrame,
       anchorPred: Column, k: Int, floor: Double,
       artifacts: TwoLevelIvfPqArtifacts, nprobe0: Int = 4,
       rerank0: Int = 32, idCol: String = "vec_id",
       vecCol: String = "embedding",
-      maxAnchors: Int = 64): PqOperatingPoint = {
-    require(floor > 0.0 && floor <= 1.0,
-      s"recall floor must be in (0, 1]; got $floor")
-    require(maxAnchors >= 1, s"maxAnchors must be >= 1; got $maxAnchors")
-    val nlist = artifacts.coarse.nlist
-    val s = artifacts.coarse.supers.length
+      maxAnchors: Int = 64): PqOperatingPoint =
+    sizePqChain(index, vectors, anchorPred, k, floor,
+      (artifacts.coarse.nlist, artifacts.coarse.supers.length), nprobe0,
+      rerank0, idCol, vecCol, maxAnchors, "sizeIvfPqForRecall") {
+      (pred, p, np, r) => serveIvfPqIndexed(index, vectors, pred, k,
+        artifacts, np, r, idCol, vecCol, p)
+    }
+
+  /** The PQ sizers' shared body: `shape` is the index's (nlist,
+    * supers), read after the argument checks; `probe(samplePred, p,
+    * nprobe, rerank)` serves the sample anchors at one rung. */
+  private def sizePqChain(index: DataFrame, vectors: DataFrame,
+      anchorPred: Column, k: Int, floor: Double, shape: => (Int, Int),
+      nprobe0: Int, rerank0: Int, idCol: String, vecCol: String,
+      maxAnchors: Int, site: String)(
+      probe: (Column, Int, Int, Int) => DataFrame): PqOperatingPoint = {
+    RecallWalk.checkFloor(floor)
     val feat = vectors.select(col(idCol).cast("long").as("id"),
       col(vecCol).cast("array<double>").as("vec"))
-    val sampleIds = feat.filter(anchorPred)
-      .orderBy(xxhash64(col("id")), col("id")).limit(maxAnchors)
-      .select(col("id")).collect().map(_.getLong(0)).toSeq
-    require(sampleIds.nonEmpty, "sizeIvfPqForRecall: empty anchor sample")
-    val samplePred = col("id").isin(sampleIds: _*)
-    val sample = graft.CacheScope.track(feat.filter(samplePred))
-    val exact = graft.CacheScope.track(
-      cosineTopK(feat, sample, k, "id", "vec"))
+    val sample = RecallWalk.anchorSample(feat, anchorPred, maxAnchors, k,
+      site)
+    val (nlist, supers) = shape
     val n = index.count()
     val maxRerank = math.max(rerank0,
       math.min(n, Int.MaxValue.toLong).toInt)
-    val ladder = pqRecallLadder(nlist, s,
+    val ladder = pqRecallLadder(nlist, supers,
       math.min(math.max(1, nprobe0), nlist), rerank0, maxRerank)
-    var walk = Vector.empty[PqRecallRung]
-    var found: Option[PqRecallRung] = None
-    val it = ladder.iterator
-    while (found.isEmpty && it.hasNext) {
-      val (p, np, r) = it.next()
-      val rec = meanRecall(serveIvfPqIndexed(index, vectors,
-        samplePred, k, artifacts, np, r, idCol, vecCol, p), exact)
-      val rung = PqRecallRung(p, np, r, rec)
-      walk = walk :+ rung
-      if (rec >= floor) found = Some(rung)
+    val c = RecallWalk.climb(ladder, floor) { case (p, np, r) =>
+      meanRecall(probe(sample.pred, p, np, r), sample.exact)
     }
-    val last = walk.last
-    PqOperatingPoint(last.probeSupers, last.nprobe, last.rerank,
-      last.recall, found.isDefined, walk)
+    val walk = c.trail.map { case ((p, np, r), rec) =>
+      PqRecallRung(p, np, r, rec) }
+    PqOperatingPoint(walk.last.probeSupers, walk.last.nprobe,
+      walk.last.rerank, walk.last.recall, c.floorMet, walk)
   }
 
-  /** Recall-targeted sizing for the RELATIONAL (third) tier (round
-    * 14): the [[sizeTwoLevelForRecall]] walk with the relational
-    * probe ([[ivfCosineTopKRelationalIndexed]]) as its instrument —
-    * nothing here holds the children; the corpus assignment store
-    * `assigned` (id, vec, cell) and the trained [[RelationalCoarse]]
-    * are probed per rung with a bounded, seeded-hash-decorrelated
-    * anchor sample, exactly the arithmetic the driver-resident
-    * sizers use. The ladder's terminal rung ranks every populated
-    * super's every cell — exact search — so any floor ≤ 1.0 is
-    * reachable. Driver state: one scalar per rung. */
-  def sizeRelationalForRecall(assigned: DataFrame, anchorPred: Column,
-      k: Int, floor: Double, coarse: RelationalCoarse,
-      nprobe0: Int = 4, maxAnchors: Int = 64): AnnOperatingPoint = {
-    require(floor > 0.0 && floor <= 1.0,
-      s"recall floor must be in (0, 1]; got $floor")
-    require(maxAnchors >= 1, s"maxAnchors must be >= 1; got $maxAnchors")
+  /** (nlist, populated supers) of a relational coarse structure. */
+  private def relationalShape(coarse: RelationalCoarse): (Int, Int) = {
     val nlistL = coarse.childRel.count()
     require(nlistL >= 1 && nlistL <= Int.MaxValue,
       s"child relation must hold 1..Int.MaxValue cells; got $nlistL")
-    val nlist = nlistL.toInt
-    val pop = populatedOf(coarse.childRel).length
+    (nlistL.toInt, populatedOf(coarse.childRel).length)
+  }
+
+  /** Recall-targeted sizing for the RELATIONAL (third) tier: the
+    * [[sizeTwoLevelForRecall]] walk with the relational probe
+    * ([[ivfCosineTopKRelationalIndexed]]) as its instrument — nothing
+    * here holds the children; the corpus assignment store `assigned`
+    * (id, vec, cell) and the trained [[RelationalCoarse]] are probed
+    * per rung. */
+  def sizeRelationalForRecall(assigned: DataFrame, anchorPred: Column,
+      k: Int, floor: Double, coarse: RelationalCoarse,
+      nprobe0: Int = 4, maxAnchors: Int = 64): AnnOperatingPoint = {
+    RecallWalk.checkFloor(floor)
     val feat = assigned.select(col("id").cast("long").as("id"),
       col("vec"))
-    val sampleIds = feat.filter(anchorPred)
-      .orderBy(xxhash64(col("id")), col("id")).limit(maxAnchors)
-      .select(col("id")).collect().map(_.getLong(0)).toSeq
-    require(sampleIds.nonEmpty,
-      "sizeRelationalForRecall: empty anchor sample")
-    val samplePred = col("id").isin(sampleIds: _*)
-    val sample = graft.CacheScope.track(feat.filter(samplePred))
-    val exact = graft.CacheScope.track(
-      cosineTopK(feat, sample, k, "id", "vec"))
+    val sample = RecallWalk.anchorSample(feat, anchorPred, maxAnchors, k,
+      "sizeRelationalForRecall")
+    val (nlist, pop) = relationalShape(coarse)
     val ladder = recallLadder(nlist, pop,
       math.min(math.max(1, nprobe0), nlist))
-    var walk = Vector.empty[RecallRung]
-    var found: Option[RecallRung] = None
-    val it = ladder.iterator
-    while (found.isEmpty && it.hasNext) {
-      val (p, np) = it.next()
-      val r = meanRecall(ivfCosineTopKRelationalIndexed(assigned,
-        samplePred, k, coarse, np, p), exact)
-      val rung = RecallRung(p, np, r)
-      walk = walk :+ rung
-      if (r >= floor) found = Some(rung)
-    }
-    val last = walk.last
-    AnnOperatingPoint(last.probeSupers, last.nprobe, last.recall,
-      found.isDefined, walk)
+    annPoint(RecallWalk.climb(ladder, floor) { case (p, np) =>
+      meanRecall(ivfCosineTopKRelationalIndexed(assigned, sample.pred, k,
+        coarse, np, p), sample.exact)
+    })
   }
 
   /** Exact top-k cosine neighbors of each anchor. Anchors must be
@@ -838,14 +763,12 @@ object SimilaritySearch {
     * p = 1 cost profile pass `probeSupers = 1` explicitly and accept
     * the measured recall cap (SCALE.md round-12 table).
     *
-    * `recallFloor > 0` (round 13 — VERDICT r12 item 1) switches the
-    * door from policy-sized to RECALL-sized: [[sizeTwoLevelForRecall]]
-    * walks the deterministic [[recallLadder]] on a bounded anchor
-    * sample until the floor holds, and the door runs the found
-    * (probeSupers, nprobe) instead of the caller's. Costs one extra
-    * coarse training pass (the sizer's instrument) plus one bounded
-    * sample probe per rung; the terminal exact-sweep rung makes any
-    * floor ≤ 1 reachable. `recallAnchors` bounds the sample.
+    * `recallFloor > 0` switches the door from policy-sized to
+    * RECALL-sized: [[sizeTwoLevelForRecall]] climbs [[recallLadder]]
+    * under the [[RecallWalk]] rule on at most `recallAnchors` anchors,
+    * and the door runs the found (probeSupers, nprobe) instead of the
+    * caller's (a hint past nlist is clamped). Costs one extra coarse
+    * training pass plus one sample probe per rung.
     *
     * WHICH REGIME BELONGS TO WHICH STRUCTURE (measured, ScaleProbe
     * `recallwalk`, SCALE.md round 13): the p-phase saturates AT p = S
@@ -922,20 +845,21 @@ object SimilaritySearch {
       // contract), so the found nprobe transfers exactly
       val np =
         if (recallFloor > 0)
-          sizedDoorPoint(vectors, anchorPred, k, recallFloor,
+          sizeTwoLevelForRecall(vectors, anchorPred, k, recallFloor,
             math.max(2, nlist), nprobe, idCol, vecCol, seed,
-            trainFraction, supers = 1, recallAnchors)._2
+            trainFraction, supers = 1, recallAnchors).nprobe
         else nprobe
       // ML KMeans requires k >= 2 (the semanticDedup convention)
       ivfCosineTopK(vectors, anchorPred, k, math.max(2, nlist), np,
         idCol, vecCol, seed, trainFraction)
     } else {
       val (p, np) =
-        if (recallFloor > 0)
-          sizedDoorPoint(vectors, anchorPred, k, recallFloor, nlist,
-            nprobe, idCol, vecCol, seed, trainFraction, supers = 0,
-            recallAnchors)
-        else (resolveProbeSupers(probeSupers, nprobe, nlist), nprobe)
+        if (recallFloor > 0) {
+          val pt = sizeTwoLevelForRecall(vectors, anchorPred, k,
+            recallFloor, nlist, nprobe, idCol, vecCol, seed,
+            trainFraction, supers = 0, recallAnchors)
+          (pt.probeSupers, pt.nprobe)
+        } else (resolveProbeSupers(probeSupers, nprobe, nlist), nprobe)
       ivfCosineTopKTwoLevel(vectors, anchorPred, k, nlist, np,
         idCol, vecCol, seed, trainFraction, probeSupers = p)
     }
@@ -952,24 +876,6 @@ object SimilaritySearch {
     if (probeSupers > 0) probeSupers
     else KMeansPortable.autoProbeSupers(nprobe, nlist,
       KMeansPortable.defaultSupers(nlist))
-
-  /** The ONE recallFloor sizing site both native auto doors dispatch
-    * through (round-13 review: the dispatch block was pasted at three
-    * doors, and each crashed when the caller's nprobe hint exceeded
-    * the auto-sized nlist — a case the non-floor path handles by just
-    * ranking all cells). Clamps the hint into [1, nlist] (the walk
-    * then climbs FROM the clamped start — the terminal exact-sweep
-    * rung is unchanged) and returns the chosen (probeSupers, nprobe).
-    * `supers = 1` sizes the flat tier. */
-  private def sizedDoorPoint(vectors: DataFrame, anchorPred: Column,
-      k: Int, floor: Double, nlist: Int, nprobe: Int, idCol: String,
-      vecCol: String, seed: Long, trainFraction: Double, supers: Int,
-      recallAnchors: Int): (Int, Int) = {
-    val pt = sizeTwoLevelForRecall(vectors, anchorPred, k, floor,
-      nlist, math.min(math.max(1, nprobe), nlist), idCol, vecCol,
-      seed, trainFraction, supers, recallAnchors)
-    (pt.probeSupers, pt.nprobe)
-  }
 
   /** IVF-flat approximate top-k — the second scale path beside LSH:
     * a coarse k-means quantizer (Spark ML, fixed seed) partitions the
@@ -2085,68 +1991,30 @@ object SimilaritySearch {
   }
 
   /** [[sizeIvfPqForRecall]]'s relational-tier sibling: the same
-    * full-chain (coarse probe + ADC + rerank) [[pqRecallLadder]]
-    * walk, instrumented on [[ivfPqTopKScoreRelationalIndexed]] over
-    * a prebuilt relational index — nothing nlist-sized leaves the
-    * executors. Same bounded seeded-hash anchor sample, same
-    * terminal-rung exactness contract.
+    * full-chain [[pqRecallLadder]] walk, instrumented on
+    * [[ivfPqTopKScoreRelationalIndexed]] over a prebuilt relational
+    * index — nothing nlist-sized leaves the executors.
     *
-    * REGIME NOTE (measured — ScaleProbe `relidxfloor`, SCALE.md
-    * round 15): at the relational tier's tiny-cell shape (cell
-    * population ≲ 10) the p-phase reads FLAT — with nprobe0 cells
-    * the binding constraint, widening the super pool only swaps
-    * which nprobe0 cells get ranked (recall ~0.33 at every p on the
-    * measured shape) and each flat rung still costs a sample probe.
-    * The walk is correct (rungs are measured, never assumed
-    * monotone, and the lockstep phase then jumps it to the floor),
-    * but a caller who KNOWS the shape starts `nprobe0` higher so the
-    * p-phase starts past the flat region. */
+    * REGIME NOTE (measured — ScaleProbe `relidxfloor`, SCALE.md): at
+    * the relational tier's tiny-cell shape (cell population ≲ 10) the
+    * p-phase reads FLAT — with nprobe0 cells the binding constraint,
+    * widening the super pool only swaps which nprobe0 cells get ranked
+    * (recall ~0.33 at every p on the measured shape) and each flat
+    * rung still costs a sample probe. The lockstep phase then jumps
+    * the walk to the floor, but a caller who KNOWS the shape starts
+    * `nprobe0` higher so the p-phase starts past the flat region. */
   def sizeIvfPqRelationalForRecall(index: DataFrame,
       vectors: DataFrame, anchorPred: Column, k: Int, floor: Double,
       artifacts: RelationalIvfPqArtifacts, nprobe0: Int = 4,
       rerank0: Int = 32, idCol: String = "vec_id",
       vecCol: String = "embedding",
-      maxAnchors: Int = 64): PqOperatingPoint = {
-    require(floor > 0.0 && floor <= 1.0,
-      s"recall floor must be in (0, 1]; got $floor")
-    require(maxAnchors >= 1, s"maxAnchors must be >= 1; got $maxAnchors")
-    val nlistL = artifacts.coarse.childRel.count()
-    require(nlistL >= 1 && nlistL <= Int.MaxValue,
-      s"child relation must hold 1..Int.MaxValue cells; got $nlistL")
-    val nlist = nlistL.toInt
-    val pop = populatedOf(artifacts.coarse.childRel).length
-    val feat = vectors.select(col(idCol).cast("long").as("id"),
-      col(vecCol).cast("array<double>").as("vec"))
-    val sampleIds = feat.filter(anchorPred)
-      .orderBy(xxhash64(col("id")), col("id")).limit(maxAnchors)
-      .select(col("id")).collect().map(_.getLong(0)).toSeq
-    require(sampleIds.nonEmpty,
-      "sizeIvfPqRelationalForRecall: empty anchor sample")
-    val samplePred = col("id").isin(sampleIds: _*)
-    val sample = graft.CacheScope.track(feat.filter(samplePred))
-    val exact = graft.CacheScope.track(
-      cosineTopK(feat, sample, k, "id", "vec"))
-    val n = index.count()
-    val maxRerank = math.max(rerank0,
-      math.min(n, Int.MaxValue.toLong).toInt)
-    val ladder = pqRecallLadder(nlist, pop,
-      math.min(math.max(1, nprobe0), nlist), rerank0, maxRerank)
-    var walk = Vector.empty[PqRecallRung]
-    var found: Option[PqRecallRung] = None
-    val it = ladder.iterator
-    while (found.isEmpty && it.hasNext) {
-      val (p, np, r) = it.next()
-      val rec = meanRecall(ivfPqTopKScoreRelationalIndexed(index,
-        vectors, samplePred, k, artifacts, np, r, idCol, vecCol, p),
-        exact)
-      val rung = PqRecallRung(p, np, r, rec)
-      walk = walk :+ rung
-      if (rec >= floor) found = Some(rung)
+      maxAnchors: Int = 64): PqOperatingPoint =
+    sizePqChain(index, vectors, anchorPred, k, floor,
+      relationalShape(artifacts.coarse), nprobe0, rerank0, idCol, vecCol,
+      maxAnchors, "sizeIvfPqRelationalForRecall") {
+      (pred, p, np, r) => ivfPqTopKScoreRelationalIndexed(index, vectors,
+        pred, k, artifacts, np, r, idCol, vecCol, p)
     }
-    val last = walk.last
-    PqOperatingPoint(last.probeSupers, last.nprobe, last.rerank,
-      last.recall, found.isDefined, walk)
-  }
 
   /** The routed super of `v` over the populated domain — the probe's
     * map-side half (the join against the (cell, cvec, super) relation
@@ -2479,8 +2347,8 @@ object SimilaritySearch {
     val nlist = artifacts.coarse.nlist
     if (recallFloor > 0) {
       val pt = sizeIvfPqForRecall(index, vectors, anchorPred, k,
-        recallFloor, artifacts, math.min(math.max(1, nprobe), nlist),
-        rerank, idCol, vecCol, recallAnchors)
+        recallFloor, artifacts, nprobe, rerank, idCol, vecCol,
+        recallAnchors)
       serveIvfPqIndexed(index, vectors, anchorPred, k, artifacts,
         pt.nprobe, pt.rerank, idCol, vecCol, pt.probeSupers)
     } else {

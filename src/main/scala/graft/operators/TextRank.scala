@@ -1,9 +1,9 @@
 package graft.operators
 
 import graft.functions.TextFunctions.{normalized, tokens}
+import graft.queries.Num
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Corpus-statistics text scoring: TF-IDF weights and BM25 ranking —
   * the retrieval/quality-filter staple of training-data pipelines
@@ -85,7 +85,7 @@ object TextRank {
       .join(lens, "doc_id")
       .crossJoin(broadcast(stats))
       .withColumn("contrib",
-        idf6.cast(DecimalType(18, 6)) * w6.cast(DecimalType(18, 6)))
+        Num.dec(idf6, 18, 6) * Num.dec(w6, 18, 6))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_hit"),
         sum(col("contrib")).cast("double").as("score"))

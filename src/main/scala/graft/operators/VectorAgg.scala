@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.queries.Num
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
@@ -266,7 +267,7 @@ object VectorAgg {
       .select(grp.as("grp"),
         posexplode(vecCol.cast("array<double>")).as(Seq("pos", "v")))
       .groupBy(col("grp"), col("pos"))
-      .agg(round(sum(col("v").cast("decimal(28,9)")).cast("double")
+      .agg(round(sum(Num.dec9(col("v"))).cast("double")
         / count(lit(1)), 6).as("mv"))
       .groupBy(col("grp"))
       .agg(transform(array_sort(collect_list(struct(col("pos"), col("mv")))),
@@ -322,7 +323,7 @@ object VectorAgg {
       cross.groupBy(col("a_gid"), col("b_gid"), col(mCol))
         .agg(max(col("c")).as("best"))
         .groupBy(col("a_gid"), col("b_gid"))
-        .agg(sum(col("best").cast("decimal(28,10)")).cast("double").as(sName),
+        .agg(sum(Num.dec(col("best"), 28, 10)).cast("double").as(sName),
           count(lit(1)).as(nName))
     val scored = side("ai", "sum_a", "na")
       .join(side("bi", "sum_b", "nb"), Seq("a_gid", "b_gid"))

@@ -30,15 +30,17 @@ final case class Q(
   * without building `Double.toString` per row, to the same value.
   */
 object Num {
+  /** `c` as exact DECIMAL(precision, scale), through
+    * `exactDecimalCast`. */
+  def dec(c: Column, precision: Int, scale: Int): Column =
+    exactDecimalCast(c.cast(DecimalType(precision, scale)))
   /** Money-ish column → exact decimal. */
-  def dec2(c: Column): Column = exactDecimalCast(c.cast(DecimalType(18, 2)))
+  def dec2(c: Column): Column = dec(c, 18, 2)
   /** Higher-scale exact decimal (e.g. event values, embedding floats). */
-  def dec9(c: Column): Column =
-    exactDecimalCast(c.cast("double").cast(DecimalType(28, 9)))
+  def dec9(c: Column): Column = dec(c.cast("double"), 28, 9)
   /** `round(c, 12)` as exact DECIMAL(38,12): the decimal-parity term
     * of the Lloyd mean and of the weighted scores. */
-  def round12(c: Column): Column =
-    exactDecimalCast(round(c, 12).cast(DecimalType(38, 12)))
+  def round12(c: Column): Column = dec(round(c, 12), 38, 12)
   /** Exact decimal sum rendered as a bit-stable double. */
   def dsum(c: Column): Column = sum(c).cast("double")
 }

@@ -41,7 +41,7 @@ object SimilarityQueries {
     Tables(s, dir).embeddings
       .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "v")))
       .groupBy(col("label"), col("pos"))
-      .agg(round(sum(col("v").cast("double").cast("decimal(28,9)")).cast("double")
+      .agg(round(sum(Num.dec9(col("v"))).cast("double")
         / count(lit(1)), 6).as("centroid_v"))
       .orderBy(col("label"), col("pos"))
 

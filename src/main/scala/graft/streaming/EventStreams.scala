@@ -282,7 +282,7 @@ object EventStreams {
       tsCol: String, model: graft.operators.NgramLm.Model,
       watermarkDelay: String = "10 minutes",
       windowLen: String = "10 minutes"): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
+    import graft.queries.Num
     val bg = docs
       .select(col(idCol).cast("long").as("doc_id"), col(tsCol).as("__ts"),
         explode(graft.operators.NgramLm.bigramArray(col(textCol))).as("bg"))
@@ -301,7 +301,7 @@ object EventStreams {
       .groupBy(window(col("__ts"), windowLen), col("doc_id"))
       .agg(count(lit(1)).as("n_bigrams"),
         sum(col("oov").cast("long")).as("n_oov"),
-        sum(col("bits").cast(DecimalType(28, 6))).cast("double").as("sum_bits"))
+        sum(Num.dec(col("bits"), 28, 6)).cast("double").as("sum_bits"))
       .select(col("doc_id"), col("n_bigrams"), col("n_oov"),
         col("sum_bits"), (col("sum_bits") / col("n_bigrams")).as("avg_bits"))
   }

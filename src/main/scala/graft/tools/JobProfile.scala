@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 import java.util.concurrent.ConcurrentHashMap
 
@@ -17,7 +16,9 @@ import java.util.concurrent.ConcurrentHashMap
   * Prints one line per job (start-offset, duration, gap since the
   * previous job's end, #tasks, callsite) and a summary: total wall,
   * Σjob, Σgap, and Σoverlap (the time a job started before the previous
-  * one ended, which the gap clamps to 0).
+  * one ended, which the gap clamps to 0). The session is
+  * [[graft.SessionTuning.session]], the one the bench measures; set
+  * other confs with `SPARK_GRAFT_JVM_OPTS="-Dspark.k=v"`.
   */
 object JobProfile {
   def main(args: Array[String]): Unit = {
@@ -25,24 +26,8 @@ object JobProfile {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 2
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_PROFILE_SHUFFLE",
-      graft.SessionTuning.shufflePartitionsConf(sfDir, cpus.toInt))
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.codegen.cache.maxEntries",
-        graft.SessionTuning.codegenCacheConf)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // ad-hoc config experiments: SPARK_GRAFT_PROFILE_CONF="k=v;k=v"
-    sys.env.get("SPARK_GRAFT_PROFILE_CONF").foreach(_.split(";")
-      .filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2); builder.config(k, v)
-      })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      Runtime.getRuntime.availableProcessors().toString).toInt
+    val spark = graft.SessionTuning.session(cpus, sfDir)
     case class J(id: Int, start: Long, var end: Long, var tasks: Int,
       site: String)
     val jobs = new ConcurrentHashMap[Int, J]()

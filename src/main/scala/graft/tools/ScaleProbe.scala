@@ -596,17 +596,15 @@ object ScaleProbe {
         f"p=${pt.probeSupers} np=${pt.nprobe} recall=${pt.recall}%.4f " +
         f"floorMet=${pt.floorMet} walk_total=$secs%.1fs " +
         f"swept_frac=${pt.nprobe.toDouble / nlist}%.3f")
-      // the PQ stage at the CHOSEN point — measured on the same
-      // 64-lowest-id anchor sample the walk sized against so the
-      // rows are directly comparable (skipped on the flat
-      // supers = 1 walk, whose purpose is the sweep comparison)
+      // the PQ stage at the CHOSEN point — measured on the anchor
+      // sample the walk sized against so the rows are directly
+      // comparable (skipped on the flat supers = 1 walk, whose
+      // purpose is the sweep comparison)
       if (supersArg == 1) { spark.stop(); return }
-      val sampleIds = emb.select(col("vec_id").cast("long"))
-        .filter(col("vec_id") % 50 === 0).orderBy(col("vec_id"))
-        .limit(64).collect().map(_.getLong(0)).toSeq
-      val pred2 = col("id").isInCollection(sampleIds)
-      val exactS = graft.CacheScope.track(SimilaritySearch.cosineTopK(
-        emb, emb.filter(col("vec_id").isInCollection(sampleIds)), 10))
+      val sample = graft.operators.RecallWalk.anchorSample(
+        emb.select(col("vec_id").cast("long").as("id"),
+          col("embedding").cast("array<double>").as("vec")),
+        col("id") % 50 === 0, 64, 10, "ScaleProbe recallwalk")
       val t1 = System.nanoTime()
       val art = SimilaritySearch.trainIvfPqArtifactsTwoLevel(emb,
         nlist = nlist, m = 8, ksub = 16, residual = true)
@@ -618,9 +616,9 @@ object ScaleProbe {
       Seq(64, 256, 1024).foreach { rr =>
         val t2 = System.nanoTime()
         val rpq = SimilaritySearch.meanRecall(
-          SimilaritySearch.ivfPqTopKScoreTwoLevel(emb, pred2, 10, art,
+          SimilaritySearch.ivfPqTopKScoreTwoLevel(emb, sample.pred, 10, art,
             nprobe = pt.nprobe, rerank = rr,
-            probeSupers = pt.probeSupers), exactS)
+            probeSupers = pt.probeSupers), sample.exact)
         println(f"[recallwalk] ivfpq2(residual) at chosen point, " +
           f"rerank=$rr: recall=$rpq%.4f " +
           f"(${(System.nanoTime() - t2) / 1e9}%.1fs)")
