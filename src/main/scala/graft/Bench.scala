@@ -55,9 +55,9 @@ object Bench {
   // could otherwise print "3,49", invalid JSON for the whole line.
   private def round(v: Double, decimals: Int): BigDecimal =
     BigDecimal(v).setScale(decimals, BigDecimal.RoundingMode.HALF_UP)
-  private def num(v: Double, decimals: Int): String =
+  private[graft] def num(v: Double, decimals: Int): String =
     round(v, decimals).bigDecimal.toPlainString
-  private def obj(fields: Seq[(String, String)]): String =
+  private[graft] def obj(fields: Seq[(String, String)]): String =
     fields.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
   private def nums(kv: Seq[(String, Double)], decimals: Int): String =
     obj(kv.map { case (k, v) => k -> num(v, decimals) })

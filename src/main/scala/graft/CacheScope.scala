@@ -8,46 +8,22 @@ import org.apache.spark.sql.DataFrame
   * gap-fill query) persist an intermediate relation that every
   * downstream branch of their plan re-reads. The operator cannot
   * unpersist it itself — the returned DataFrame is lazy, so the cache
-  * must survive until the CALLER runs its terminal action. Round 2
-  * leaked these: a long-lived session accumulated cached blocks until
-  * LRU eviction.
+  * must survive until the CALLER runs its terminal action; unreleased,
+  * a long-lived session accumulates cached blocks until LRU eviction.
   *
   * Contract: operators register intermediates via [[track]]; whoever
-  * owns the session releases them after the consuming action. Two
-  * release granularities:
-  *
-  *   - [[releaseAll]] — drop everything tracked. What Verify/Bench do
-  *     after every query's sink/count (the gate loop holds at most one
-  *     query's cache at a time).
-  *   - [[open]] + [[releaseSince]] — a scope token for callers sharing
-  *     the session with other in-flight work: only intermediates
-  *     registered after `open()` are dropped, so one pipeline's
-  *     release cannot evict another's cache mid-flight.
-  *
-  * The registry keys every tracked relation by a MONOTONIC id that is
-  * never reused, guarded by this object's monitor; a scope token is
-  * the id watermark at `open()`. Because ids only grow, a token stays
-  * valid across any interleaving of other scopes' releases (including
-  * `releaseAll`): `releaseSince` drops exactly the entries tracked at
-  * or after its watermark, never an earlier scope's, and never
-  * "misses" entries the way a position-based buffer would after a
-  * concurrent trim re-used its positions.
+  * owns the session drops them all with [[releaseAll]] after the
+  * consuming action. Verify and Bench do this after every query's
+  * sink/count, so the gate loop holds at most one query's cache at a
+  * time.
   */
 object CacheScope {
-  // id → cached relation; ids are permanent (released entries are
-  // removed from the map, their ids never reassigned)
-  private val tracked = scala.collection.mutable.LinkedHashMap.empty[Long, DataFrame]
-  private var nextId = 0L
-
-  /** Opaque scope token — everything tracked after [[open]] belongs to
-    * the scope and is dropped by [[releaseSince]]. */
-  final case class Token private[CacheScope] (from: Long)
+  private val tracked = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
 
   /** Persist `df` and register it for later release. */
   def track(df: DataFrame): DataFrame = synchronized {
     val p = df.persist()
-    tracked += (nextId -> p)
-    nextId += 1
+    tracked += p
     p
   }
 
@@ -58,25 +34,13 @@ object CacheScope {
     * level would throw). Release semantics identical to [[track]]:
     * `unpersist` drops the checkpoint blocks. */
   def trackPersisted(df: DataFrame): DataFrame = synchronized {
-    tracked += (nextId -> df)
-    nextId += 1
+    tracked += df
     df
-  }
-
-  /** Open a scope: subsequent [[track]] calls belong to it. */
-  def open(): Token = synchronized(Token(nextId))
-
-  /** Unpersist only the intermediates tracked since `token`. */
-  def releaseSince(token: Token, blocking: Boolean = false): Unit = synchronized {
-    val ids = tracked.keysIterator.filter(_ >= token.from).toVector
-    ids.foreach { id =>
-      tracked.remove(id).foreach(_.unpersist(blocking))
-    }
   }
 
   /** Unpersist everything currently registered. */
   def releaseAll(blocking: Boolean = false): Unit = synchronized {
-    tracked.valuesIterator.foreach(_.unpersist(blocking))
+    tracked.foreach(_.unpersist(blocking))
     tracked.clear()
   }
 

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
-/** How Bench / ShuffleAudit / RunOne trigger a query.
+/** How Bench / RunOne / tools.Profile trigger a query.
   *
   * NOT `df.count()`: wrapping a plan in Aggregate(count(1)) lets
   * Catalyst optimize away exactly the work being measured — unused

@@ -760,9 +760,10 @@ object EventStreams {
     * the stream's (id, ts, contains_corpus); `arrivalFrameSigs` the
     * stored per-frame signature relation of the same arrivals
     * ([[graft.operators.MediaDedup.imageDHashWide]] layout — only
-    * admitted ids are read, via a semi join). The global rank window
-    * is driver-bounded by construction: one row per admitted arrival
-    * of one compaction window, the nightly unit of work.
+    * admitted ids are read, via a semi join). The rank comes from a
+    * range-partitioned sort, so no step holds every arrival on one
+    * task. The sort and the per-partition row counts that number it
+    * run when this is called, not at the caller's action.
     */
   def containmentBackstopOrder(admitted: DataFrame,
       arrivalFrameSigs: DataFrame, corpusFrameSigs: DataFrame,
@@ -798,18 +799,23 @@ object EventStreams {
         round(col("__best").getField("__ratio"), 6)
           .as("corpus_containment"),
         col("__best").getField("c_media").as("top_corpus_media"))
-    val w = org.apache.spark.sql.expressions.Window.orderBy(
-      col("contains_corpus").desc, col("corpus_containment").desc,
-      col("id"))
-    admitted
+    val ordered = admitted
       .select(col("id").cast("string").as("id"), col("ts"),
         col("contains_corpus"))
       .join(ratios, Seq("id"), "left")
       .na.fill(0.0, Seq("corpus_containment"))
-      .withColumn("verify_rank", row_number().over(w))
-      .select(col("verify_rank"), col("id"), col("ts"),
-        col("contains_corpus"), col("corpus_containment"),
-        col("top_corpus_media"))
+      .select(col("id"), col("ts"), col("contains_corpus"),
+        col("corpus_containment"), col("top_corpus_media"))
+      .orderBy(col("contains_corpus").desc, col("corpus_containment").desc,
+        col("id"))
+    // the range-partitioned sort keeps its order across partitions, so
+    // numbering rows in partition order gives consecutive ranks
+    val ranked = ordered.rdd.zipWithIndex().map { case (r, i) =>
+      org.apache.spark.sql.Row.fromSeq((i + 1).toInt +: r.toSeq)
+    }
+    admitted.sparkSession.createDataFrame(ranked,
+        StructType(StructField("verify_rank", IntegerType, nullable = false) +:
+          ordered.schema.fields))
       .orderBy(col("verify_rank"))
   }
 

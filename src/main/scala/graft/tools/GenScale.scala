@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic STRUCTURE-PRESERVING corpus scaler — the SCALE.md
@@ -65,13 +65,8 @@ object GenScale {
     val out = args(1)
     val reps = args(2).toInt
     require(reps >= 1 && reps * DocOffset < Long.MaxValue / 4)
-    val spark = SparkSession.builder()
-      .master(s"local[${Runtime.getRuntime.availableProcessors()}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SessionTuning.session(
+      Runtime.getRuntime.availableProcessors(), src)
 
     val tables = graft.Tables(spark, src)
     def replicated(name: String): DataFrame =

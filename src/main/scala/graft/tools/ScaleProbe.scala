@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.queries.Num
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{array_sort, col, collect_list,
   count, expr, lit, posexplode, struct, sum, transform}
 
@@ -39,14 +38,7 @@ object ScaleProbe {
     // the shared runs knob must not crash parsing it
     val runs = if (args.length > 2) args(2).toIntOption.getOrElse(3) else 3
     val cpus = Runtime.getRuntime.availableProcessors()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SessionTuning.session(cpus, dir)
     // auto  = flat assignment at nlistFor(n) — the ∝N discipline on
     //         the FLAT argmin structure (O(N·nlist) assignment);
     // auto2 = the two-level quantizer at the same nlist — the scale

@@ -1,17 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
-/** Physical-plan audit: prints the formatted plan of selected queries
-  * and checks the properties the 100 TB design depends on —
+/** Physical-plan pins of the properties the 100 TB design depends on:
   * filter/column pushdown into the parquet scan, broadcast joins for
-  * dimensions, whole-stage codegen coverage, no cartesian products
-  * where an equi-join is expected.
-  *
-  * Run: sbt "runMain graft.PlanAudit [sfDir]"
+  * dimensions, whole-stage codegen coverage, the operator kernels a
+  * query must compile to, no cartesian product where an equi-join is
+  * expected, and per-query caps on shuffle exchanges. One test per
+  * [[PlanAuditSpec.Check]] at sf0.001; the generic sweep over every
+  * catalog plan (no CartesianProduct, BNLJ only for [[PlanAuditSpec
+  * .bnljAllowed]], no unpartitioned window) runs in QueryCatalogSpec
+  * on the DataFrame its per-query test already builds.
   */
-object PlanAudit {
+object PlanAuditSpec {
   case class Check(query: String, mustContain: Seq[String],
       mustNotContain: Seq[String] = Nil,
       // cap on `(n) Exchange` nodes (shuffles; BroadcastExchange not
@@ -740,66 +741,36 @@ object PlanAudit {
     // q87: the 1-row (np, nq) feature-total scalar attach onto the
     // ≤buckets-row weight relation (the q46 shape)
     "q87_dsir_selection")
+}
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    var failures = 0
-    // generic sweep: NO query may contain a cartesian product, and
-    // only the declared brute-force baselines may broadcast-NL-join
-    QueryCatalog.all.foreach { q =>
-      val plan = q.run(spark, sfDir).queryExecution
-        .explainString(ExplainMode.fromString("formatted"))
-      val cart = plan.contains("CartesianProduct")
-      val bnlj = plan.contains("BroadcastNestedLoopJoin") &&
-        !bnljAllowed.contains(q.name)
-      if (cart) { failures += 1; println(s"FAIL  ${q.name}: CartesianProduct") }
-      if (bnlj) { failures += 1
-        println(s"FAIL  ${q.name}: undeclared BroadcastNestedLoopJoin") }
-    }
-    println(s"sweep: ${QueryCatalog.all.size} query plans checked")
-    checks.foreach { c =>
-      val df = QueryCatalog.byName(c.query).run(spark, sfDir)
-      val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted")) +
-        "\n" + df.queryExecution.explainString(ExplainMode.fromString("codegen"))
-          .linesIterator.takeWhile(!_.startsWith("== Subtree")).mkString("\n")
-      val planLower = plan.toLowerCase
-      c.mustContain.foreach { frag =>
-        val ok = planLower.contains(frag.toLowerCase)
-        if (!ok) failures += 1
-        println(s"${if (ok) "PASS" else "FAIL"}  ${c.query}: contains '$frag'")
-      }
-      c.mustNotContain.foreach { frag =>
-        val ok = !planLower.contains(frag.toLowerCase)
-        if (!ok) failures += 1
-        println(s"${if (ok) "PASS" else "FAIL"}  ${c.query}: absent '$frag'")
-      }
-      c.maxShuffleExchanges.foreach { cap =>
-        val n = """\(\d+\) Exchange\s""".r.findAllIn(plan).size
+class PlanAuditSpec extends SparkSpec {
+  import PlanAuditSpec._
+  private val sf = "/root/testdata/sf0.001"
+
+  checks.foreach { c =>
+    test(s"${c.query} plan pins") {
+      try {
+        val qe = QueryCatalog.byName(c.query).run(spark, sf).queryExecution
+        val plan = qe.explainString(ExplainMode.fromString("formatted")) + "\n" +
+          qe.explainString(ExplainMode.fromString("codegen"))
+            .linesIterator.takeWhile(!_.startsWith("== Subtree")).mkString("\n")
+        val planLower = plan.toLowerCase
+        val missing = c.mustContain.filterNot(f => planLower.contains(f.toLowerCase))
+        val present = c.mustNotContain.filter(f => planLower.contains(f.toLowerCase))
         // RoundRobinPartitioning exchanges are Par.ensureWide scan
         // widenings (keyless repartitions that spread a narrow scan
-        // across the box) — benign, but counted by the cap; printing
-        // the split keeps every pin's real-vs-widening composition a
-        // mechanical fact instead of a comment claim. Count only the
-        // numbered Exchange nodes' own Arguments lines (ADVICE r10):
-        // cached-relation details and the codegen section repeat
-        // exchange text in tree form, which would let the split
-        // exceed the node count it is a split OF
-        val widen = "Arguments: RoundRobinPartitioning".r
-          .findAllIn(plan).size
-        val ok = n <= cap
-        if (!ok) failures += 1
-        println(s"${if (ok) "PASS" else "FAIL"}  ${c.query}: " +
-          s"shuffle exchanges $n <= $cap " +
-          s"($widen RoundRobin widenings, ${n - widen} keyed)")
-      }
-      if (sys.env.contains("PLAN_AUDIT_VERBOSE")) println(plan)
+        // across the box): benign, but counted by the cap. Only the
+        // numbered Exchange nodes' own Arguments lines count; cached-
+        // relation details and the codegen section repeat exchange
+        // text in tree form
+        val n = """\(\d+\) Exchange\s""".r.findAllIn(plan).size
+        val widen = "Arguments: RoundRobinPartitioning".r.findAllIn(plan).size
+        val overCap = c.maxShuffleExchanges.filter(n > _).map(cap =>
+          s"shuffle exchanges $n > $cap ($widen RoundRobin widenings, ${n - widen} keyed)")
+        val failures = missing.map(f => s"missing '$f'") ++
+          present.map(f => s"present '$f'") ++ overCap
+        assert(failures.isEmpty, failures.mkString(s"${c.query}: ", "; ", "\n") + plan)
+      } finally CacheScope.releaseAll()
     }
-    println(s"PlanAudit: ${if (failures == 0) "ALL GREEN" else s"$failures failures"}")
-    spark.stop()
-    if (failures > 0) sys.exit(1)
   }
 }

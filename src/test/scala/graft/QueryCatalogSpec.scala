@@ -1,11 +1,27 @@
 package graft
 
+import org.apache.spark.sql.execution.{ExplainMode, SparkPlan}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.window.WindowExec
+
 /** Contract spec for the driver: every registered query runs at
-  * sf0.001 without error; oracle coverage is declared for every
-  * SQL-expressible query; the flagship entry returns rows.
+  * sf0.001 without error and passes the generic plan sweep; oracle
+  * coverage is declared for every SQL-expressible query; the flagship
+  * entry returns rows.
   */
 class QueryCatalogSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
+
+  /** Window operators with no PARTITION BY anywhere in `p`: its
+    * subqueries, adaptive plans and cached relations included. Such a
+    * window moves its whole input onto one task. */
+  private def unpartitionedWindows(p: SparkPlan): Seq[WindowExec] =
+    p.collectWithSubqueries {
+      case w: WindowExec if w.partitionSpec.isEmpty => Seq(w)
+      case a: AdaptiveSparkPlanExec => unpartitionedWindows(a.inputPlan)
+      case m: InMemoryTableScanExec => unpartitionedWindows(m.relation.cachedPlan)
+    }.flatten
 
   test("catalog names are unique and oracles reference only known queries") {
     val names = QueryCatalog.all.map(_.name)
@@ -46,6 +62,17 @@ class QueryCatalogSpec extends SparkSpec {
   QueryCatalog.all.foreach { q =>
     test(s"${q.name} runs at sf0.001") {
       val df = q.run(spark, sf)
+      // generic plan sweep: NO query may contain a cartesian product or
+      // an unpartitioned window, and only the declared brute-force
+      // baselines may broadcast-NL-join
+      val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+      assert(!plan.contains("CartesianProduct"), s"${q.name}: CartesianProduct\n$plan")
+      assert(!plan.contains("BroadcastNestedLoopJoin") ||
+        PlanAuditSpec.bnljAllowed.contains(q.name),
+        s"${q.name}: undeclared BroadcastNestedLoopJoin\n$plan")
+      val windows = unpartitionedWindows(df.queryExecution.sparkPlan)
+      assert(windows.isEmpty, s"${q.name}: unpartitioned window\n" +
+        windows.map(_.treeString).mkString("\n"))
       val n = df.count()
       // queries that can legitimately be empty on tiny synthetic data
       val mayBeEmpty = Set("q10_set_except", "q16_exact_dup_groups",

@@ -955,6 +955,45 @@ class StreamingSpec extends SparkSpec {
     assert(queue.filterNot(_._3).forall(q => q._4 == 0.0 && q._5.isEmpty))
   }
 
+  test("containment backstop order: consecutive ranks, flagged-first then ratio-desc then id, over several partitions") {
+    import spark.implicits._
+    def s6(w0: Long): Seq[Long] = (0L until 6L).map(w0 + _)
+    // cv has 4 frames, cw 2: an arrival holding k of a video's frames
+    // reads k / (that video's frame count) in the corpus direction
+    val cv = Seq(s6(10), s6(20), s6(30), s6(40))
+    val cw = Seq(s6(50), s6(60))
+    val corpus = (cv.zipWithIndex.map { case (s, i) => ("cv", i, s) } ++
+      cw.zipWithIndex.map { case (s, i) => ("cw", i, s) })
+      .toDF("media_id", "frameIdx", "sig")
+    def novel(k: Int): Seq[Long] = s6(1000L + 10L * k)
+    // (id, flag, frames, expected ratio)
+    val arrivals = Seq(
+      ("a", false, Seq(cv(0)), 0.25), ("b", true, Seq(novel(1)), 0.0),
+      ("c", true, cv.take(3), 0.75), ("d", false, cv.take(2), 0.5),
+      ("e", false, Seq(novel(2)), 0.0), ("f", false, Seq(cw(0)), 0.5),
+      ("g", true, cv.take(2), 0.5), ("h", false, Nil, 0.0),
+      ("i", false, Seq(novel(3)), 0.0), ("j", false, Seq(novel(4)), 0.0),
+      ("k", false, Seq(cw(1), novel(5)), 0.5), ("l", false, Seq(novel(6)), 0.0))
+    val admitted = arrivals.map { case (id, flag, _, _) =>
+        (id, java.sql.Timestamp.valueOf("2026-01-01 10:00:00"), flag) }
+      .toDF("id", "ts", "contains_corpus").repartition(3)
+    assert(admitted.rdd.getNumPartitions >= 2)
+    val sigs = arrivals.flatMap { case (id, _, frames, _) =>
+      frames.zipWithIndex.map { case (s, i) => (id, i, s) } }
+      .toDF("media_id", "frameIdx", "sig")
+    // without coalescing the sort spreads the 12 rows over several
+    // range partitions, so the ranks must continue across them
+    val queue = withSQLConf(
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+      EventStreams.containmentBackstopOrder(admitted, sigs, corpus).collect()
+    }.map(r => (r.getInt(0), r.getString(1), r.getBoolean(3), r.getDouble(4)))
+    assert(queue.map(_._1).toSeq === (1 to arrivals.size))
+    val want = arrivals
+      .map { case (id, flag, _, ratio) => (id, flag, ratio) }
+      .sortBy { case (id, flag, ratio) => (!flag, -ratio, id) }
+    assert(queue.map(q => (q._2, q._3, q._4)).toSeq === want)
+  }
+
   test("streaming relational-index maintenance: stream-static child-store join assigns arrivals ≡ the batch fused assignment; replay suppressed (round 15 — the third-tier cell)") {
     import spark.implicits._
     val dir = java.nio.file.Files
