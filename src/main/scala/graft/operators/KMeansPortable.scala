@@ -1,8 +1,8 @@
 package graft.operators
 
-import graft.queries.Num
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.{RhpExpressions, RhpKernels}
 
@@ -11,34 +11,25 @@ import org.apache.spark.sql.graft.{RhpExpressions, RhpKernels}
   * index (q73, `reference Experimental/vector_search/
   * precompute_similar_tracks.py:116-126` — the coarse-quantizer role)
   * delegate to Spark ML `KMeans`. Spark ML's k-means|| init and
-  * float-order-dependent distance sums are engine-specific; this
-  * trainer replaces BOTH with committed deterministic arithmetic so
-  * the ENTIRE training loop re-derives value-for-value in SQL:
+  * float-order-dependent distance sums are engine-specific; these
+  * trainers replace both with committed deterministic arithmetic, so
+  * the whole training loop re-derives value for value in SQL
+  * ([[oracleSql]], [[twoLevelCtes]]).
   *
-  *   - init: the k lowest-id vectors, in id order (a committed,
-  *     data-derived seeding — no RNG, no engine state);
-  *   - assignment: argmin_j of n2(v) − 2·dot(v,c_j) + n2(c_j), every
-  *     dot/norm an exact-decimal sum (the q71/q76 kernels — sign- and
-  *     value-stable across engines and partitionings), ties to the
-  *     lowest centroid index (the Spark ML rule, the q76 rule);
-  *   - update: per-dimension mean = Σ round(x, 12)::DECIMAL(38,12)
-  *     (exact integer arithmetic, partitioning-proof) cast to double,
-  *     divided by the member count (one shared IEEE division);
-  *   - empty cells keep their previous centroid (deterministic — no
-  *     re-seeding);
-  *   - a FIXED iteration count (no convergence test — a float
-  *     tolerance would re-introduce engine-specific behavior).
+  * Every trainer runs the same Lloyd step ([[lloydOnDriver]] or
+  * [[lloydAsRelation]]), which states the arithmetic once. The
+  * assignment is argmin_j of n2(v) − 2·dot(v,c_j) + n2(c_j) with
+  * every dot an exact-decimal sum (the q71/q76 kernels).
   *
-  * Scale shape — exactly Spark ML's own Lloyd loop: the (k × dim)
-  * centroid matrix broadcasts to executors as literals; assignment is
-  * a zero-shuffle projection; the update is one map-side-combining
-  * aggregation per iteration whose result (≤ k·dim rows) is collected
-  * to the driver to become the next broadcast. Nothing vector-shaped
-  * shuffles; the per-iteration driver exchange is k·dim scalars — the
-  * irreducible state of Lloyd's algorithm, identical at 100 TB.
+  * Scale shape — Spark ML's own Lloyd loop: the (k × dim) centroid
+  * matrix rides to executors as one literal; assignment is a
+  * zero-shuffle projection; the update is one map-side-combining
+  * aggregation per iteration whose ≤ k rows are collected to become
+  * the next literal. The per-iteration driver exchange is k·dim
+  * scalars — the irreducible state of Lloyd's algorithm.
   *
-  * Output: one row per (cell, dimension) of the FINAL centroid
-  * matrix — (cell, d, c, n_members), n_members from the last
+  * [[train]]'s output: one row per (cell, dimension) of the final
+  * centroid matrix — (cell, d, c, n_members), n_members from the last
   * assignment (0 for a cell that ended empty).
   */
 object KMeansPortable {
@@ -190,10 +181,6 @@ object KMeansPortable {
         "pair-work cost is intended.")
   }
 
-  /** Run `iters` Lloyd iterations from the first-k-ids init and
-    * return the final centroid matrix + last-assignment member
-    * counts. Driver-side state is the k×dim matrix only.
-    */
   /** The (id, vec, n2) shaping every trainer and assignment
     * consumes — factored so composed operators (IvfPqPortable) can
     * train from the SAME cached base they assign/encode from instead
@@ -207,47 +194,25 @@ object KMeansPortable {
       .withColumn("n2",
         RhpExpressions.decimalScaledDot(col("vec"), col("vec"))))
 
+  /** Run `iters` Lloyd iterations from the k lowest-id vectors and
+    * return the final centroid matrix with the last assignment's
+    * member counts. Driver state is the k×dim matrix only. */
   def trainModel(vectors: DataFrame, k: Int, iters: Int,
       idCol: String = "vec_id", vecCol: String = "embedding"): Model =
     trainModelFromBase(shapedBase(vectors, idCol, vecCol), k, iters)
 
   /** [[trainModel]] over an already-shaped cached (id, vec, n2)
-    * base — same values, zero re-shaping. */
+    * base — same values, zero re-shaping. `trainer` names the caller
+    * in job descriptions and input errors. */
   private[graft] def trainModelFromBase(base: DataFrame, k: Int,
-      iters: Int): Model = {
+      iters: Int, trainer: String = "trainModel"): Model = {
     require(k > 0 && iters >= 1, s"need k>0, iters>=1; got k=$k iters=$iters")
-    // committed init: the k lowest-id vectors in id order. A bounded
-    // k-row collect (the seed matrix IS driver state under Lloyd).
+    // a bounded k-row collect: the seed matrix IS driver state
     val seeds = base.orderBy(col("id")).select(col("vec")).limit(k)
-      .collect().map(_.getSeq[Double](0).toArray)
+      .collect().map(r => Option(r.getSeq[Double](0)).map(_.toArray).orNull)
     require(seeds.length == k,
       s"k=$k seeds requested but input has only ${seeds.length} vectors")
-    var cents = seeds
-    var counts = Array.fill[Long](k)(0L)
-    var it = 0
-    while (it < iters) {
-      val assigned = assignCells(base, cents)
-      // per-(cell, dim) decimal mean; ≤ k·dim rows — the broadcast
-      // state for the next iteration, collected as Lloyd requires
-      val means = assigned
-        .select(col("cell"), posexplode(col("vec")).as(Seq("d", "x")))
-        .groupBy(col("cell"), col("d"))
-        .agg((sum(Num.round12(col("x")))
-            .cast("double") / count(lit(1))).as("c"),
-          count(lit(1)).as("n"))
-        .collect()
-      val next = cents.map(_.clone())
-      val nextCounts = Array.fill[Long](k)(0L)
-      means.foreach { r =>
-        val cell = r.getInt(0)
-        next(cell)(r.getInt(1)) = r.getDouble(2)
-        nextCounts(cell) = r.getLong(3)
-      }
-      cents = next
-      counts = nextCounts
-      it += 1
-    }
-    Model(cents, counts)
+    lloydOnDriver(trainer, seeds, iters)(assignCells(base, _))
   }
 
   /** [[trainModel]] rendered relationally: one row per (cell, d) of
@@ -320,6 +285,132 @@ object KMeansPortable {
     array_min(distArray(vec, n2, centroids)).getField("j")
 
   // ---------------------------------------------------------------
+  // THE LLOYD STEP, shared by every trainer: [[trainModel]] and
+  // [[trainTwoLevel]] keep centroids on the driver
+  // ([[lloydOnDriver]]); [[trainTwoLevelRelationalFromBase]] and
+  // [[SimilaritySearch.trainThreeLevel]] keep the child level as a
+  // relation ([[lloydAsRelation]]), so children never become driver
+  // state. Each trainer passes its own assignment kernel. The
+  // invariants every trainer inherits from here:
+  //   - seeds are committed: the lowest ids, in id order (per super
+  //     for a child level, [[seedChildren]]) — no RNG, no engine
+  //     state;
+  //   - assignment ties go to the lowest centroid index (each
+  //     kernel's (distance, index) order);
+  //   - update: per-dimension mean = Σ round(x, 12)::DECIMAL(38,12)
+  //     cast to double, divided by the member count — exact integer
+  //     sums, so partitioning cannot move a bit
+  //     ([[VectorAgg.decimalVecMeans]]);
+  //   - an emptied cell keeps its previous centroid (no re-seeding);
+  //   - a fixed iteration count, no convergence test (a float
+  //     tolerance would re-introduce engine-specific behavior);
+  //   - a null, empty or ragged training vector fails the first
+  //     iteration (or the seed collect) with an error naming the
+  //     trainer and the cause.
+  // Every job an iteration launches carries the job description
+  // `lloyd:<trainer>:iter=<i>`.
+  // ---------------------------------------------------------------
+
+  /** Run `body` as Lloyd iteration `it` of `trainer`: its jobs carry
+    * the description `lloyd:<trainer>:iter=<it>` (AQE's stage jobs
+    * inherit it with the caller's local properties), and the
+    * caller's description is restored afterwards. */
+  private def inIteration[T](trainer: String, it: Int)(body: => T): T = {
+    val sc = SparkSession.active.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(s"lloyd:$trainer:iter=$it")
+    try body finally sc.setJobDescription(prev)
+  }
+
+  /** The mean kernel of the step: (cell, __newc, __n) of an assigned
+    * relation carrying cell and vec, every vector checked to be `dim`
+    * wide. */
+  private def cellMeans(trainer: String, assigned: DataFrame,
+      dim: Int): DataFrame =
+    VectorAgg.decimalVecMeans(assigned, trainer, dim)
+
+  /** Driver-state Lloyd: `iters` iterations from `seeds`, each
+    * assigning with `assign(centroids)` (a relation carrying id, cell
+    * and vec) and collecting the ≤ k cell means. Returns the final
+    * centroids and the last iteration's member counts. */
+  private[graft] def lloydOnDriver(trainer: String,
+      seeds: Array[Array[Double]], iters: Int)(
+      assign: Array[Array[Double]] => DataFrame): Model = {
+    require(!seeds.contains(null), s"$trainer: null training vector among the seeds")
+    val dim = seeds(0).length
+    require(dim > 0, s"$trainer: empty training vector among the seeds")
+    var cents = seeds
+    var counts = new Array[Long](seeds.length)
+    for (it <- 0 until iters) {
+      val means = inIteration(trainer, it)(
+        cellMeans(trainer, assign(cents), dim).collect())
+      cents = cents.clone()
+      counts = new Array[Long](seeds.length)
+      means.foreach { r =>
+        cents(r.getInt(0)) = r.getSeq[Double](1).toArray
+        counts(r.getInt(0)) = r.getLong(2)
+      }
+    }
+    Model(cents, counts)
+  }
+
+  /** Relation-state Lloyd over a (super, cell, cvec) child relation:
+    * `iters` iterations from `seeds`, each assigning with
+    * `assign(childRel)` (a relation carrying id, cell and vec) and
+    * updating the children by a left join on the cell means.
+    *
+    * Each iteration's relation is localCheckpoint'd, not merely
+    * cached: a cache keeps the full logical lineage, so after i
+    * iterations every downstream plan embeds an i-deep
+    * self-referencing join tree (measured to blow plan strings past
+    * the driver heap on a 5-iteration structure). The checkpoint
+    * truncates lineage to the materialized ≤ nlist × dim blocks; the
+    * trade is that losing an executor's blocks mid-training re-runs
+    * the training. The resident state is one child relation. */
+  private[graft] def lloydAsRelation(trainer: String, seeds: DataFrame,
+      dim: Int, iters: Int)(assign: DataFrame => DataFrame): DataFrame = {
+    var childRel = graft.CacheScope.trackPersisted(seeds.localCheckpoint())
+    for (it <- 0 until iters) {
+      val prev = childRel
+      childRel = inIteration(trainer, it) {
+        val means = cellMeans(trainer, assign(prev), dim)
+        graft.CacheScope.trackPersisted(
+          prev.join(means, Seq("cell"), "left")
+            .select(col("super"), col("cell"),
+              coalesce(col("__newc"), col("cvec")).as("cvec"))
+            .localCheckpoint()) // eager: forced before prev drops
+      }
+      prev.unpersist()
+    }
+    childRel
+  }
+
+  /** Committed child seeds over a routed (id, vec, super) relation:
+    * per super, its [[allocateChildren]] share of lowest-id members;
+    * cell ids consecutive within supers, supers in index order (an
+    * S-int offset prefix sum — the oracle's `seedids` numbering).
+    * Returns (super, cell, cvec), not yet materialized. */
+  private[graft] def seedChildren(trainer: String, routed: DataFrame,
+      s: Int, nlist: Int): DataFrame = {
+    val counts = routed.groupBy(col("super")).agg(count(lit(1)).as("n"))
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    require(counts.values.sum > 0, s"$trainer needs a non-empty vector set")
+    val ks = allocateChildren(counts, s, nlist)
+    val offsets = ks.scanLeft(0)(_ + _)
+    val spark = routed.sparkSession
+    import spark.implicits._
+    val ksDf = (0 until s).map(i => (i, ks(i), offsets(i)))
+      .toDF("super", "__k", "__off")
+    val w = Window.partitionBy(col("super")).orderBy(col("id"))
+    routed.join(broadcast(ksDf), Seq("super"))
+      .withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") <= col("__k"))
+      .select(col("super"),
+        (col("__off") + col("__rn") - 1).cast("int").as("cell"),
+        col("vec").as("cvec"))
+  }
+
+  // ---------------------------------------------------------------
   // TWO-LEVEL (hierarchical) quantizer — the structure past the
   // flat-argmin ceiling. The flat path's assignment is a single
   // expression over nlist centroid literals: O(N·nlist·dim) work and
@@ -338,9 +429,6 @@ object KMeansPortable {
   // heuristic, not a correctness surface). S = 1 degenerates to the
   // flat argmin EXACTLY (spec-pinned), which is why the gates can
   // stay on the flat path while the scale path changes structure.
-  // Same arithmetic discipline throughout: exact-decimal dots,
-  // round-12 decimal means, ties to the lowest index, empty cells
-  // keep their previous centroid.
   // ---------------------------------------------------------------
 
   /** Two-level quantizer state: S super-centroids (routing layer,
@@ -354,7 +442,7 @@ object KMeansPortable {
 
   /** Largest-remainder proportional child allocation — the ONE site
     * of the two-level family's count arithmetic (the portable
-    * [[trainTwoLevel]] and the native
+    * trainers' [[seedChildren]] and the native
     * [[SimilaritySearch.trainTwoLevelCoarse]] share it, and
     * [[twoLevelCtes]] replays it decision-for-decision in window
     * SQL). Per populated super: base = max(1, ⌊nlist·n/total⌋); a
@@ -406,16 +494,11 @@ object KMeansPortable {
   }
 
   /** Train a two-level quantizer: Lloyd over S = ⌈√nlist⌉ supers,
-    * route, then Lloyd over per-super children (child count
-    * proportional to super population, ≥ 1, largest-remainder so
-    * totals hit `nlist` — a positive remainder is distributed
-    * largest-frac-first, and an over-allocation (many low-population
-    * supers riding the ≥ 1 floor — ADVICE r10) is reclaimed from
-    * donors with base > 1, smallest-frac-first, so Σ children = nlist
-    * exactly whenever supers ≤ nlist (required); a starved super
-    * (population below its allocation) still keeps fewer. Driver
-    * state: (S + nlist)·dim scalars — the Lloyd bound,
-    * corpus-size-independent.
+    * route, then Lloyd over per-super children seeded by
+    * [[seedChildren]] (child count proportional to super population,
+    * ≥ 1, Σ = nlist whenever supers ≤ nlist; a starved super keeps
+    * fewer). Driver state: (S + nlist)·dim scalars, independent of
+    * corpus size.
     */
   def trainTwoLevel(vectors: DataFrame, nlist: Int, iters: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
@@ -427,146 +510,59 @@ object KMeansPortable {
     * base — same values, zero re-shaping (the IvfPqPortable share). */
   private[graft] def trainTwoLevelFromBase(base: DataFrame, nlist: Int,
       iters: Int, supers: Int = 0): TwoLevelModel = {
-    require(nlist > 0 && iters >= 1,
-      s"need nlist>0, iters>=1; got nlist=$nlist iters=$iters")
-    require(supers >= 0, s"supers must be >= 0 (0 = auto ⌈√nlist⌉)")
-    // supers = 1 degenerates to the flat trainModel EXACTLY (same
-    // seeds, same argmin, same means — spec-pinned), which is what
-    // lets the gates stay flat while the scale path goes two-level
-    val s = if (supers > 0) supers else defaultSupers(nlist)
-    // the reclaim guarantee below (Σ children = nlist) needs every
-    // populated super's ≥1 floor to fit inside nlist
-    require(s <= nlist, s"supers=$s must not exceed nlist=$nlist")
-    val superModel = trainModelFromBase(base, k = s, iters = iters)
-    val routed = graft.CacheScope.track(
-      base.withColumn("super", cellExpr(col("vec"), col("n2"),
-        superModel.centroids)))
-    // proportional child allocation (largest remainder, each
-    // populated super >= 1, capped at the super's population)
-    val counts = routed.groupBy(col("super")).agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    require(counts.values.sum > 0, "trainTwoLevel needs a non-empty vector set")
-    val ks = allocateChildren(counts, s, nlist)
-    // committed seeds: per super, its ks(i) lowest-id members. One
-    // bounded collect of <= nlist (id, super, vec) rows.
-    val ksDf = {
-      val spark = base.sparkSession
-      import spark.implicits._
-      (0 until s).map(i => (i, ks(i))).toDF("super", "__k")
-    }
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("super")).orderBy(col("id"))
-    val seedRows = routed
-      .join(broadcast(ksDf), Seq("super"))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= col("__k"))
-      .select(col("super"), col("id"), col("vec"))
-      .collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
-      .sortBy(t => (t._1, t._2))
-    // global child ids: consecutive within supers, supers in order
-    val groups = Array.fill(s)(scala.collection.mutable.ArrayBuffer[Int]())
-    val children = scala.collection.mutable.ArrayBuffer[Array[Double]]()
-    seedRows.foreach { case (sup, _, v) =>
-      groups(sup) += children.length
-      children += v
-    }
-    var cents = children.toArray
-    val groupsArr = groups.map(_.toArray)
-    var it = 0
-    while (it < iters) {
-      val assigned = assignChildren(routed, cents, groupsArr)
-      val means = assigned
-        .select(col("cell"), posexplode(col("vec")).as(Seq("d", "x")))
-        .groupBy(col("cell"), col("d"))
-        .agg((sum(Num.round12(col("x")))
-            .cast("double") / count(lit(1))).as("c"))
-        .collect()
-      val next = cents.map(_.clone())
-      means.foreach(r => next(r.getInt(0))(r.getInt(1)) = r.getDouble(2))
-      cents = next
-      it += 1
-    }
-    TwoLevelModel(superModel.centroids, cents, groupsArr)
+    val trainer = "trainTwoLevel"
+    val (sup, routed) = routeToSupers(trainer, base, nlist, iters, supers)
+    // one bounded collect of ≤ nlist seed rows, in cell order
+    val seeds = seedChildren(trainer, routed, sup.length, nlist).collect()
+      .sortBy(_.getInt(1))
+    val bySuper = seeds.groupBy(_.getInt(0))
+    val groups = Array.tabulate(sup.length)(i =>
+      bySuper.get(i).fold(Array.empty[Int])(_.map(_.getInt(1))))
+    val m = lloydOnDriver(trainer, seeds.map(_.getSeq[Double](2).toArray),
+      iters)(assignChildren(routed, _, groups))
+    TwoLevelModel(sup, m.centroids, groups)
   }
 
-  /** Two-level training with the CHILD LEVEL AS A RELATION under the
-    * portable decimal arithmetic (round 15 — VERDICT r14 item 1): the
-    * oracle twin of [[SimilaritySearch.trainThreeLevel]]'s structure.
-    * Supers, routing, allocation and committed seeds are
-    * [[trainTwoLevelFromBase]]'s exactly (same one-site arithmetic);
-    * the Lloyd loop's assignment and means run RELATIONALLY — a
-    * super-keyed equi-join argmin ([[assignChildrenRelational]]) and
-    * a per-(cell, dim) decimal mean re-assembled as an array column —
-    * so the child centroids never become driver or broadcast state.
-    * Value-identical to [[trainTwoLevelFromBase]] by the shared
-    * (dist, j) total order and decimal mean arithmetic (spec-pinned,
+  /** Two-level training with the child level as a relation: the
+    * portable twin of [[SimilaritySearch.trainThreeLevel]]'s
+    * structure. Supers, routing and seeds are
+    * [[trainTwoLevelFromBase]]'s; the loop assigns through the
+    * super-keyed equi-join argmin ([[assignChildrenRelational]]), so
+    * the child centroids never become driver or broadcast state.
+    * Value-identical to [[trainTwoLevelFromBase]] (spec-pinned,
     * KMeansPortableSpec), which is what lets [[twoLevelCtes]]'s
-    * existing oracle text re-derive the RELATIONAL trainer unchanged:
-    * the q104 gate runs this loop against DuckDB end-to-end.
-    *
-    * Per-iteration localCheckpoint truncates lineage (the
-    * [[SimilaritySearch.trainThreeLevel]] discipline and its
-    * documented fault-tolerance trade); resident state is ONE child
-    * relation (≤ nlist × dim) plus the S·dim supers.
+    * oracle text re-derive this trainer unchanged: the q104 gate.
     */
   private[graft] def trainTwoLevelRelationalFromBase(base: DataFrame,
       nlist: Int, iters: Int, supers: Int = 0):
       SimilaritySearch.RelationalCoarse = {
+    val trainer = "trainTwoLevelRelational"
+    val (sup, routed) = routeToSupers(trainer, base, nlist, iters, supers)
+    val childRel = lloydAsRelation(trainer,
+      seedChildren(trainer, routed, sup.length, nlist), sup(0).length,
+      iters)(assignChildrenRelational(routed, _))
+    SimilaritySearch.RelationalCoarse(sup, childRel)
+  }
+
+  /** The portable two-level trainers' first level: S supers by the
+    * flat Lloyd loop, and the base routed to them by [[cellExpr]]
+    * (adds `super`). */
+  private def routeToSupers(trainer: String, base: DataFrame,
+      nlist: Int, iters: Int,
+      supers: Int): (Array[Array[Double]], DataFrame) = {
     require(nlist > 0 && iters >= 1,
       s"need nlist>0, iters>=1; got nlist=$nlist iters=$iters")
+    require(supers >= 0, s"supers must be >= 0 (0 = auto ⌈√nlist⌉)")
+    // supers = 1 degenerates to the flat trainModel EXACTLY (same
+    // seeds, same argmin, same means — spec-pinned)
     val s = if (supers > 0) supers else defaultSupers(nlist)
+    // allocateChildren's Σ children = nlist needs every populated
+    // super's ≥1 floor to fit inside nlist
     require(s <= nlist, s"supers=$s must not exceed nlist=$nlist")
-    val superModel = trainModelFromBase(base, k = s, iters = iters)
-    val routed = graft.CacheScope.track(
-      base.withColumn("super", cellExpr(col("vec"), col("n2"),
-        superModel.centroids)))
-    val counts = routed.groupBy(col("super")).agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    require(counts.values.sum > 0,
-      "trainTwoLevelRelational needs a non-empty vector set")
-    val ks = allocateChildren(counts, s, nlist)
-    val offsets = ks.scanLeft(0)(_ + _)
-    val ksDf = {
-      val spark = base.sparkSession
-      import spark.implicits._
-      (0 until s).map(i => (i, ks(i), offsets(i)))
-        .toDF("super", "__k", "__off")
-    }
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("super")).orderBy(col("id"))
-    // committed seeds AS A RELATION: per super its ks(i) lowest-id
-    // members, global cell ids consecutive within supers via the
-    // S-int offset prefix sum — the seedids CTE's numbering, zero
-    // collect
-    var childRel = graft.CacheScope.trackPersisted(
-      routed.join(broadcast(ksDf), Seq("super"))
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") <= col("__k"))
-        .select(col("super"),
-          (col("__off") + col("__rn") - 1).cast("int").as("cell"),
-          col("vec").as("cvec"))
-        .localCheckpoint())
-    var it = 0
-    while (it < iters) {
-      val assigned = assignChildrenRelational(routed, childRel)
-      // the shared decimal-parity buffer mean (round 15): bit-equal
-      // to the posexplode (cell, d) decimal aggregate — the q104
-      // oracle re-derives the SAME values — at the bounded-buffer
-      // cost (VectorAgg.decimalVecMeans, measured 14× at dim 1024)
-      val means = VectorAgg.decimalVecMeans(assigned)
-      val prev = childRel
-      // left join + coalesce: an emptied cell keeps its previous
-      // centroid — trainTwoLevelFromBase's clone-then-update rule
-      childRel = graft.CacheScope.trackPersisted(
-        prev.join(means, Seq("cell"), "left")
-          .select(col("super"), col("cell"),
-            coalesce(col("__newc"), col("cvec")).as("cvec"))
-          .localCheckpoint())
-      prev.unpersist()
-      it += 1
-    }
-    SimilaritySearch.RelationalCoarse(superModel.centroids, childRel)
+    val sup = trainModelFromBase(base, s, iters, s"$trainer/supers")
+      .centroids
+    (sup, graft.CacheScope.track(
+      base.withColumn("super", cellExpr(col("vec"), col("n2"), sup))))
   }
 
   /** The super-restricted child argmin as a RELATIONAL equi-join —

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.queries.Num
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -243,7 +244,7 @@ object Sampling {
     val counts = df.groupBy(col(domainCol).as("__dom"))
       .agg(count(lit(1)).as("__cnt"))
     val weighted = counts.withColumn("__w",
-      round(sqrt(col("__cnt").cast("double")) * lit(1e6)).cast(dec38))
+      Num.dec(round(sqrt(col("__cnt").cast("double")) * lit(1e6)), 38, 0))
     val s = weighted.agg(sum(col("__w")).cast(dec38).as("__s"))
     // declared 1-row scalar attaches (the q40/q46 crossJoin shape)
     val t = weighted.crossJoin(broadcast(s))

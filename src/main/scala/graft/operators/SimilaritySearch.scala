@@ -1454,7 +1454,7 @@ object SimilaritySearch {
     * populated supers only, so both the encode/assign map and the
     * probe's equi-join see the same domain and no vector is ever
     * cell-less. O(S + nlist/S) per row vs the flat O(nlist). */
-  private def nearestChild(v: Array[Double], c: TwoLevelCoarse): Int = {
+  private[graft] def nearestChild(v: Array[Double], c: TwoLevelCoarse): Int = {
     val g = c.groups(routeSuper(v, c))
     var bj = g(0); var bd = Double.MaxValue
     var k = 0
@@ -1670,64 +1670,62 @@ object SimilaritySearch {
   final case class RelationalCoarse(supers: Array[Array[Double]],
       childRel: DataFrame)
 
-  /** THREE-LEVEL training (round 14 — VERDICT r13 item 4): the
-    * two-level trainer generalized so the child level is NEVER
-    * driver-resident — the training loop for the regime past the
+  /** THREE-LEVEL training: the two-level trainer with the child
+    * level never driver-resident — the trainer past the
     * [[KMeansPortable.MaxAutoNlistTwoLevel]] clamp (128 MB of child
-    * centroids at dim 64; the next decade is GB), where round 13 left
-    * assignment measured ([[assignCellsViaRelationFused]]) but
-    * training documented out of scope. The loop IS that assignment
-    * join, used as Lloyd's assignment step:
+    * centroids at dim 64; the next decade is GB).
     *
-    *   1. supers: the SAME ML fit as [[trainTwoLevelCoarse]]'s super
-    *      stage ([[trainSupersML]] — one site, the parity anchor);
-    *      driver state S·dim, always tiny.
-    *   2. route + count + allocate: the shared largest-remainder rule
-    *      ([[KMeansPortable.allocateChildren]] — ONE arithmetic for
-    *      every trainer in the family); driver state S longs.
-    *   3. seed children AS A RELATION: each super's ks(i) lowest-id
-    *      members (the committed-seed discipline of
-    *      [[KMeansPortable.trainTwoLevelFromBase]]), global cell ids
-    *      consecutive within supers via an S-int offset prefix-sum —
-    *      a window rank, zero collect.
-    *   4. Lloyd iterations: assignment via the FUSED cogroup
-    *      ([[assignPreRoutedFused]] — routing is constant across
-    *      iterations, so it is paid once in step 2's relation), then
-    *      per-(cell, dim) decimal means re-assembled relationally;
-    *      an emptied cell keeps its previous centroid (the portable
-    *      trainer's rule). Each iteration's childRel is forced and
-    *      its predecessor unpersisted — the resident state is ONE
-    *      child relation, nothing driver-sized anywhere.
+    *   1. supers: the same ML fit as [[trainTwoLevelCoarse]]'s super
+    *      stage ([[trainSupersML]]); driver state S·dim.
+    *   2. route once by [[routeAmong]] (cells never change super, so
+    *      routing is constant across iterations).
+    *   3. seeds and Lloyd iterations: [[KMeansPortable.seedChildren]]
+    *      and the relation-state step
+    *      [[KMeansPortable.lloydAsRelation]], assigning through the
+    *      fused cogroup ([[assignPreRoutedFused]]).
     *
-    * `broadcastAssign = true` runs the SAME loop with the round-12
-    * broadcast assignment kernel ([[nearestChild]]'s fused map over
-    * collected children) — the fast path BELOW the clamp and the
-    * parity instrument: both assignment kernels are value-identical
-    * (the round-13 parity pin), so the two trainers' centroids are
-    * equal BY INDUCTION over iterations, and the spec asserts it.
     * Training on a `trainFraction` sample mirrors the family's
     * convention; the returned childRel serves full-corpus assignment.
     */
   def trainThreeLevel(vectors: DataFrame, nlist: Int,
       vecCol: String = "embedding", seed: Long = 42L,
       trainFraction: Double = 1.0, supers: Int = 0, iters: Int = 5,
-      idCol: String = "vec_id",
-      broadcastAssign: Boolean = false): RelationalCoarse = {
+      idCol: String = "vec_id"): RelationalCoarse =
+    trainThreeLevelWith(vectors, nlist, vecCol, seed, trainFraction,
+      supers, iters, idCol)((_, routed, childRel) =>
+      assignPreRoutedFused(routed, childRel))
+
+  /** [[trainThreeLevel]] with its Lloyd assignment kernel as an
+    * argument: `assign(supers, routed, childRel)` maps the routed
+    * (id, vec, super) relation and the current (super, cell, cvec)
+    * children to (id, cell, vec). */
+  private[graft] def trainThreeLevelWith(vectors: DataFrame, nlist: Int,
+      vecCol: String, seed: Long, trainFraction: Double, supers: Int,
+      iters: Int, idCol: String)(
+      assign: (Array[Array[Double]], DataFrame, DataFrame) => DataFrame)
+      : RelationalCoarse = {
+    val trainer = "trainThreeLevel"
     val spark = vectors.sparkSession
     import spark.implicits._
     require(nlist > 0 && iters >= 1,
       s"need nlist > 0, iters >= 1; got nlist=$nlist iters=$iters")
     val s = if (supers > 0) supers else KMeansPortable.defaultSupers(nlist)
     require(s <= nlist, s"supers=$s must not exceed nlist=$nlist")
-    val feat0 = vectors.select(col(idCol).cast("long").as("id"),
-      col(vecCol).cast("array<double>").as("vec"))
-      .filter(col("vec").isNotNull)
-    val feat = graft.CacheScope.track(
-      if (trainFraction >= 1.0) feat0
-      else feat0.sample(trainFraction, seed))
-    val dimRow = feat.select(size(col("vec"))).limit(1).collect()
-    require(dimRow.nonEmpty, "trainThreeLevel: empty or all-null vector set")
-    val dim = dimRow(0).getInt(0)
+    val feat = graft.CacheScope.track(vectors
+      .select(col(idCol).cast("long").as("id"),
+        col(vecCol).cast("array<double>").as("vec"))
+      .transform(f => if (trainFraction >= 1.0) f
+        else f.sample(trainFraction, seed)))
+    // the ML super fit would fail on a null or ragged vector without
+    // naming its cause: check the input's shape first, in one pass
+    val shape = feat.agg(count(lit(1)), count(col("vec")),
+      min(size(col("vec"))), max(size(col("vec")))).head()
+    require(shape.getLong(0) > 0, s"$trainer: empty vector set")
+    require(shape.getLong(0) == shape.getLong(1),
+      s"$trainer: ${shape.getLong(0) - shape.getLong(1)} null training vectors")
+    val dim = shape.getInt(2)
+    require(dim > 0 && dim == shape.getInt(3),
+      s"$trainer: ragged or empty training vectors, widths $dim to ${shape.getInt(3)}")
     val superCents = trainSupersML(feat.select(col("vec").as("v")),
       s, dim, seed)
     val scB = spark.sparkContext.broadcast(superCents)
@@ -1736,77 +1734,9 @@ object SimilaritySearch {
       feat.as[(Long, Array[Double])]
         .map { case (id, v) => (id, v, routeAmong(v, scB.value, allIdx)) }
         .toDF("id", "vec", "super"))
-    val counts = routed.groupBy(col("super")).agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    require(counts.values.sum > 0,
-      "trainThreeLevel needs a non-empty vector set")
-    val ks = KMeansPortable.allocateChildren(counts, s, nlist)
-    val offsets = ks.scanLeft(0)(_ + _)
-    val ksDf = (0 until s).map(i => (i, ks(i), offsets(i)))
-      .toDF("super", "__k", "__off")
-    val w = Window.partitionBy(col("super")).orderBy(col("id"))
-    // Each iteration's child relation is eagerly localCheckpoint'd,
-    // NOT merely cached: a cache keeps the full logical lineage, so
-    // after i iterations every downstream plan (the next assignment
-    // cogroup, every probe of the trained structure) embeds an
-    // i-deep self-referencing join tree — measured to blow plan
-    // STRINGS past the driver heap on a 5-iteration structure the
-    // moment a recall walk builds a few plans over it. The
-    // checkpoint truncates lineage to the materialized blocks
-    // (bounded: the ≤ nlist × dim relation this tier is about).
-    // Fault-tolerance trade, documented: losing an executor's
-    // checkpoint blocks mid-TRAINING re-runs the training — Lloyd
-    // state is cheap to rebuild and nothing downstream persists it.
-    var childRel = graft.CacheScope.trackPersisted(
-      routed.join(broadcast(ksDf), Seq("super"))
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") <= col("__k"))
-        .select(col("super"),
-          (col("__off") + col("__rn") - 1).cast("int").as("cell"),
-          col("vec").as("cvec"))
-        .localCheckpoint())
-    var it = 0
-    while (it < iters) {
-      val assigned =
-        if (!broadcastAssign) assignPreRoutedFused(routed, childRel)
-        else {
-          // the driver-resident twin: only legal below the clamp —
-          // the collect here is exactly the state the relational
-          // path exists to avoid
-          val rows = childRel.select(col("cell"), col("super"),
-              col("cvec")).collect()
-            .map(r => (r.getInt(0), r.getInt(1),
-              r.getSeq[Double](2).toArray))
-            .sortBy(_._1)
-          val groups = Array.fill(s)(
-            scala.collection.mutable.ArrayBuffer[Int]())
-          rows.foreach { case (c, sup, _) => groups(sup) += c }
-          val coarse = TwoLevelCoarse(superCents, rows.map(_._3),
-            groups.map(_.toArray))
-          val cB = spark.sparkContext.broadcast(coarse)
-          routed.select(col("id"), col("vec"))
-            .as[(Long, Array[Double])]
-            .map { case (id, v) => (id, nearestChild(v, cB.value), v) }
-            .toDF("id", "cell", "vec")
-        }
-      // the mean update runs as the 128-bit decimal-parity BUFFER
-      // aggregator (round 15 — VERDICT r14 item 2): bit-identical to
-      // the posexplode (cell, d)-keyed decimal aggregate it replaces
-      // (VectorAgg.decimalVecMeans parity spec), but one bounded
-      // O(dim) buffer per cell instead of rows×dim exploded rows
-      // through a nlist×dim-group hash aggregate — measured 14.0×
-      // at the reference dim (ScaleProbe `relmeans`, dim 1024,
-      // nlist 2^19, 1M rows: 459.1 s → 32.7 s; SCALE.md round 15)
-      val means = VectorAgg.decimalVecMeans(assigned)
-      val prev = childRel
-      childRel = graft.CacheScope.trackPersisted(
-        prev.join(means, Seq("cell"), "left")
-          .select(col("super"), col("cell"),
-            coalesce(col("__newc"), col("cvec")).as("cvec"))
-          .localCheckpoint()) // eager: forced before prev drops
-      prev.unpersist()
-      it += 1
-    }
+    val childRel = KMeansPortable.lloydAsRelation(trainer,
+      KMeansPortable.seedChildren(trainer, routed, s, nlist), dim,
+      iters)(assign(superCents, routed, _))
     RelationalCoarse(superCents, childRel)
   }
 

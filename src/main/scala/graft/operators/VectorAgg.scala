@@ -73,36 +73,34 @@ object VectorAgg {
   case class DecBuf(var hi: Array[Long], var lo: Array[Long],
       var n: Long)
 
-  /** Element-wise vector mean under EXACT DECIMAL-SUM PARITY (round
-    * 15 — VERDICT r14 item 2): bit-for-bit the value of the
-    * relational Lloyd mean
-    * `sum(round(x, 12).cast(decimal(38,12))).cast(double) / count`
-    * but as ONE bounded-buffer aggregation per cell instead of a
-    * rows×dim posexplode into a (cell, dim)-keyed hash aggregate —
-    * at the reference dim (1024, chunk_store.py:15-17) and nlist =
-    * 2^19 the relational form pushes ~10⁹ exploded rows through a
-    * ~5×10⁸-group aggregate per Lloyd iteration, and this buffer form
-    * is what [[SimilaritySearch.trainThreeLevel]] uses instead
-    * (measured split in SCALE.md round 15).
+  /** A cell's exact-decimal mean and its member count. */
+  case class CellMean(mean: Array[Double], n: Long)
+
+  /** Element-wise vector mean under exact decimal-sum parity: the
+    * value of `sum(round(x, 12).cast(decimal(38,12))).cast(double) /
+    * count` per dimension, as one bounded O(dim) buffer per cell
+    * instead of rows×dim exploded rows through a (cell, d)-keyed
+    * aggregate.
     *
-    * Parity construction, element by element:
+    * Element by element:
     *   1. `round(x, 12)` then its decimal(38,12) cast —
-    *      [[RhpKernels.round12]], Spark's Round then Cast, as an
-    *      exact integer in 10⁻¹² units
-    *      (elements past ~9.2×10⁶ in magnitude would overflow the
-    *      scaled long and throw loudly — far outside any embedding
-    *      domain);
-    *   2. exact 128-bit integer accumulation of those units (decimal
-    *      sums are exact integer arithmetic — partitioning-proof by
-    *      construction, like the decimal aggregate it replaces);
-    *   3. finish: reconstruct the exact BigDecimal (scale 12), take
-    *      `.doubleValue` (what decimal→double casting does), divide
-    *      by the count (one shared IEEE division).
-    * Parity with the posexplode aggregation is spec-pinned
-    * (OperatorsSpec/SimilaritySpec) — including through the
-    * trainThreeLevel twin-parity induction. */
-  class DecimalVecMeanAggregator
-      extends Aggregator[(Int, Array[Double]), DecBuf, Array[Double]] {
+    *      [[RhpKernels.round12]], as an exact integer in 10⁻¹² units
+    *      (elements past ~9.2×10⁶ in magnitude overflow the scaled
+    *      long and throw);
+    *   2. exact 128-bit integer accumulation of those units, so the
+    *      sum is partitioning-proof;
+    *   3. finish: the exact BigDecimal (scale 12) to double, divided
+    *      by the count.
+    * Parity with the relational decimal aggregate is spec-pinned
+    * (VectorAggSpec).
+    *
+    * Every vector must be `dim` wide (`dim` = 0: as wide as the
+    * cell's first); a null, empty or other-width vector fails with an
+    * error that starts with `site`. The check runs here, not as a
+    * column expression, so the generated code does not depend on
+    * `dim`. */
+  class DecimalVecMeanAggregator(site: String, dim: Int)
+      extends Aggregator[(Int, Array[Double]), DecBuf, CellMean] {
     private def add128(b: DecBuf, d: Int, s: Long): Unit = {
       val sum = b.lo(d) + s
       val carry = ((b.lo(d) & s) | ((b.lo(d) | s) & ~sum)) >>> 63
@@ -112,21 +110,17 @@ object VectorAgg {
     def zero: DecBuf = DecBuf(Array.empty, Array.empty, 0L)
     def reduce(b: DecBuf, row: (Int, Array[Double])): DecBuf = {
       val v = row._2
-      // LOUD on degenerate shapes (round-15 review): the posexplode
-      // aggregate this replaces computes per-(cell, d) counts, so a
-      // ragged corpus would silently diverge from it here (one
-      // global n per cell), and an all-empty cell would emit an
-      // empty mean where the relational form emits no row — both
-      // fail instead; uniform non-empty width is every caller's
-      // contract (the checkedBase discipline)
+      // one count per cell is only a per-dimension count when every
+      // vector has the cell's width
       require(v != null && v.length > 0,
-        s"decimalVecMeans: null/empty vector in cell ${row._1}")
-      val buf = if (b.n == 0L && b.hi.isEmpty)
-        DecBuf(new Array[Long](v.length), new Array[Long](v.length), 0L)
-      else b
+        s"$site: null or empty vector in cell ${row._1}")
+      val buf = if (b.n == 0L && b.hi.isEmpty) {
+        val w = if (dim > 0) dim else v.length
+        DecBuf(new Array[Long](w), new Array[Long](w), 0L)
+      } else b
       require(v.length == buf.lo.length,
-        s"decimalVecMeans: ragged vector set in cell ${row._1} — " +
-          s"${v.length} vs ${buf.lo.length}")
+        s"$site: ragged vector in cell ${row._1} has width ${v.length}, " +
+          s"expected ${buf.lo.length}")
       var d = 0
       while (d < v.length) { add128(buf, d, RhpKernels.round12(v(d))); d += 1 }
       buf.n += 1
@@ -137,7 +131,7 @@ object VectorAgg {
       else if (c.n == 0L) a
       else {
         require(a.lo.length == c.lo.length,
-          s"decimalVecMeans: ragged partitions — ${a.lo.length} vs " +
+          s"$site: ragged partitions — ${a.lo.length} vs " +
             s"${c.lo.length}")
         var d = 0
         while (d < a.lo.length) {
@@ -152,7 +146,7 @@ object VectorAgg {
         a
       }
     }
-    def finish(b: DecBuf): Array[Double] = {
+    def finish(b: DecBuf): CellMean = {
       if (b.n == 0L) return null
       val out = new Array[Double](b.lo.length)
       var d = 0
@@ -163,27 +157,28 @@ object VectorAgg {
         out(d) = new java.math.BigDecimal(big, 12).doubleValue() / b.n
         d += 1
       }
-      out
+      CellMean(out, b.n)
     }
     def bufferEncoder: Encoder[DecBuf] = Encoders.product[DecBuf]
-    def outputEncoder: Encoder[Array[Double]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Double]]()
+    def outputEncoder: Encoder[CellMean] = Encoders.product[CellMean]
   }
 
   /** Per-cell decimal-parity mean over a (cell, vec) relation — the
     * [[DecimalVecMeanAggregator]] behind a DataFrame door: returns
-    * (cell, mean). The Lloyd mean-update kernel for the relational
-    * training tier. */
-  def decimalVecMeans(assigned: DataFrame, cellCol: String = "cell",
-      vecCol: String = "vec"): DataFrame = {
+    * (cell, __newc mean, __n member count). The Lloyd mean kernel of
+    * every k-means trainer ([[KMeansPortable]]); `site` and `dim` as
+    * in [[DecimalVecMeanAggregator]]. */
+  def decimalVecMeans(assigned: DataFrame, site: String = "decimalVecMeans",
+      dim: Int = 0): DataFrame = {
     val spark = assigned.sparkSession
     import spark.implicits._
-    assigned.select(col(cellCol).cast("int"),
-        col(vecCol).cast("array<double>"))
+    assigned.select(col("cell").cast("int"), col("vec").cast("array<double>"))
       .as[(Int, Array[Double])]
       .groupByKey(_._1)
-      .agg(new DecimalVecMeanAggregator().toColumn.name("__newc"))
-      .toDF(cellCol, "__newc")
+      .agg(new DecimalVecMeanAggregator(site, dim).toColumn.name("__m"))
+      .toDF("cell", "__m")
+      .select(col("cell"), col("__m.mean").as("__newc"),
+        col("__m.n").as("__n"))
   }
 
   /** Pool chunk rows (idCol, vecCol ARRAY<numeric>) → one row per id

@@ -30,7 +30,8 @@ import scala.util.control.NonFatal
   * it, so [[measure]] also runs inside a shared session. A failing
   * query reports its cause in `error` and the sweep goes on; the last
   * rep of each query also prints one line per job (start offset,
-  * duration, tasks, call site).
+  * duration, tasks, call site, and the job description an operator
+  * set, such as `lloyd:trainModel:iter=0`).
   *
   * Run: sbt "runMain graft.tools.Profile <sfDir> [reps] [qNN,…]"
   * (reps default 2: cold then warm; the prefix list selects queries
@@ -38,8 +39,10 @@ import scala.util.control.NonFatal
   * [[graft.SessionTuning.session]] with SPARK_GRAFT_CPUS cores.
   */
 object Profile {
-  /** One finished job: epoch-millisecond interval, tasks, call site. */
-  final case class Job(id: Int, start: Long, end: Long, tasks: Int, site: String)
+  /** One finished job: epoch-millisecond interval, tasks, call site,
+    * and its `spark.job.description` ("" when none was set). */
+  final case class Job(id: Int, start: Long, end: Long, tasks: Int, site: String,
+      desc: String)
 
   /** One measurement of one query. `metrics` holds the dotted fields
     * in print order; `rows` is -1 when the query failed. */
@@ -68,7 +71,7 @@ object Profile {
   }
 
   private final class Recorder(spark: SparkSession) {
-    private val started = mutable.Map.empty[Int, (Long, Int, String)]
+    private val started = mutable.Map.empty[Int, (Long, Int, String, String)]
     val jobs = mutable.ArrayBuffer.empty[Job]
     var tasks, written, read, spilled = 0L
     var analysisS, optimizerS, physicalS = 0.0
@@ -86,11 +89,14 @@ object Profile {
       override def onJobStart(e: SparkListenerJobStart): Unit = Recorder.this.synchronized {
         // the result stage (highest id) is named after the job's call site
         val site = if (e.stageInfos.isEmpty) "?" else e.stageInfos.maxBy(_.stageId).name
-        started(e.jobId) = (e.time, e.stageInfos.map(_.numTasks).sum, site)
+        val desc = Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse("")
+        started(e.jobId) = (e.time, e.stageInfos.map(_.numTasks).sum, site, desc)
       }
       override def onJobEnd(e: SparkListenerJobEnd): Unit = Recorder.this.synchronized {
-        started.remove(e.jobId).foreach { case (t0, n, site) =>
-          jobs += Job(e.jobId, t0, e.time, n, site)
+        started.remove(e.jobId).foreach { case (t0, n, site, desc) =>
+          jobs += Job(e.jobId, t0, e.time, n, site, desc)
         }
       }
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
@@ -192,7 +198,8 @@ object Profile {
           val base = r.jobs.headOption.map(_.start).getOrElse(0L)
           r.jobs.foreach { j =>
             println(f"  job ${j.id}%4d +${(j.start - base) / 1e3}%8.3fs " +
-              f"dur ${(j.end - j.start) / 1e3}%7.3fs tasks ${j.tasks}%5d  ${j.site}")
+              f"dur ${(j.end - j.start) / 1e3}%7.3fs tasks ${j.tasks}%5d  ${j.site}" +
+              (if (j.desc.isEmpty) "" else s"  [${j.desc}]"))
           }
         }
       }

@@ -1,8 +1,6 @@
 package graft.tools
 
-import graft.queries.Num
-import org.apache.spark.sql.functions.{array_sort, col, collect_list,
-  count, expr, lit, posexplode, struct, sum, transform}
+import org.apache.spark.sql.functions.{col, expr}
 
 /** Parameterized scaling probe for the SemDeDup pipeline — the
   * SCALE.md evidence runner for the one knob the fixed-parameter q80
@@ -275,50 +273,6 @@ object ScaleProbe {
           f"(${rows / e1}%.0f rows/s — cogroup by super, " +
           "tight-loop argmin)")
       }
-      spark.stop()
-      return
-    }
-    // relmeans = the Lloyd MEAN-UPDATE kernel isolated at the
-    //         reference dim (round 15 — VERDICT r14 item 2): the
-    //         posexplode → (cell, d)-keyed decimal aggregate →
-    //         re-assembly (the r14 relational form) vs the
-    //         decimal-parity 128-bit buffer aggregator
-    //         (VectorAgg.decimalVecMeans) over the same synthetic
-    //         (cell, vec) relation — args(2) dim (default 1024),
-    //         args(3) rows (default 1M), args(4) log2(nlist)
-    //         (default 19). The winner is what trainThreeLevel runs.
-    if (args(1) == "relmeans") {
-      val dim = if (args.length > 2) args(2).toIntOption.getOrElse(1024) else 1024
-      val rows = if (args.length > 3) args(3).toLong else 1000000L
-      val nlist = 1 << (if (args.length > 4)
-        args(4).toIntOption.getOrElse(19) else 19)
-      val assigned = graft.CacheScope.track(spark.range(rows)
-        .select((col("id") % nlist).cast("int").as("cell"),
-          expr(s"transform(sequence(0, ${dim - 1}), " +
-            "d -> cos((id + 2) * (d + 5)))").as("vec")))
-      graft.Measure.force(assigned)
-      println(s"[relmeans] dim=$dim rows=$rows nlist=$nlist")
-      val t0 = System.nanoTime()
-      val slow = assigned
-        .select(col("cell"), posexplode(col("vec")).as(Seq("d", "x")))
-        .groupBy(col("cell"), col("d"))
-        .agg((sum(Num.round12(col("x")))
-            .cast("double") / count(lit(1))).as("c"))
-        .groupBy(col("cell"))
-        .agg(array_sort(collect_list(struct(col("d"), col("c"))))
-          .as("ps"))
-        .select(col("cell"),
-          transform(col("ps"), p => p.getField("c")).as("m"))
-      val n0 = graft.Measure.force(slow)
-      val e0 = (System.nanoTime() - t0) / 1e9
-      println(f"[relmeans] posexplode (cell,d) aggregate: $n0 cells in $e0%.1fs")
-      val t1 = System.nanoTime()
-      val fast = graft.operators.VectorAgg.decimalVecMeans(assigned)
-      val n1 = graft.Measure.force(fast)
-      val e1 = (System.nanoTime() - t1) / 1e9
-      println(f"[relmeans] 128-bit buffer aggregator:     $n1 cells in $e1%.1fs " +
-        f"(${e0 / e1}%.1fx)")
-      graft.CacheScope.releaseAll(blocking = true)
       spark.stop()
       return
     }

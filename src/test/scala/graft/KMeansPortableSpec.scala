@@ -211,6 +211,55 @@ class KMeansPortableSpec extends SparkSpec {
     assert(e.getMessage.contains("nlistFor"))
   }
 
+  /** `planted` with id `id`'s vector replaced by `v`. */
+  private def plantedWith(id: Long, v: Array[Double]) =
+    planted.as[(Long, Array[Double])]
+      .map { case (i, x) => (i, if (i == id) v else x) }
+      .toDF("vec_id", "embedding")
+
+  /** The messages along `e`'s cause chain, joined. */
+  private def messages(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString(" | ")
+
+  test("trainModel fails on a null or ragged vector, naming the trainer and the cause") {
+    // id 9 is no seed at k = 3: the first iteration's mean step fails
+    val late = intercept[Exception](
+      KMeansPortable.trainModel(plantedWith(9L, null), k = 3, iters = 2))
+    assert(messages(late).contains("trainModel: null or empty vector in cell"),
+      messages(late))
+    // id 0 is a seed: the seed collect fails before any iteration
+    val seed = intercept[IllegalArgumentException](
+      KMeansPortable.trainModel(plantedWith(0L, null), k = 3, iters = 2))
+    assert(seed.getMessage.contains("trainModel: null training vector"))
+    val ragged = intercept[Exception](KMeansPortable.trainModel(
+      plantedWith(5L, Array(0.2, 9.9, 1.0)), k = 3, iters = 2))
+    assert(messages(ragged).contains("trainModel: ragged vector in cell") &&
+      messages(ragged).contains("has width 3, expected 2"), messages(ragged))
+  }
+
+  test("trainTwoLevel fails on a null or ragged vector, naming the trainer and the cause") {
+    val nul = intercept[Exception](KMeansPortable.trainTwoLevel(
+      plantedWith(7L, null), nlist = 3, iters = 2))
+    assert(messages(nul).contains("trainTwoLevel/supers: null or empty vector in cell"),
+      messages(nul))
+    val ragged = intercept[Exception](KMeansPortable.trainTwoLevel(
+      plantedWith(8L, Array(-0.1)), nlist = 3, iters = 2))
+    assert(messages(ragged).contains("trainTwoLevel/supers: ragged vector in cell") &&
+      messages(ragged).contains("has width 1, expected 2"), messages(ragged))
+  }
+
+  test("trainThreeLevel checks its input before the ML super fit") {
+    import graft.operators.SimilaritySearch
+    val nul = intercept[IllegalArgumentException](SimilaritySearch
+      .trainThreeLevel(plantedWith(7L, null), nlist = 3, iters = 2))
+    assert(nul.getMessage.contains("trainThreeLevel: 1 null training vectors"))
+    val ragged = intercept[IllegalArgumentException](SimilaritySearch
+      .trainThreeLevel(plantedWith(8L, Array(-0.1)), nlist = 3, iters = 2))
+    assert(ragged.getMessage.contains(
+      "trainThreeLevel: ragged or empty training vectors, widths 1 to 2"))
+  }
+
   test("iteration count is the only knob: 1 iter != 3 iters under bad init") {
     // both first-k seeds start inside cluster A, so the first mean
     // update drags seed 1 toward cluster B and later iterations

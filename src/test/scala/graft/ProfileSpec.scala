@@ -45,4 +45,24 @@ class ProfileSpec extends SparkSpec {
     val jobs = Seq.fill(2)(Profile.measure(spark, q02, sf).metrics.toMap.apply("sched.jobs"))
     assert(jobs.head === jobs.last)
   }
+
+  test("job descriptions: q78's Lloyd iterations tag their jobs, q02 sets none, and the caller's description survives") {
+    val ctx = spark.sparkContext
+    ctx.setJobDescription("caller")
+    val (q78, after) =
+      try (Profile.measure(spark, "q78_kmeans_train_oracle", sf),
+        ctx.getLocalProperty("spark.job.description"))
+      finally ctx.setJobDescription(null)
+    assert(q78.error.isEmpty, q78.error)
+    assert(after === "caller")
+    val lloyd = q78.jobs.filter(_.desc.startsWith("lloyd:"))
+    // q78 trains 3 iterations; every iteration launches jobs
+    assert(lloyd.map(_.desc).distinct.sorted === (0 until 3).map(i =>
+      s"lloyd:trainModel:iter=$i"))
+    assert(q78.jobs.exists(j => !j.desc.startsWith("lloyd:")),
+      "seeding and the output action are not iterations")
+    val plain = Profile.measure(spark, q02, sf)
+    assert(plain.jobs.nonEmpty && plain.jobs.forall(_.desc.isEmpty),
+      plain.jobs.map(_.desc))
+  }
 }

@@ -1,9 +1,13 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression}
+import org.apache.spark.sql.catalyst.plans.QueryPlan
 import org.apache.spark.sql.execution.{ExplainMode, SparkPlan}
-import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.graft.{ExactDecimalCast, RhpKernels}
+import org.apache.spark.sql.types.{DecimalType, DoubleType, FloatType}
 
 /** Contract spec for the driver: every registered query runs at
   * sf0.001 without error and passes the generic plan sweep; oracle
@@ -22,6 +26,33 @@ class QueryCatalogSpec extends SparkSpec {
       case a: AdaptiveSparkPlanExec => unpartitionedWindows(a.inputPlan)
       case m: InMemoryTableScanExec => unpartitionedWindows(m.relation.cachedPlan)
     }.flatten
+
+  /** Double/float → DECIMAL casts in `node` that [[ExactDecimalCast]]
+    * does not wrap, among the shapes it serves (precision ≥ 15 and
+    * scale ≤ 15; it leaves the others plain by design). Such a cast
+    * pays `Double.toString` and a `BigDecimal` per row. Walks the
+    * expression trees of every node, subquery and cached relation. */
+  private def rawDecimalCasts(node: QueryPlan[_]): Seq[Cast] = {
+    def walk(e: Expression): Seq[Cast] = e match {
+      case x: ExactDecimalCast => x.child.children.flatMap(walk)
+      case c: Cast => (c.dataType match {
+        case d: DecimalType if Set[Any](DoubleType, FloatType)(c.child.dataType) &&
+            d.precision >= RhpKernels.MaxFastScale &&
+            d.scale <= RhpKernels.MaxFastScale => Seq(c)
+        case _ => Nil
+      }) ++ walk(c.child)
+      case _ => e.children.flatMap(walk)
+    }
+    val nested = node match {
+      case m: InMemoryRelation => Seq(m.cacheBuilder.cachedPlan)
+      case m: InMemoryTableScanExec => Seq(m.relation.cacheBuilder.cachedPlan)
+      case a: AdaptiveSparkPlanExec => Seq(a.inputPlan)
+      case _ => Nil
+    }
+    node.expressions.flatMap(walk) ++
+      (node.children ++ node.subqueries ++ nested).flatMap(n =>
+        rawDecimalCasts(n.asInstanceOf[QueryPlan[_]]))
+  }
 
   test("catalog names are unique and oracles reference only known queries") {
     val names = QueryCatalog.all.map(_.name)
@@ -62,9 +93,9 @@ class QueryCatalogSpec extends SparkSpec {
   QueryCatalog.all.foreach { q =>
     test(s"${q.name} runs at sf0.001") {
       val df = q.run(spark, sf)
-      // generic plan sweep: NO query may contain a cartesian product or
-      // an unpartitioned window, and only the declared brute-force
-      // baselines may broadcast-NL-join
+      // generic plan sweep: NO query may contain a cartesian product,
+      // an unpartitioned window or a raw double→DECIMAL cast, and only
+      // the declared brute-force baselines may broadcast-NL-join
       val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
       assert(!plan.contains("CartesianProduct"), s"${q.name}: CartesianProduct\n$plan")
       assert(!plan.contains("BroadcastNestedLoopJoin") ||
@@ -73,6 +104,9 @@ class QueryCatalogSpec extends SparkSpec {
       val windows = unpartitionedWindows(df.queryExecution.sparkPlan)
       assert(windows.isEmpty, s"${q.name}: unpartitioned window\n" +
         windows.map(_.treeString).mkString("\n"))
+      val casts = rawDecimalCasts(df.queryExecution.optimizedPlan)
+      assert(casts.isEmpty, s"${q.name}: double→DECIMAL cast outside " +
+        "ExactDecimalCast (route it through Num.dec)\n" + casts.mkString("\n"))
       val n = df.count()
       // queries that can legitimately be empty on tiny synthetic data
       val mayBeEmpty = Set("q10_set_except", "q16_exact_dup_groups",

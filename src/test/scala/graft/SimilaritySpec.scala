@@ -817,8 +817,22 @@ class SimilaritySpec extends SparkSpec {
     import graft.operators.SimilaritySearch
     import graft.sources.Sinks
     val rel = SimilaritySearch.trainThreeLevel(emb, nlist = 6, iters = 3)
-    val twin = SimilaritySearch.trainThreeLevel(emb, nlist = 6,
-      iters = 3, broadcastAssign = true)
+    // the driver-resident twin: the same loop with the broadcast
+    // assignment kernel over the collected children
+    val twin = SimilaritySearch.trainThreeLevelWith(emb, nlist = 6,
+        vecCol = "embedding", seed = 42L, trainFraction = 1.0,
+        supers = 0, iters = 3, idCol = "vec_id") { (sup, routed, childRel) =>
+      val rows = childRel.select("cell", "super", "cvec").collect()
+        .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
+        .sortBy(_._1)
+      val groups = Array.tabulate(sup.length)(i =>
+        rows.filter(_._2 == i).map(_._1))
+      val cB = spark.sparkContext.broadcast(
+        SimilaritySearch.TwoLevelCoarse(sup, rows.map(_._3), groups))
+      routed.select("id", "vec").as[(Long, Array[Double])]
+        .map { case (id, v) => (id, SimilaritySearch.nearestChild(v, cB.value), v) }
+        .toDF("id", "cell", "vec")
+    }
     // supers: the SAME ML fit as trainTwoLevelCoarse's super stage
     // (trainSupersML — one site, the parity anchor)
     val coarse = SimilaritySearch.trainTwoLevelCoarse(emb, nlist = 6)
