@@ -485,7 +485,7 @@ object IvfPqPortable {
       supers: Int = 0): DataFrame =
     walkImpl(vectors, anchorPred, k, nlist, coarseIters, m, ksub,
       subIters, ladder.map { case (p, np) => (p, np, rerank) }, floor,
-      idCol, vecCol, supers, emitRerank = false)
+      idCol, vecCol, supers, "topKTwoLevelWalk", emitRerank = false)
 
   /** [[topKTwoLevelWalk]] over the full-chain (probeSupers, nprobe,
     * rerank) ladder of [[SimilaritySearch.pqRecallLadder]] — super
@@ -502,13 +502,13 @@ object IvfPqPortable {
       supers: Int = 0): DataFrame =
     walkImpl(vectors, anchorPred, k, nlist, coarseIters, m, ksub,
       subIters, ladder, floor, idCol, vecCol, supers,
-      emitRerank = true)
+      "topKTwoLevelWalkPq", emitRerank = true)
 
   private def walkImpl(vectors: DataFrame, anchorPred: Column, k: Int,
       nlist: Int, coarseIters: Int, m: Int, ksub: Int, subIters: Int,
       ladder: Seq[(Int, Int, Int)], floor: Double,
       idCol: String, vecCol: String,
-      supers: Int, emitRerank: Boolean): DataFrame = {
+      supers: Int, site: String, emitRerank: Boolean): DataFrame = {
     RecallWalk.checkWalk(ladder, floor)
     val (base, dim) = checkedBase(vectors, idCol, vecCol)
     require(dim % m == 0, s"m=$m must divide dim=$dim")
@@ -529,7 +529,7 @@ object IvfPqPortable {
     // structurally (anchors broadcast, the cosineTopK shape)
     val exact = graft.CacheScope.track(
       exactTopKDecimalFromBase(base, anchorPred, k))
-    val c = RecallWalk.climb(ladder, floor) { case (p, np, rr) =>
+    val c = RecallWalk.climb(site, ladder, floor) { case (p, np, rr) =>
       val probeCells = (if (p == 1)
           KMeansPortable.probeChildren(routed.filter(anchorPred),
             tl.children, tl.groups, np)

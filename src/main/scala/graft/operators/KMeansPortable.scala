@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.{RhpExpressions, RhpKernels}
@@ -21,12 +24,18 @@ import org.apache.spark.sql.graft.{RhpExpressions, RhpKernels}
   * assignment is argmin_j of n2(v) − 2·dot(v,c_j) + n2(c_j) with
   * every dot an exact-decimal sum (the q71/q76 kernels).
   *
-  * Scale shape — Spark ML's own Lloyd loop: the (k × dim) centroid
-  * matrix rides to executors as one literal; assignment is a
-  * zero-shuffle projection; the update is one map-side-combining
-  * aggregation per iteration whose ≤ k rows are collected to become
-  * the next literal. The per-iteration driver exchange is k·dim
-  * scalars — the irreducible state of Lloyd's algorithm.
+  * Scale shape — the driver holds the k × dim centroid matrix, the
+  * irreducible state of Lloyd's algorithm, and nothing corpus-sized.
+  * A driver-state iteration ([[lloydOnDriver]]) is ONE `treeAggregate`
+  * job over the cached base's rows, planned once per trainer call:
+  * each task assigns its rows with a per-row kernel ([[flatKernel]],
+  * [[childKernel]]: [[cellExpr]]'s arithmetic and order) and adds
+  * them into exact 128-bit per-cell buffers, allocated only for the
+  * cells its partition touches. No Catalyst plan is built and no row
+  * is shuffled per iteration; the driver receives ≤ k·dim sums per
+  * tree branch. The relation-resident trainers ([[lloydAsRelation]])
+  * keep the child level as a relation and run one means aggregation
+  * per iteration.
   *
   * [[train]]'s output: one row per (cell, dimension) of the final
   * centroid matrix — (cell, d, c, n_members), n_members from the last
@@ -212,7 +221,8 @@ object KMeansPortable {
       .collect().map(r => Option(r.getSeq[Double](0)).map(_.toArray).orNull)
     require(seeds.length == k,
       s"k=$k seeds requested but input has only ${seeds.length} vectors")
-    lloydOnDriver(trainer, seeds, iters)(assignCells(base, _))
+    lloydOnDriver(trainer, seeds, iters,
+      base.select(col("vec"), col("n2")).queryExecution.toRdd)(flatKernel)
   }
 
   /** [[trainModel]] rendered relationally: one row per (cell, d) of
@@ -284,23 +294,80 @@ object KMeansPortable {
       centroids: Array[Array[Double]]): Column =
     array_min(distArray(vec, n2, centroids)).getField("j")
 
+  /** [[cellExpr]] as a per-row kernel over (vec, n2) rows: the same
+    * distance (n2 − 2·decimalDot(vec, c_j)) + nc2_j under the same
+    * (d, j) order, so every row gets [[cellExpr]]'s cell. */
+  private[graft] def flatKernel(
+      centroids: Array[Array[Double]]): InternalRow => Int = {
+    val cents = new KernelCentroids(centroids)
+    val all = centroids.indices.toArray
+    row => cents.nearest(row, all)
+  }
+
+  /** [[assignChildren]] as a per-row kernel over (vec, n2, super)
+    * rows: the argmin over the routed super's children `groups(super)`
+    * under [[flatKernel]]'s order, and the childless super's
+    * pseudo-cell `children.length + super`. */
+  private[graft] def childKernel(children: Array[Array[Double]],
+      groups: Array[Array[Int]]): InternalRow => Int = {
+    val cents = new KernelCentroids(children)
+    row => {
+      val s = row.getInt(2)
+      if (groups(s).isEmpty) children.length + s else cents.nearest(row, groups(s))
+    }
+  }
+
+  /** A centroid matrix as the row kernels read it: each centroid as an
+    * `ArrayData` for [[RhpKernels.decimalDot]], with its self-dot. */
+  private final class KernelCentroids(centroids: Array[Array[Double]])
+      extends Serializable {
+    private val cs: Array[ArrayData] =
+      centroids.map(c => UnsafeArrayData.fromPrimitiveArray(c))
+    private val nc2 = cs.map(c => RhpKernels.decimalDot(c, c))
+
+    /** The (d, j)-least of `cands` for a row leading with (vec, n2),
+      * doubles compared as Spark's struct order compares them. A null
+      * vec scores every candidate null, so the lowest index wins. */
+    def nearest(row: InternalRow, cands: Array[Int]): Int =
+      if (row.isNullAt(0)) cands.min
+      else {
+        val vec = row.getArray(0)
+        val n2 = row.getDouble(1)
+        var best = -1
+        var bestD = 0.0
+        var i = 0
+        while (i < cands.length) {
+          val j = cands(i)
+          val d = (n2 - 2.0 * RhpKernels.decimalDot(vec, cs(j))) + nc2(j)
+          val o = if (best < 0) -1 else SQLOrderingUtil.compareDoubles(d, bestD)
+          if (o < 0 || (o == 0 && j < best)) { best = j; bestD = d }
+          i += 1
+        }
+        best
+      }
+  }
+
   // ---------------------------------------------------------------
   // THE LLOYD STEP, shared by every trainer: [[trainModel]] and
   // [[trainTwoLevel]] keep centroids on the driver
-  // ([[lloydOnDriver]]); [[trainTwoLevelRelationalFromBase]] and
-  // [[SimilaritySearch.trainThreeLevel]] keep the child level as a
-  // relation ([[lloydAsRelation]]), so children never become driver
-  // state. Each trainer passes its own assignment kernel. The
+  // ([[lloydOnDriver]]: one treeAggregate job per iteration, rows
+  // assigned by a per-row kernel); [[trainTwoLevelRelationalFromBase]]
+  // and [[SimilaritySearch.trainThreeLevel]] keep the child level as
+  // a relation ([[lloydAsRelation]]: one means aggregation per
+  // iteration), so children never become driver state. The
   // invariants every trainer inherits from here:
   //   - seeds are committed: the lowest ids, in id order (per super
   //     for a child level, [[seedChildren]]) — no RNG, no engine
   //     state;
-  //   - assignment ties go to the lowest centroid index (each
-  //     kernel's (distance, index) order);
+  //   - assignment is argmin_j (n2 − 2·decimalDot(v, c_j)) + nc2_j,
+  //     ties to the lowest centroid index (each kernel's (d, j)
+  //     order), and a row kernel assigns every row to the cell its
+  //     Column twin ([[cellExpr]], [[assignChildren]]) does;
   //   - update: per-dimension mean = Σ round(x, 12)::DECIMAL(38,12)
-  //     cast to double, divided by the member count — exact integer
-  //     sums, so partitioning cannot move a bit
-  //     ([[VectorAgg.decimalVecMeans]]);
+  //     cast to double, divided by the member count, summed in exact
+  //     128-bit per-cell buffers
+  //     ([[VectorAgg.DecimalVecMeanAggregator]]), so neither
+  //     partitioning nor the tree's merge order can move a bit;
   //   - an emptied cell keeps its previous centroid (no re-seeding);
   //   - a fixed iteration count, no convergence test (a float
   //     tolerance would re-introduce engine-specific behavior);
@@ -308,47 +375,49 @@ object KMeansPortable {
   //     iteration (or the seed collect) with an error naming the
   //     trainer and the cause.
   // Every job an iteration launches carries the job description
-  // `lloyd:<trainer>:iter=<i>`.
+  // `lloyd:<trainer>:iter=<i>` ([[JobTag]]).
   // ---------------------------------------------------------------
 
-  /** Run `body` as Lloyd iteration `it` of `trainer`: its jobs carry
-    * the description `lloyd:<trainer>:iter=<it>` (AQE's stage jobs
-    * inherit it with the caller's local properties), and the
-    * caller's description is restored afterwards. */
-  private def inIteration[T](trainer: String, it: Int)(body: => T): T = {
-    val sc = SparkSession.active.sparkContext
-    val prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(s"lloyd:$trainer:iter=$it")
-    try body finally sc.setJobDescription(prev)
-  }
-
-  /** The mean kernel of the step: (cell, __newc, __n) of an assigned
-    * relation carrying cell and vec, every vector checked to be `dim`
-    * wide. */
-  private def cellMeans(trainer: String, assigned: DataFrame,
-      dim: Int): DataFrame =
-    VectorAgg.decimalVecMeans(assigned, trainer, dim)
-
-  /** Driver-state Lloyd: `iters` iterations from `seeds`, each
-    * assigning with `assign(centroids)` (a relation carrying id, cell
-    * and vec) and collecting the ≤ k cell means. Returns the final
+  /** Driver-state Lloyd: `iters` iterations from `seeds` over
+    * `points`, the trainer's rows (leading with vec, n2) planned once
+    * per trainer call. Each iteration is one `treeAggregate` job:
+    * `kernel(centroids)` assigns every row, which is added into its
+    * cell's [[VectorAgg.DecimalVecMeanAggregator]] buffer (allocated
+    * only for the cells a partition touches). Returns the final
     * centroids and the last iteration's member counts. */
   private[graft] def lloydOnDriver(trainer: String,
-      seeds: Array[Array[Double]], iters: Int)(
-      assign: Array[Array[Double]] => DataFrame): Model = {
+      seeds: Array[Array[Double]], iters: Int, points: RDD[InternalRow])(
+      kernel: Array[Array[Double]] => InternalRow => Int): Model = {
     require(!seeds.contains(null), s"$trainer: null training vector among the seeds")
     val dim = seeds(0).length
     require(dim > 0, s"$trainer: empty training vector among the seeds")
+    val agg = new VectorAgg.DecimalVecMeanAggregator(trainer, dim)
     var cents = seeds
     var counts = new Array[Long](seeds.length)
     for (it <- 0 until iters) {
-      val means = inIteration(trainer, it)(
-        cellMeans(trainer, assign(cents), dim).collect())
+      val cellOf = kernel(cents)
+      val sums = JobTag.during(s"lloyd:$trainer:iter=$it")(
+        points.treeAggregate(new Array[VectorAgg.DecBuf](seeds.length))(
+          (bufs, row) => {
+            val j = cellOf(row)
+            val v = if (row.isNullAt(0)) null else row.getArray(0).toDoubleArray()
+            bufs(j) = agg.reduce(if (bufs(j) == null) agg.zero else bufs(j), (j, v))
+            bufs
+          },
+          (a, b) => {
+            var j = 0
+            while (j < a.length) {
+              if (b(j) != null) a(j) = if (a(j) == null) b(j) else agg.merge(a(j), b(j))
+              j += 1
+            }
+            a
+          }))
       cents = cents.clone()
       counts = new Array[Long](seeds.length)
-      means.foreach { r =>
-        cents(r.getInt(0)) = r.getSeq[Double](1).toArray
-        counts(r.getInt(0)) = r.getLong(2)
+      sums.indices.filter(sums(_) != null).foreach { j =>
+        val m = agg.finish(sums(j))
+        cents(j) = m.mean
+        counts(j) = m.n
       }
     }
     Model(cents, counts)
@@ -357,7 +426,8 @@ object KMeansPortable {
   /** Relation-state Lloyd over a (super, cell, cvec) child relation:
     * `iters` iterations from `seeds`, each assigning with
     * `assign(childRel)` (a relation carrying id, cell and vec) and
-    * updating the children by a left join on the cell means.
+    * updating the children by a left join on the cell means
+    * ([[VectorAgg.decimalVecMeans]]).
     *
     * Each iteration's relation is localCheckpoint'd, not merely
     * cached: a cache keeps the full logical lineage, so after i
@@ -372,8 +442,8 @@ object KMeansPortable {
     var childRel = graft.CacheScope.trackPersisted(seeds.localCheckpoint())
     for (it <- 0 until iters) {
       val prev = childRel
-      childRel = inIteration(trainer, it) {
-        val means = cellMeans(trainer, assign(prev), dim)
+      childRel = JobTag.during(s"lloyd:$trainer:iter=$it") {
+        val means = VectorAgg.decimalVecMeans(assign(prev), trainer, dim)
         graft.CacheScope.trackPersisted(
           prev.join(means, Seq("cell"), "left")
             .select(col("super"), col("cell"),
@@ -519,7 +589,8 @@ object KMeansPortable {
     val groups = Array.tabulate(sup.length)(i =>
       bySuper.get(i).fold(Array.empty[Int])(_.map(_.getInt(1))))
     val m = lloydOnDriver(trainer, seeds.map(_.getSeq[Double](2).toArray),
-      iters)(assignChildren(routed, _, groups))
+      iters, routed.select(col("vec"), col("n2"), col("super"))
+        .queryExecution.toRdd)(childKernel(_, groups))
     TwoLevelModel(sup, m.centroids, groups)
   }
 

@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, BroadcastDistribution, UnspecifiedDistribution}
 import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan}
@@ -25,6 +27,8 @@ import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan}
   * saves at either scale.
   */
 object Par {
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
   def ensureWide(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
     if (planWidth(df) < target) df.repartition(target) else df
@@ -75,13 +79,21 @@ object Par {
     *   - narrow nodes pass their children's width through (summed:
     *     exact for union, and a one-child sum is just that child);
     *   - leaves answer from their own lazily-built RDD (scan splits).
+    * A probe that throws falls back to the shuffle width, logged at
+    * WARN with its cause: that width decides how many partitions the
+    * caller's relation (and every job over it) runs on.
     */
   private def planWidth(df: DataFrame): Int = {
     val shuffleWidth = df.sparkSession.sessionState.conf.numShufflePartitions
+    def fallback(what: String, e: Throwable): Int = {
+      log.warn(s"Par.planWidth: $what failed; assuming the shuffle width " +
+        s"$shuffleWidth", e)
+      shuffleWidth
+    }
     def widthOf(p: SparkPlan): Int = p match {
       case leaf: LeafExecNode =>
         try leaf.execute().getNumPartitions
-        catch { case _: Exception => shuffleWidth }
+        catch { case NonFatal(e) => fallback(s"the width of ${leaf.nodeName}", e) }
       // width-SETTING narrow nodes: their partition count is their
       // own, not their child's
       case c: org.apache.spark.sql.execution.CoalesceExec =>
@@ -105,6 +117,6 @@ object Par {
         }
     }
     try widthOf(df.queryExecution.sparkPlan)
-    catch { case _: Exception => shuffleWidth }
+    catch { case NonFatal(e) => fallback("the plan walk", e) }
   }
 }

@@ -45,6 +45,9 @@ import org.apache.spark.sql.functions.{col, xxhash64}
   *  - COST. Each evaluated rung collects one scalar and probes only
   *    the anchors; training, corpus assignment and encoding are shared
   *    across rungs.
+  *  - TAGS. Rung i's jobs carry the job description
+  *    `walk:<site>:rung=<i>` and the sample's `walk:<site>:sample`
+  *    ([[JobTag]]); the caller's description is restored afterwards.
   */
 private[graft] object RecallWalk {
 
@@ -65,10 +68,14 @@ private[graft] object RecallWalk {
   }
 
   /** Evaluates `recallAt` on `ladder` in order, up to and including
-    * the first rung with recall ≥ `floor`. */
-  def climb[R](ladder: Seq[R], floor: Double)(recallAt: R => Double): Climb[R] = {
+    * the first rung with recall ≥ `floor`. `site` names the caller in
+    * the rungs' job descriptions. */
+  def climb[R](site: String, ladder: Seq[R], floor: Double)(
+      recallAt: R => Double): Climb[R] = {
     checkWalk(ladder, floor)
-    val measured = LazyList.from(ladder).map(r => (r, recallAt(r)))
+    val measured = LazyList.from(ladder).zipWithIndex.map { case (r, i) =>
+      (r, JobTag.during(s"walk:$site:rung=$i")(recallAt(r)))
+    }
     val hit = measured.indexWhere(_._2 >= floor)
     if (hit < 0) Climb(measured.toVector, floorMet = false)
     else Climb(measured.take(hit + 1).toVector, floorMet = true)
@@ -82,13 +89,13 @@ private[graft] object RecallWalk {
 
   /** The `maxAnchors` anchors of `feat` matching `anchorPred` under
     * the seeded-hash order (see SAMPLE above). `site` names the caller
-    * in the empty-sample error. */
+    * in the empty-sample error and the sample's job description. */
   def anchorSample(feat: DataFrame, anchorPred: Column, maxAnchors: Int,
       k: Int, site: String): AnchorSample = {
     require(maxAnchors >= 1, s"maxAnchors must be >= 1; got $maxAnchors")
-    val ids = feat.filter(anchorPred)
+    val ids = JobTag.during(s"walk:$site:sample")(feat.filter(anchorPred)
       .orderBy(xxhash64(col("id")), col("id")).limit(maxAnchors)
-      .select(col("id")).collect().map(_.getLong(0)).toSeq
+      .select(col("id")).collect().map(_.getLong(0)).toSeq)
     require(ids.nonEmpty, s"$site: empty anchor sample")
     val pred = col("id").isin(ids: _*)
     val rows = graft.CacheScope.track(feat.filter(pred))

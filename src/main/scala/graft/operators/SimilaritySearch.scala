@@ -295,8 +295,8 @@ object SimilaritySearch {
         .select(col("anchor_id"), col("neighbor_id"), col("score"))
       rankTopK(cands, k)
     }
-    annPoint(RecallWalk.climb(ladder, floor) { case (p, np) =>
-      meanRecall(approxAt(p, np), sample.exact)
+    annPoint(RecallWalk.climb("sizeTwoLevelForRecall", ladder, floor) {
+      case (p, np) => meanRecall(approxAt(p, np), sample.exact)
     })
   }
 
@@ -349,7 +349,7 @@ object SimilaritySearch {
       math.min(n, Int.MaxValue.toLong).toInt)
     val ladder = pqRecallLadder(nlist, supers,
       math.min(math.max(1, nprobe0), nlist), rerank0, maxRerank)
-    val c = RecallWalk.climb(ladder, floor) { case (p, np, r) =>
+    val c = RecallWalk.climb(site, ladder, floor) { case (p, np, r) =>
       meanRecall(probe(sample.pred, p, np, r), sample.exact)
     }
     val walk = c.trail.map { case ((p, np, r), rec) =>
@@ -383,9 +383,9 @@ object SimilaritySearch {
     val (nlist, pop) = relationalShape(coarse)
     val ladder = recallLadder(nlist, pop,
       math.min(math.max(1, nprobe0), nlist))
-    annPoint(RecallWalk.climb(ladder, floor) { case (p, np) =>
-      meanRecall(ivfCosineTopKRelationalIndexed(assigned, sample.pred, k,
-        coarse, np, p), sample.exact)
+    annPoint(RecallWalk.climb("sizeRelationalForRecall", ladder, floor) {
+      case (p, np) => meanRecall(ivfCosineTopKRelationalIndexed(assigned,
+        sample.pred, k, coarse, np, p), sample.exact)
     })
   }
 

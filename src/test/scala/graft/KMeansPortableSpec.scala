@@ -94,6 +94,61 @@ class KMeansPortableSpec extends SparkSpec {
     assert(m1.counts.toSeq === m2.counts.toSeq)
   }
 
+  /** (id, vec, n2) rows with planted exact ties against [[tieCents]]:
+    * rows equidistant from two centroids, rows on a duplicated
+    * centroid, and a null, an empty and a ragged vector. */
+  private def tieBase = {
+    val rows: Seq[(Long, Array[Double])] = Seq(
+      (0L, Array(1.0, 0.0)), (1L, Array(0.0, 1.0)), (2L, Array(1.0, 1.0)),
+      (3L, Array(0.5, 0.5)), (4L, Array(10.0, 0.0)), (5L, Array(9.0, 0.25)),
+      (6L, Array(0.0, 10.0)), (7L, Array(-3.0, -3.0)), (8L, null),
+      (9L, Array.empty[Double]), (10L, Array(10.0, 0.25, 7.0)),
+      (11L, Array(0.1 + 0.2, 0.3)))
+    rows.toDF("id", "vec").withColumn("n2", org.apache.spark.sql.graft
+      .RhpExpressions.decimalScaledDot(col("vec"), col("vec")))
+  }
+
+  // cells 0/2 and 1/3 are exact duplicates; 4 and 5 are mirror images
+  // of each other about (10, 0.25)
+  private val tieCents = Array(Array(1.0, 0.0), Array(0.0, 1.0),
+    Array(1.0, 0.0), Array(0.0, 1.0), Array(10.0, 0.0), Array(10.0, 0.5))
+
+  /** `kernel` over `cols` of `df`, run on the executors, by id. */
+  private def kernelCells(df: org.apache.spark.sql.DataFrame, cols: Seq[String],
+      kernel: org.apache.spark.sql.catalyst.InternalRow => Int): Map[Long, Int] = {
+    val id = cols.length
+    df.select((cols :+ "id").map(col): _*).queryExecution.toRdd
+      .map(r => r.getLong(id) -> kernel(r)).collect().toMap
+  }
+
+  test("flat Lloyd kernel assigns every row to cellExpr's cell; exact ties go to the lowest index") {
+    val want = KMeansPortable.assignCells(tieBase, tieCents)
+      .select("id", "cell").collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val got = kernelCells(tieBase, Seq("vec", "n2"),
+      KMeansPortable.flatKernel(tieCents))
+    assert(got === want)
+    // the planted ties resolve to the lower of the duplicated indices
+    assert(got(0L) === 0 && got(1L) === 1 && got(2L) === 0 && got(3L) === 0)
+    assert(got(5L) === 4 && got(8L) === 0)
+    assert(!got.values.exists(Set(2, 3)), "a duplicate centroid never wins")
+  }
+
+  test("child Lloyd kernel assigns every routed row to assignChildren's cell: ties, unsorted groups, childless supers") {
+    val supers = Array(Array(0.0, 0.0), Array(10.0, 0.0), Array(0.0, 10.0))
+    // super 1's group lists its duplicated children out of order;
+    // super 2 has no children (rows there take the pseudo-cell 6 + 2)
+    val groups = Array(Array(0, 1), Array(5, 4, 2), Array.empty[Int])
+    val routed = tieBase.withColumn("super",
+      KMeansPortable.cellExpr(col("vec"), col("n2"), supers))
+    val want = KMeansPortable.assignChildren(routed, tieCents, groups)
+      .select("id", "cell").collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val got = kernelCells(routed, Seq("vec", "n2", "super"),
+      KMeansPortable.childKernel(tieCents, groups))
+    assert(got === want)
+    assert(got(6L) === tieCents.length + 2, "childless super's pseudo-cell")
+    assert(got(5L) === 4, "a tie inside an unsorted group goes to the lowest index")
+  }
+
   test("nlistFor: ceil to the target cell population, floor 1, hard clamp") {
     val t = KMeansPortable.DefaultTargetCellSize
     assert(KMeansPortable.nlistFor(0L) === 1)

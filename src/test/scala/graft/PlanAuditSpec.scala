@@ -439,17 +439,17 @@ object PlanAuditSpec {
       mustNotContain = Seq("CartesianProduct", "BroadcastNestedLoopJoin",
         "SortMergeJoin", "BroadcastHashJoin"),
       maxShuffleExchanges = Some(2)),
-    // q78: Lloyd training — each iteration's assignment is a
-    // zero-shuffle projection (centroids ride as literals) and the
-    // (cell, dim) aggregation collects k·dim rows to the driver, so
-    // the FINAL frame only re-derives the last assignment + means
+    // q78: Lloyd training runs before this plan exists — each
+    // iteration is one treeAggregate job over the cached base, rows
+    // assigned by a per-row kernel into per-cell buffers on the
+    // executors — so the FINAL frame is only the driver-assembled
+    // k·dim (cell, d) centroid rows and their presentation sort
     Check("q78_kmeans_train_oracle",
       mustContain = Seq(),
       mustNotContain = Seq("CartesianProduct", "BroadcastNestedLoopJoin",
         "SortMergeJoin"),
-      // [CEILING] 1: the Lloyd contract — the final frame re-derives
-      // ONE (cell, dim) means aggregation; per-iteration assignments
-      // are zero-shuffle projections (centroids ride as literals)
+      // [CEILING] 1: the Lloyd contract — no training work reaches
+      // the final frame; its one exchange is the (cell, d) ordering
       maxShuffleExchanges = Some(1)),
     // q83: perceptual image dHash near-dup — frames reduce to one
     // long per media in the map (nothing pixel-shaped shuffles), the

@@ -56,13 +56,23 @@ class ProfileSpec extends SparkSpec {
     assert(q78.error.isEmpty, q78.error)
     assert(after === "caller")
     val lloyd = q78.jobs.filter(_.desc.startsWith("lloyd:"))
-    // q78 trains 3 iterations; every iteration launches jobs
-    assert(lloyd.map(_.desc).distinct.sorted === (0 until 3).map(i =>
+    // q78 trains 3 iterations; each is exactly one treeAggregate job
+    assert(lloyd.map(_.desc).sorted === (0 until 3).map(i =>
       s"lloyd:trainModel:iter=$i"))
     assert(q78.jobs.exists(j => !j.desc.startsWith("lloyd:")),
       "seeding and the output action are not iterations")
     val plain = Profile.measure(spark, q02, sf)
     assert(plain.jobs.nonEmpty && plain.jobs.forall(_.desc.isEmpty),
       plain.jobs.map(_.desc))
+  }
+
+  test("job descriptions: q102's recall walk tags its rung jobs, q02 none") {
+    val q102 = Profile.measure(spark, "q102_ann_recall_walk_oracle", sf)
+    assert(q102.error.isEmpty, q102.error)
+    val rungs = q102.jobs.map(_.desc).filter(_.startsWith("walk:"))
+    assert(rungs.contains("walk:topKTwoLevelWalk:rung=0"), q102.jobs.map(_.desc))
+    assert(rungs.forall(_.matches("walk:topKTwoLevelWalk:rung=\\d+")), rungs)
+    val plain = Profile.measure(spark, q02, sf)
+    assert(!plain.jobs.exists(_.desc.startsWith("walk:")), plain.jobs.map(_.desc))
   }
 }

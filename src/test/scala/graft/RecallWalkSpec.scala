@@ -12,7 +12,7 @@ class RecallWalkSpec extends SparkSpec {
     * rungs the stub was asked for. */
   private def walk(recalls: Seq[Double], floor: Double) = {
     val asked = Vector.newBuilder[Int]
-    val c = RecallWalk.climb(recalls.indices, floor) { i =>
+    val c = RecallWalk.climb("spec", recalls.indices, floor) { i =>
       asked += i; recalls(i)
     }
     (c, asked.result())
@@ -51,12 +51,12 @@ class RecallWalkSpec extends SparkSpec {
     var probed = 0
     Seq(0.0, -0.1, 1.0001, Double.NaN).foreach { f =>
       val e = intercept[IllegalArgumentException] {
-        RecallWalk.climb(Seq(1, 2), f) { _ => probed += 1; 1.0 }
+        RecallWalk.climb("spec", Seq(1, 2), f) { _ => probed += 1; 1.0 }
       }
       assert(e.getMessage.contains("recall floor must be in (0, 1]"))
     }
     val e = intercept[IllegalArgumentException] {
-      RecallWalk.climb(Seq.empty[Int], 0.5) { _ => probed += 1; 1.0 }
+      RecallWalk.climb("spec", Seq.empty[Int], 0.5) { _ => probed += 1; 1.0 }
     }
     assert(e.getMessage.contains("non-empty"))
     assert(probed === 0)
