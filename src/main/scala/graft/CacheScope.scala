@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.storage.StorageLevel
 
 /** Lifecycle registry for operator-internal `persist()` calls.
   *
@@ -20,9 +21,12 @@ import org.apache.spark.sql.DataFrame
 object CacheScope {
   private val tracked = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
 
-  /** Persist `df` and register it for later release. */
+  /** Persist `df` and register it for later release. A plan that is
+    * already cached (an operator re-deriving a relation its trainer
+    * tracked) is registered without a second `persist()`, so it costs
+    * one cache lookup and logs nothing. */
   def track(df: DataFrame): DataFrame = synchronized {
-    val p = df.persist()
+    val p = if (df.storageLevel != StorageLevel.NONE) df else df.persist()
     tracked += p
     p
   }

@@ -430,13 +430,8 @@ object Dedup {
       idCol: String = "vec_id", vecCol: String = "embedding",
       ccCollectThreshold: Long =
         ConnectedComponents.DefaultLocalClosureThreshold): DataFrame = {
-    import org.apache.spark.sql.graft.RhpExpressions
     require(centroids.nonEmpty)
-    val base = graft.CacheScope.track(Par.ensureWide(vectors)
-      .select(col(idCol).cast("long").as("id"),
-        col(vecCol).cast("array<double>").as("vec"))
-      .withColumn("n2",
-        RhpExpressions.decimalScaledDot(col("vec"), col("vec"))))
+    val base = KMeansPortable.shapedBase(vectors, idCol, vecCol)
     KMeansPortable.requireBoundedCells("semanticDedupPortable",
       base.count(), centroids.length, maxCellSize)
     // the assignment IS KMeansPortable's — one implementation of the
@@ -467,13 +462,8 @@ object Dedup {
       idCol: String = "vec_id", vecCol: String = "embedding",
       ccCollectThreshold: Long =
         ConnectedComponents.DefaultLocalClosureThreshold): DataFrame = {
-    import org.apache.spark.sql.graft.RhpExpressions
     require(model.nlist > 0)
-    val base = graft.CacheScope.track(Par.ensureWide(vectors)
-      .select(col(idCol).cast("long").as("id"),
-        col(vecCol).cast("array<double>").as("vec"))
-      .withColumn("n2",
-        RhpExpressions.decimalScaledDot(col("vec"), col("vec"))))
+    val base = KMeansPortable.shapedBase(vectors, idCol, vecCol)
     KMeansPortable.requireBoundedCells("semanticDedupTwoLevel",
       base.count(), model.nlist, maxCellSize)
     semanticDedupFromAssigned(vectors,

@@ -4,77 +4,75 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.RhpExpressions
 
-/** ENGINE-PORTABLE IVF-PQ (IVFADC) — the oracle twin of the q73
-  * deployment path (`SimilaritySearch.ivfPqTopKScore`), end-to-end:
-  * coarse-quantizer TRAINING, residual computation, per-subspace
-  * codebook TRAINING, PQ encoding, nprobe candidate routing, ADC
-  * approximation, shortlist rerank and the exact final top-k — every
-  * stage under committed deterministic arithmetic so the ENTIRE
-  * pipeline re-derives value-for-value in SQL (zero fixtures, the q80
-  * discipline). Reference anchor: the IVF index build + ANN query of
+/** ENGINE-PORTABLE IVF-PQ (IVFADC): the oracle twin of the deployment
+  * path (`SimilaritySearch.ivfPqTopKScore`, q73), end to end:
+  * coarse-quantizer training, residuals, per-subspace codebook
+  * training, PQ encoding, nprobe candidate routing, ADC approximation,
+  * shortlist rerank and the exact final top-k, every stage under
+  * committed deterministic arithmetic, so the whole pipeline
+  * re-derives value for value in SQL from the parquet bytes, with no
+  * fixtures. Reference anchor: the IVF index build and ANN query of
   * `Experimental/vector_search/precompute_similar_tracks.py:116-150`,
-  * whose float k-means/FAISS internals can only ever gate rows-only;
-  * this twin is the same algorithm under portable arithmetic.
+  * whose float k-means/FAISS internals can only ever gate rows-only.
   *
-  * Portability choices, each the established one:
+  * Portability invariants:
   *   - both trainers are [[KMeansPortable]] Lloyd loops (first-k-ids
   *     init, exact-decimal argmin, DECIMAL(38,12) means, fixed
-  *     iteration count) — coarse on raw vectors, codebooks on the
-  *     classical IVFADC residuals v − c(v) (Jégou et al. §IV; the
-  *     residual subtraction is one exact IEEE double op per
-  *     dimension, identical in any engine);
-  *   - PQ encoding IS the Lloyd assignment rule per subspace —
-  *     [[KMeansPortable.cellExpr]] on the residual slice, so the
-  *     encode arithmetic is single-sited with every other oracle
-  *     that assigns cells;
-  *   - ADC scores via RECONSTRUCTION: approx(a, v) = decimalDot(a,
-  *     c_cell + concat_j cb_j[code_j]). Algebraically this is the
-  *     per-subspace lookup-table sum (the native q73 kernel) — but
-  *     as ONE fused decimal dot there is a single rounding site
-  *     instead of m float partial sums whose addition order an
-  *     engine could permute. The native path keeps the table-lookup
-  *     form for speed; the twin trades that for provable parity.
-  *   - every ranking tie-breaks by id (probe cells by index,
+  *     iteration count): coarse on raw vectors, codebooks on the
+  *     IVFADC residuals v − c(v) (Jégou et al. §IV), one exact IEEE
+  *     subtraction per dimension;
+  *   - PQ encoding is the Lloyd assignment rule per subspace
+  *     ([[KMeansPortable.cellExpr]] on the residual slice);
+  *   - ADC scores by reconstruction: approx(a, v) = decimalDot(a,
+  *     c_cell + concat_j cb_j[code_j]), the per-subspace lookup-table
+  *     sum as one fused decimal dot with a single rounding site (the
+  *     native path keeps the table-lookup form for speed);
+  *   - every ranking breaks ties by id (probe cells by index,
   *     shortlist and top-k by neighbor id).
   *
-  * Scale shape — identical to the native path: training state is
-  * (nlist·dim + m·ksub·dsub) scalars on the driver (the Lloyd
-  * discipline); assignment/encoding/reconstruction are one
-  * zero-shuffle projection; candidate routing is an equi-join on the
-  * cell id; only the nprobe/nlist fraction of the corpus is scored
-  * per anchor and the rerank set is `rerank` ids per anchor.
+  * Scale shape, as in the native path: training state is
+  * (nlist·dim + m·ksub·dsub) scalars on the driver; assignment,
+  * encoding and reconstruction are one zero-shuffle projection;
+  * candidate routing is an equi-join on the cell id; only the
+  * nprobe/nlist fraction of the corpus is scored per anchor, and the
+  * rerank set is `rerank` ids per anchor.
   *
-  * TWO structures for the coarse quantizer (the SemDeDup-family
-  * split, SCALE.md round 10): [[topK]] is the flat argmin — a single
-  * nlist-literal expression, measured unusable at the ∝N operating
-  * point nlist ≈ 800 — and [[topKTwoLevel]] is the hierarchical
-  * (IMI/FAISS-shaped) one: route to S ≈ √nlist supers, then argmin /
-  * rank only that super's children via ONE broadcast candidate-array
-  * join — O(N·2√nlist·dim), no nlist-sized codegen body anywhere.
-  * supers = 1 degenerates to the flat path EXACTLY (spec-pinned);
-  * the subspace CODEBOOKS stay flat in both (ksub is bounded by
-  * construction — 256 at 8-bit codes — never corpus-sized).
+  * Two coarse structures. [[topK]] is the flat argmin, one
+  * nlist-candidate expression, for small nlist. The two-level
+  * quantizer routes to S ≈ √nlist supers and ranks only the routed
+  * supers' children through broadcast candidate-array joins:
+  * O(N·2√nlist·dim), no nlist-sized expression. Every two-level entry
+  * point ([[topKTwoLevel]], [[topKTwoLevelAdmit]], the recall walks)
+  * serves from one index build ([[twoLevelIndex]]) through one probe
+  * ([[KMeansPortable.probeChildrenMulti]]); supers = 1 degenerates to
+  * the flat path exactly (spec-pinned). The subspace codebooks are
+  * flat in both: ksub is bounded by construction (256 at 8-bit codes).
+  *
+  * Eager work outside a Lloyd iteration or a walk rung (the dim probe,
+  * the training seeds, the codebook training) runs under the job
+  * description `ivf:<entry point>:<stage>` ([[JobTag]]).
   */
 object IvfPqPortable {
 
   /** Probe the vector width and build the cached uniform-checked
-    * (id, vec, n2) base — shared by both coarse structures. A ragged
-    * corpus (mixed widths) or null vectors would otherwise slice
-    * residuals silently wrong downstream (ADVICE r9); the per-row
-    * guard costs zero on the happy path and fails the FIRST job
-    * loudly (round-10 review). */
+    * (id, vec, n2) base every entry point reads. A ragged corpus
+    * (mixed widths) or null vectors would otherwise slice residuals
+    * silently wrong downstream; the per-row guard costs nothing on the
+    * happy path and fails the first job that reads the base. Both
+    * errors name the entry point `site`. */
   private def checkedBase(vectors: DataFrame, idCol: String,
-      vecCol: String): (DataFrame, Int) = {
-    // fail the (m, dim) contract BEFORE paying a full coarse training
-    // job (review r9): one head row answers it in milliseconds
-    val dimRow = vectors.filter(col(vecCol).isNotNull)
-      .select(size(col(vecCol))).limit(1).collect()
-    require(dimRow.nonEmpty, "topK: empty or all-null vector set")
+      vecCol: String, site: String): (DataFrame, Int) = {
+    // one head row answers the (m, dim) contract before any training
+    val dimRow = JobTag.during(s"ivf:$site:dim")(
+      vectors.filter(col(vecCol).isNotNull)
+        .select(size(col(vecCol))).limit(1).collect())
+    require(dimRow.nonEmpty,
+      s"IvfPqPortable.$site: empty or all-null vector set")
     val dim = dimRow(0).getInt(0)
     val checkedVec = when(col(vecCol).isNotNull &&
         size(col(vecCol)) === lit(dim), col(vecCol).cast("array<double>"))
       .otherwise(raise_error(concat(
-        lit(s"IvfPqPortable.topK: non-uniform vector set — probed dim=$dim, "),
+        lit(s"IvfPqPortable.$site: non-uniform vector set — probed dim=$dim, "),
         lit("but id "), col(idCol).cast("string"), lit(" has "),
         when(col(vecCol).isNull, lit("NULL"))
           .otherwise(size(col(vecCol)).cast("string"))))
@@ -87,44 +85,23 @@ object IvfPqPortable {
     (base, dim)
   }
 
-  /** The shared back half of both coarse structures: per-subspace
-    * codebook training on the residuals, the fused encode +
-    * reconstruct projection, ADC scoring against the probed cells,
-    * shortlist rerank and the exact final top-k. `withRes` must carry
-    * (id, cell, rvec); `centsLit` is the per-CELL centroid matrix the
-    * residuals were taken against (coarse for flat, children for
-    * two-level); `probeCells` carries (anchor_id, a_vec, cell).
+  /** Per-subspace codebook training on the `trainRes` residuals and
+    * the fused encode + reconstruct projection over `withRes`, both
+    * carrying (id, cell, rvec); `centsLit` is the per-cell centroid
+    * matrix the residuals were taken against. Returns (nid, cell,
+    * recon). The admission split passes its corpus rows as `trainRes`;
+    * every other caller passes `withRes` itself.
     */
-  private def encodeAndScore(base: DataFrame, withRes: DataFrame,
-      centsLit: Column, probeCells: DataFrame, k: Int, m: Int,
-      ksub: Int, subIters: Int, rerank: Int, dsub: Int,
-      // the ADMISSION split (q98): codebooks train on the CORPUS
-      // rows' residuals while the encode projection covers the full
-      // relation — null (the default) trains on `withRes` itself
-      trainRes: DataFrame = null): DataFrame =
-    probeScore(base,
-      trainAndEncode(withRes, centsLit, m, ksub, subIters, dsub,
-        trainRes),
-      probeCells, k, rerank)
-
-  /** The rung-INDEPENDENT half of [[encodeAndScore]] (factored in
-    * round 13 so the recall walk trains/encodes once and probes per
-    * rung): per-subspace codebook training on the residuals + the
-    * fused encode/reconstruct projection. Returns (nid, cell, recon).
-    */
-  private def trainAndEncode(withRes: DataFrame, centsLit: Column,
-      m: Int, ksub: Int, subIters: Int, dsub: Int,
-      trainRes: DataFrame = null): DataFrame = {
-    val resForTraining = Option(trainRes).getOrElse(withRes)
-    // NOTE (round 15, measured): running these m independent Lloyd
-    // chains concurrently (guide §2.6 thread-pool overlap) makes the
-    // gate SLOWER at local[32] — 12.4 s vs 8.0 s on q93 — because the
-    // concurrent first touch of the shared cached residual relation
-    // races (each thread computes all partitions) and 4 × 32-task
-    // jobs oversubscribe the box. Sequential is the right shape here.
+  private def trainAndEncode(withRes: DataFrame, trainRes: DataFrame,
+      centsLit: Column, m: Int, ksub: Int, subIters: Int,
+      dsub: Int): DataFrame = {
+    // Sequential on purpose: running the m Lloyd chains concurrently
+    // measured slower at local[32] (q93 12.4 s vs 8.0 s), as each
+    // thread's first touch of the shared cached residuals recomputes
+    // every partition and 4 × 32-task jobs oversubscribe the box.
     val codebooks = (0 until m).map { j =>
       KMeansPortable.trainModel(
-        resForTraining.select(col("id"),
+        trainRes.select(col("id"),
           slice(col("rvec"), j * dsub + 1, dsub).as("svec")),
         ksub, subIters, "id", "svec").centroids
     }.toArray
@@ -146,8 +123,9 @@ object IvfPqPortable {
         concat(cwCols: _*), (c, w) => c + w).as("recon"))
   }
 
-  /** The per-RUNG half of [[encodeAndScore]]: ADC against the probed
-    * cells, shortlist, exact decimal rerank, final top-k. */
+  /** The per-probe half: ADC of the `encoded` rows in the probed
+    * cells (anchor_id, a_vec, cell), shortlist, exact decimal rerank,
+    * final top-k. */
   private def probeScore(base: DataFrame, encoded: DataFrame,
       probeCells: DataFrame, k: Int, rerank: Int): DataFrame = {
     // ---- ADC approximation + shortlist (top `rerank` per anchor by
@@ -183,18 +161,13 @@ object IvfPqPortable {
       nlist: Int, coarseIters: Int, m: Int, ksub: Int, subIters: Int,
       nprobe: Int, rerank: Int,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val (base, dim) = checkedBase(vectors, idCol, vecCol)
+    val site = "topK"
+    val (base, dim) = checkedBase(vectors, idCol, vecCol, site)
     require(dim % m == 0, s"m=$m must divide dim=$dim")
-    val dsub = dim / m
-
-    // ---- training (driver state: nlist·dim + m·ksub·dsub scalars).
-    // Trains FROM the checked cached base, so the ragged-dim guard
-    // covers the FIRST job (round-10 review) and no identical
-    // (id, vec, n2) relation is re-materialized for training
-    // (round 11 — trainModelFromBase reads the SAME cache the encode
-    // stage reads)
-    val coarse = KMeansPortable.trainModelFromBase(
-      base, nlist, coarseIters).centroids
+    // training reads the checked cached base the encode reads, so the
+    // ragged-vector guard covers its first job
+    val coarse = JobTag.during(s"ivf:$site:seed")(
+      KMeansPortable.trainModelFromBase(base, nlist, coarseIters)).centroids
     val centsLit = typedLit(coarse.map(_.toSeq).toSeq)
     // residuals once, shared by all m subspace trainings + encoding
     val withRes = graft.CacheScope.track(
@@ -213,124 +186,112 @@ object IvfPqPortable {
           KMeansPortable.distArray(col("vec"), col("n2"), coarse)),
           1, nprobe)).as("pc"))
       .select(col("anchor_id"), col("a_vec"), col("pc.j").as("cell"))
-    encodeAndScore(base, withRes, centsLit, probeCells, k, m, ksub,
-      subIters, rerank, dsub)
+    val encoded = JobTag.during(s"ivf:$site:encode")(
+      trainAndEncode(withRes, withRes, centsLit, m, ksub, subIters, dim / m))
+    probeScore(base, encoded, probeCells, k, rerank)
   }
 
-  /** [[topK]] with the TWO-LEVEL coarse quantizer — the structure for
+  /** [[topK]] with the TWO-LEVEL coarse quantizer, the structure for
     * corpus-sized nlist (the reference sizes its index to the corpus,
-    * `Docs/SIMILARITY-PLAN.md:55-75`; at nlist ∝ N the flat argmin is
-    * the measured 1075.8 s / megabyte-codegen bottleneck, SCALE.md
-    * round 10). Training is [[KMeansPortable.trainTwoLevel]]; corpus
-    * assignment routes then child-argmins through ONE broadcast
-    * candidate-array join; anchors probe the top-nprobe children OF
-    * THEIR ROUTED SUPER ([[KMeansPortable.probeChildren]] — the IVF
-    * recall trade: a neighbor under another super is invisible, the
-    * same approximation the routing itself makes). Residuals and
-    * reconstruction use the CHILD centroid (the cell the vector
-    * actually lives in). supers = 1 degenerates to [[topK]] EXACTLY:
-    * one super holds every child, so routing is constant, the child
-    * argmin/ranking candidates are all nlist cells under the same
-    * (d, j) order, and training seeds/means coincide (spec-pinned).
-    * Operates on the training corpus, where every routed super is
-    * populated — the childless-super fallback never fires.
+    * `Docs/SIMILARITY-PLAN.md:55-75`). The quantizer trains on the
+    * whole corpus; each anchor probes the top-`nprobe` children of its
+    * top-`probeSupers` supers ([[KMeansPortable.probeChildrenMulti]]).
+    * At probeSupers = 1 that is its routed super's children only: a
+    * neighbor under another super is invisible, the same
+    * approximation the routing makes. Residuals and reconstruction
+    * use the child centroid, the cell the vector lives in. supers = 1
+    * degenerates to [[topK]] exactly: one super holds every child, so
+    * routing is constant and the child ranking covers all nlist cells
+    * under the same (d, j) order (spec-pinned).
     */
   def topKTwoLevel(vectors: DataFrame, anchorPred: Column, k: Int,
       nlist: Int, coarseIters: Int, m: Int, ksub: Int, subIters: Int,
       nprobe: Int, rerank: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      supers: Int = 0, probeSupers: Int = 1): DataFrame = {
-    val (base, dim) = checkedBase(vectors, idCol, vecCol)
-    require(dim % m == 0, s"m=$m must divide dim=$dim")
-    val dsub = dim / m
-    // trains FROM the checked cached base (one shaping, one cache —
-    // the flat topK discipline at the two-level site)
-    val tl = KMeansPortable.trainTwoLevelFromBase(
-      base, nlist, coarseIters, supers)
-    val childLit = typedLit(tl.children.map(_.toSeq).toSeq)
-    // route once (cached): corpus assignment, anchor filtering and
-    // the probe all read the routed relation
-    val routed = graft.CacheScope.track(base.withColumn("super",
-      KMeansPortable.cellExpr(col("vec"), col("n2"), tl.supers)))
-    val withRes = graft.CacheScope.track(
-      KMeansPortable.assignChildren(routed, tl.children, tl.groups)
-        .withColumn("rvec", zip_with(col("vec"),
-          element_at(childLit, col("cell") + 1), (x, c) => x - c)))
-    // probeSupers > 1 widens the anchor probe across super
-    // boundaries (KMeansPortable.probeChildrenMulti — the measured
-    // recall knob); 1 keeps the routed-super probe byte-identical
-    val probeCells = (if (probeSupers == 1)
-        KMeansPortable.probeChildren(
-          routed.filter(anchorPred), tl.children, tl.groups, nprobe)
-      else
-        KMeansPortable.probeChildrenMulti(
-          routed.filter(anchorPred), tl.supers, tl.children, tl.groups,
-          nprobe, probeSupers))
-      .select(col("id").as("anchor_id"), col("vec").as("a_vec"),
-        col("cell"))
-    encodeAndScore(base, withRes, childLit, probeCells, k, m, ksub,
-      subIters, rerank, dsub)
-  }
+      supers: Int = 0, probeSupers: Int = 1): DataFrame =
+    twoLevelIndex("topKTwoLevel", vectors, idCol, vecCol, None, nlist,
+      coarseIters, m, ksub, subIters, supers)
+      .topK(anchorPred, k, nprobe, probeSupers, rerank)
 
-  /** [[topKTwoLevel]] under the ADMISSION split (round 12 — the q91
-    * equivalence statement at the ANN site, under a FULL oracle):
-    * EVERY trained artifact — super centroids, child allocation,
-    * child centroids, subspace codebooks — derives from the
-    * `trainPred` rows alone (the historical corpus), and the index —
-    * routing, child assignment, PQ codes — covers ALL rows (corpus ∪
-    * admitted batch) against that FIXED state. Under fixed quantizers
-    * encode is a pure per-row function, so this inline statement IS
-    * "build the index over the corpus, admit the batch without
-    * retraining, query" — the deployment split
+  /** [[topKTwoLevel]] under the ADMISSION split: every trained
+    * artifact (super centroids, child allocation, child centroids,
+    * subspace codebooks) derives from the `trainPred` rows alone (the
+    * historical corpus), and the index (routing, child assignment, PQ
+    * codes) covers all rows, corpus ∪ admitted batch, against that
+    * fixed state. Under fixed quantizers encoding is a per-row
+    * function, so this is "build the index over the corpus, admit the
+    * batch without retraining, query": the deployment split
     * ([[SimilaritySearch.encodeIvfPqTwoLevel]] /
     * [[SimilaritySearch.admitIvfPqBatchTwoLevel]]) made
-    * oracle-derivable: q98 re-derives train-on-corpus /
-    * apply-to-union value-for-value from the parquet bytes.
-    * `trainPred` ≡ all rows degenerates to [[topKTwoLevel]] exactly
-    * (spec-pinned, including at `probeSupers` > 1 — the multi-super
-    * knob threads through the admission split like every other
-    * two-level query path). Batch rows routed to a CHILDLESS super
-    * (possible only off the training corpus) are dropped from the
-    * index — the oracle's centroid join drops them identically;
-    * anchors routed there probe nothing and vanish from the output
-    * (both sides; at `probeSupers` > 1 a childless super simply
-    * contributes zero candidates to the union — `childCands` emits a
-    * row per super index, so the probe join never drops an anchor).
+    * oracle-derivable (q98). `trainPred` ≡ all rows degenerates to
+    * [[topKTwoLevel]] exactly, at every `probeSupers` (spec-pinned).
+    * A batch row routed to a CHILDLESS super (possible only off the
+    * training corpus) is dropped from the index, as the oracle's
+    * centroid join drops it; an anchor routed there probes nothing at
+    * probeSupers = 1 and is absent from the output, and at
+    * probeSupers > 1 that super adds no candidates to the union.
     */
   def topKTwoLevelAdmit(vectors: DataFrame, trainPred: Column,
       anchorPred: Column, k: Int,
       nlist: Int, coarseIters: Int, m: Int, ksub: Int, subIters: Int,
       nprobe: Int, rerank: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      supers: Int = 0, probeSupers: Int = 1): DataFrame = {
-    val (base, dim) = checkedBase(vectors, idCol, vecCol)
+      supers: Int = 0, probeSupers: Int = 1): DataFrame =
+    twoLevelIndex("topKTwoLevelAdmit", vectors, idCol, vecCol,
+      Some(trainPred), nlist, coarseIters, m, ksub, subIters, supers)
+      .topK(anchorPred, k, nprobe, probeSupers, rerank)
+
+  /** A built two-level IVF-PQ index: the checked `base`, the trained
+    * quantizer, the cached `routed` base (adds `super`) and the
+    * `encoded` (nid, cell, recon) rows. */
+  private final case class TwoLevelIndex(base: DataFrame,
+      model: KMeansPortable.TwoLevelModel, routed: DataFrame,
+      encoded: DataFrame) {
+
+    /** (anchor_id, a_vec, cell): each `anchorPred` row's top-`nprobe`
+      * children over its top-`p` supers. */
+    def probe(anchorPred: Column, nprobe: Int, p: Int): DataFrame =
+      KMeansPortable.probeChildrenMulti(routed.filter(anchorPred),
+          model.supers, model.children, model.groups, nprobe, p)
+        .select(col("id").as("anchor_id"), col("vec").as("a_vec"),
+          col("cell"))
+
+    def topK(anchorPred: Column, k: Int, nprobe: Int, p: Int,
+        rerank: Int): DataFrame =
+      probeScore(base, encoded, probe(anchorPred, nprobe, p), k, rerank)
+  }
+
+  /** The one two-level index build. The quantizer and the codebooks
+    * train on `trainPred`'s rows (all rows when None); routing, child
+    * assignment and encoding cover every row of the checked base.
+    * Rows routed to a childless super get a pseudo-cell ≥ nlist and
+    * leave the index; that never happens on the training rows, where
+    * every routed super received at least one child. With no
+    * `trainPred` the route is the trainer's own cached plan, so
+    * [[graft.CacheScope.track]] keeps one cache of it.
+    */
+  private def twoLevelIndex(site: String, vectors: DataFrame,
+      idCol: String, vecCol: String, trainPred: Option[Column],
+      nlist: Int, coarseIters: Int, m: Int, ksub: Int, subIters: Int,
+      supers: Int): TwoLevelIndex = {
+    val (base, dim) = checkedBase(vectors, idCol, vecCol, site)
     require(dim % m == 0, s"m=$m must divide dim=$dim")
-    val dsub = dim / m
-    // training reads ONLY the corpus slice of the shared cached base
-    val tl = KMeansPortable.trainTwoLevelFromBase(
-      base.filter(trainPred), nlist, coarseIters, supers)
+    val tl = JobTag.during(s"ivf:$site:seed")(
+      KMeansPortable.trainTwoLevelFromBase(
+        trainPred.fold(base)(p => base.filter(p)), nlist, coarseIters,
+        supers))
     val childLit = typedLit(tl.children.map(_.toSeq).toSeq)
-    // route + child-assign ALL rows against the fixed state (the
-    // admission pass — the corpus is assigned identically to a
-    // corpus-only build, per-row function of fixed centroids)
-    val routed = graft.CacheScope.track(base.withColumn("super",
-      KMeansPortable.cellExpr(col("vec"), col("n2"), tl.supers)))
+    val routed = graft.CacheScope.track(
+      KMeansPortable.withSuper(base, tl.supers))
     val withRes = graft.CacheScope.track(
       KMeansPortable.assignChildren(routed, tl.children, tl.groups)
-        .filter(col("cell") < lit(tl.children.length))
+        .filter(col("cell") < lit(tl.nlist))
         .withColumn("rvec", zip_with(col("vec"),
           element_at(childLit, col("cell") + 1), (x, c) => x - c)))
-    val probeCells = (if (probeSupers == 1)
-        KMeansPortable.probeChildren(
-          routed.filter(anchorPred), tl.children, tl.groups, nprobe)
-      else
-        KMeansPortable.probeChildrenMulti(
-          routed.filter(anchorPred), tl.supers, tl.children, tl.groups,
-          nprobe, probeSupers))
-      .select(col("id").as("anchor_id"), col("vec").as("a_vec"),
-        col("cell"))
-    encodeAndScore(base, withRes, childLit, probeCells, k, m, ksub,
-      subIters, rerank, dsub, trainRes = withRes.filter(trainPred))
+    val encoded = JobTag.during(s"ivf:$site:encode")(
+      trainAndEncode(withRes, trainPred.fold(withRes)(p => withRes.filter(p)),
+        childLit, m, ksub, subIters, dim / m))
+    TwoLevelIndex(base, tl, routed, encoded)
   }
 
   /** IVF-FLAT top-k over the RELATIONAL two-level structure (round 15
@@ -362,11 +323,13 @@ object IvfPqPortable {
       k: Int, nlist: Int, iters: Int, nprobe: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
       supers: Int = 0): DataFrame = {
-    val (base, _) = checkedBase(vectors, idCol, vecCol)
-    val rel = KMeansPortable.trainTwoLevelRelationalFromBase(
-      base, nlist, iters, supers)
-    val routed = graft.CacheScope.track(base.withColumn("super",
-      KMeansPortable.cellExpr(col("vec"), col("n2"), rel.supers)))
+    val site = "topKCoarseRelational"
+    val (base, _) = checkedBase(vectors, idCol, vecCol, site)
+    val rel = JobTag.during(s"ivf:$site:seed")(
+      KMeansPortable.trainTwoLevelRelationalFromBase(
+        base, nlist, iters, supers))
+    val routed = graft.CacheScope.track(
+      KMeansPortable.withSuper(base, rel.supers))
     val assigned = graft.CacheScope.track(
       KMeansPortable.assignChildrenRelational(routed, rel.childRel))
     topKCoarseRelationalIndexed(assigned, anchorPred, k, rel, nprobe)
@@ -392,10 +355,8 @@ object IvfPqPortable {
       col("cvec"),
       RhpExpressions.decimalScaledDot(col("cvec"), col("cvec"))
         .as("__cn2"))
-    val anchors = assigned.filter(anchorPred)
-      .select(col("id"), col("vec"), col("n2"))
-      .withColumn("super",
-        KMeansPortable.cellExpr(col("vec"), col("n2"), rel.supers))
+    val anchors = KMeansPortable.withSuper(assigned.filter(anchorPred)
+      .select(col("id"), col("vec"), col("n2")), rel.supers)
     val wp = org.apache.spark.sql.expressions.Window
       .partitionBy(col("id")).orderBy(col("__d"), col("cell"))
     val probeCells = anchors
@@ -465,10 +426,11 @@ object IvfPqPortable {
        |ORDER BY anchor_id, rank""".stripMargin
   }
 
-  /** Recall walk over the portable two-level tier: train and encode
-    * once ([[topKTwoLevel]]'s exact chain), then climb `ladder` — the
-    * (probeSupers, nprobe) rungs of [[SimilaritySearch.recallLadder]] —
-    * under the [[RecallWalk]] rule. Each rung's recall@k is measured
+  /** Recall walk over the portable two-level tier: build the index
+    * once ([[twoLevelIndex]], the one [[topKTwoLevel]] serves from),
+    * then climb `ladder`, the (probeSupers, nprobe) rungs of
+    * [[SimilaritySearch.recallLadder]], under the [[RecallWalk]] rule.
+    * Each rung's recall@k is measured
     * against the exact decimal-cosine ground truth of ALL `anchorPred`
     * anchors ([[exactTopKDecimal]]: `round(decimal cosine, 6)`, ties by
     * `neighbor_id`), the oracle's `extop` relation. Output: one row per
@@ -510,36 +472,18 @@ object IvfPqPortable {
       idCol: String, vecCol: String,
       supers: Int, site: String, emitRerank: Boolean): DataFrame = {
     RecallWalk.checkWalk(ladder, floor)
-    val (base, dim) = checkedBase(vectors, idCol, vecCol)
-    require(dim % m == 0, s"m=$m must divide dim=$dim")
-    val dsub = dim / m
-    val tl = KMeansPortable.trainTwoLevelFromBase(
-      base, nlist, coarseIters, supers)
-    val childLit = typedLit(tl.children.map(_.toSeq).toSeq)
-    val routed = graft.CacheScope.track(base.withColumn("super",
-      KMeansPortable.cellExpr(col("vec"), col("n2"), tl.supers)))
-    val withRes = graft.CacheScope.track(
-      KMeansPortable.assignChildren(routed, tl.children, tl.groups)
-        .withColumn("rvec", zip_with(col("vec"),
-          element_at(childLit, col("cell") + 1), (x, c) => x - c)))
-    val encoded = graft.CacheScope.track(
-      trainAndEncode(withRes, childLit, m, ksub, subIters, dsub))
+    val built = twoLevelIndex(site, vectors, idCol, vecCol, None, nlist,
+      coarseIters, m, ksub, subIters, supers)
+    // every rung re-reads the encoded rows
+    val ix = built.copy(encoded = graft.CacheScope.track(built.encoded))
     // exact ground truth: the rung tail's own decimal-cosine rule
     // over ALL (anchor, corpus) pairs — the oracle's extop relation,
-    // structurally (anchors broadcast, the cosineTopK shape)
+    // structurally (anchors broadcast, the cosineTopK shape); lazy, so
+    // rung 0 fills its cache under rung 0's job description
     val exact = graft.CacheScope.track(
-      exactTopKDecimalFromBase(base, anchorPred, k))
+      exactTopKDecimalFromBase(ix.base, anchorPred, k))
     val c = RecallWalk.climb(site, ladder, floor) { case (p, np, rr) =>
-      val probeCells = (if (p == 1)
-          KMeansPortable.probeChildren(routed.filter(anchorPred),
-            tl.children, tl.groups, np)
-        else
-          KMeansPortable.probeChildrenMulti(routed.filter(anchorPred),
-            tl.supers, tl.children, tl.groups, np, p))
-        .select(col("id").as("anchor_id"), col("vec").as("a_vec"),
-          col("cell"))
-      SimilaritySearch.meanRecall(
-        probeScore(base, encoded, probeCells, k, rr), exact)
+      SimilaritySearch.meanRecall(ix.topK(anchorPred, k, np, p, rr), exact)
     }
     val rows = c.trail.zipWithIndex.map { case (((p, np, rr), r), i) =>
       (i, p, np, rr, r, i == c.trail.length - 1) }
@@ -559,7 +503,8 @@ object IvfPqPortable {
   private[graft] def exactTopKDecimal(vectors: DataFrame,
       anchorPred: Column, k: Int, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame =
-    exactTopKDecimalFromBase(checkedBase(vectors, idCol, vecCol)._1,
+    exactTopKDecimalFromBase(
+      checkedBase(vectors, idCol, vecCol, "exactTopKDecimal")._1,
       anchorPred, k)
 
   private def exactTopKDecimalFromBase(base: DataFrame,

@@ -6,7 +6,11 @@ import org.apache.spark.sql.SparkSession
   * charge each job to the operator and step behind it. Descriptions
   * read `<operator>:<site>:<step>`: `lloyd:trainModel:iter=0` for a
   * k-means iteration, `walk:topKTwoLevelWalk:rung=2` for a recall-walk
-  * rung, `walk:<site>:sample` for the walk's anchor sample. */
+  * rung, `walk:<site>:sample` for the walk's anchor sample,
+  * `ivf:topKTwoLevel:seed` for the IVF chain's eager work outside
+  * both (stages `dim`, `seed`, `encode`), `oracle:q93:dim` for a
+  * query's oracle-width guard. An inner tag overrides an outer one
+  * for the jobs launched inside it. */
 private[graft] object JobTag {
 
   /** Runs `body` with `desc` as the `spark.job.description` of every

@@ -616,8 +616,8 @@ object KMeansPortable {
   }
 
   /** The portable two-level trainers' first level: S supers by the
-    * flat Lloyd loop, and the base routed to them by [[cellExpr]]
-    * (adds `super`). */
+    * flat Lloyd loop, and the base routed to them ([[withSuper]],
+    * cached). */
   private def routeToSupers(trainer: String, base: DataFrame,
       nlist: Int, iters: Int,
       supers: Int): (Array[Array[Double]], DataFrame) = {
@@ -632,9 +632,17 @@ object KMeansPortable {
     require(s <= nlist, s"supers=$s must not exceed nlist=$nlist")
     val sup = trainModelFromBase(base, s, iters, s"$trainer/supers")
       .centroids
-    (sup, graft.CacheScope.track(
-      base.withColumn("super", cellExpr(col("vec"), col("n2"), sup))))
+    (sup, graft.CacheScope.track(withSuper(base, sup)))
   }
+
+  /** Routes (vec, n2) rows to their nearest super ([[cellExpr]] over
+    * `supers`); adds `super`. The one routing expression of the
+    * portable two-level family: the trainers, [[assignCellsTwoLevel]]
+    * and the IVF chains all route through it, so a base routed twice
+    * against the same supers is the same plan and one cache. */
+  private[graft] def withSuper(rows: DataFrame,
+      supers: Array[Array[Double]]): DataFrame =
+    rows.withColumn("super", cellExpr(col("vec"), col("n2"), supers))
 
   /** The super-restricted child argmin as a RELATIONAL equi-join —
     * [[assignChildren]]'s values through [[childAssignCtes]]'s shape:
@@ -689,9 +697,9 @@ object KMeansPortable {
       .drop("cands")
 
   /** The (super → candidate (j, centroid, nc2) array) relation — the
-    * broadcast side of the ONE hash join both the child argmin
-    * ([[assignChildren]]) and the child ranking ([[probeChildren]])
-    * ride; ≤ nlist rows by construction. */
+    * broadcast side of the hash joins the child argmin
+    * ([[assignChildren]]) and the child ranking ([[probeChildrenMulti]])
+    * ride; one row per super index, ≤ nlist candidates in all. */
   private def childCands(routed: DataFrame,
       children: Array[Array[Double]],
       groups: Array[Array[Int]]): DataFrame = {
@@ -716,29 +724,6 @@ object KMeansPortable {
           RhpExpressions.decimalScaledDot(vec, c.getField("_2"))
           + c.getField("_3")).as("d"),
         c.getField("_1").as("j")))
-
-  /** Top-`nprobe` child cells per routed row — the two-level PROBE
-    * (the IVF query-side sibling of [[assignChildren]]): candidates
-    * are ONLY the routed super's children, ranked by the shared
-    * (d, j) struct order, exploded one row per probed cell (fewer
-    * when the super has fewer children). Rows routed to a childless
-    * super probe nothing and drop — callers probe the training
-    * corpus, where every routed super is populated. Input must carry
-    * (vec, n2, super); adds `cell`.
-    */
-  private[graft] def probeChildren(routed: DataFrame,
-      children: Array[Array[Double]], groups: Array[Array[Int]],
-      nprobe: Int): DataFrame = {
-    require(nprobe >= 1, s"nprobe must be >= 1; got $nprobe")
-    routed.join(broadcast(childCands(routed, children, groups)),
-        Seq("super"), "left")
-      .withColumn("__pc",
-        explode(slice(array_sort(
-          childDistArray(col("cands"), col("vec"), col("n2"))),
-          1, nprobe)))
-      .withColumn("cell", col("__pc.j"))
-      .drop("cands", "__pc")
-  }
 
   /** The multi-super probe's OPERATING RULE as code (round 12 — the
     * measured recall table's arithmetic, SCALE.md): a top-p probe
@@ -767,27 +752,26 @@ object KMeansPortable {
     math.max(1, math.ceil(math.sqrt(nlist.toDouble)).toInt)
   }
 
-  /** MULTI-SUPER probe (round 12 — VERDICT r11 item 2): rank the
-    * UNION of the top-`probeSupers` supers' children under the same
-    * (d, j) struct order, take the top `nprobe`. One-super routing
-    * systematically loses an anchor's true neighbors across super
-    * boundaries (the documented IVF recall trade — boundary anchors'
-    * nearest cells often live under the runner-up super); probing
-    * p > 1 supers recovers them at p× the candidate-ranking cost,
-    * which is the measured recall knob (SCALE.md round 12), the
-    * IMI/FAISS multi-probe discipline.
+  /** The two-level PROBE, the query-side sibling of
+    * [[assignChildren]]: per row, rank the UNION of its top-
+    * `probeSupers` supers' children under the shared (d, j) struct
+    * order and explode the top `nprobe` cells, one row each (fewer
+    * when the union holds fewer children). At probeSupers = 1 the
+    * top-1 super is the routed argmin ([[withSuper]]), so the probe
+    * ranks only the routed super's children; a row routed to a
+    * childless super probes nothing and drops. probeSupers = S ranks
+    * ALL children: the flat probe over the same child centroids
+    * (both spec-pinned). Widening p recovers the neighbors one-super
+    * routing loses across super boundaries, at p× the ranking cost
+    * (the IMI/FAISS multi-probe; measured in SCALE.md round 12).
     *
-    * Plan shape: the top-p supers are ONE S-literal sort (the
-    * routing expression at slice p instead of array_min), and the
-    * union's candidates arrive via `probeSupers` chained broadcast
-    * hash joins of the same ≤S-row candidate relation — p is a
-    * plan-time constant, so the probe stays zero-shuffle exactly
-    * like the p = 1 path. Children partition across supers, so the
-    * union has no duplicates. probeSupers = 1 ≡ [[probeChildren]]
-    * (top-1 super IS the routed argmin); probeSupers = S ranks ALL
-    * children — the flat probe over the same child centroids
-    * (both spec-pinned). Input must carry (vec, n2); `supers` is
-    * the super-centroid matrix (the routing literals). Adds `cell`.
+    * Plan shape: the top-p supers are one S-literal sort (the routing
+    * expression at slice p instead of array_min), and the union's
+    * candidates arrive through p chained broadcast hash joins of the
+    * same ≤ S-row candidate relation. p is a plan-time constant, so
+    * the probe never shuffles. Children partition across supers, so
+    * the union has no duplicates. Input must carry (vec, n2);
+    * `supers` is the super-centroid matrix. Adds `cell`.
     */
   private[graft] def probeChildrenMulti(anchors: DataFrame,
       supers: Array[Array[Double]], children: Array[Array[Double]],
@@ -828,9 +812,7 @@ object KMeansPortable {
     * routing already asserts for them. [[twoLevelCtes]] replays the
     * same fallback, so an artifact-split gate stays hash-exact. */
   def assignCellsTwoLevel(base: DataFrame, m: TwoLevelModel): DataFrame =
-    assignChildren(
-      base.withColumn("super", cellExpr(col("vec"), col("n2"), m.supers)),
-      m.children, m.groups)
+    assignChildren(withSuper(base, m.supers), m.children, m.groups)
 
   /** The DuckDB re-derivation of [[train]] — `iters` unrolled Lloyd
     * iterations over the same decimal arithmetic. Generated, not

@@ -1173,10 +1173,11 @@ object SimilaritySearch {
       if (!residual) vectors
       else {
         val centB = spark.sparkContext.broadcast(cents)
+        val allIdx = cents.indices.toArray
         vectors.select(col(vecCol).cast("array<double>").as("v"))
           .as[Array[Double]]
           .map { v =>
-            val c = centB.value(nearestCentroid(v, centB.value))
+            val c = centB.value(routeAmong(v, centB.value, allIdx))
             val r = new Array[Double](v.length)
             var t = 0
             while (t < v.length) { r(t) = v(t) - c(t); t += 1 }
@@ -1234,23 +1235,6 @@ object SimilaritySearch {
     try loadArtifacts(in) finally in.close()
   }
 
-  /** Nearest coarse centroid by L2, ties to the lowest index — the
-    * Spark ML KMeans assignment semantics, reimplemented so the
-    * QUERY path needs artifacts only, no fitted model object. */
-  private def nearestCentroid(v: Array[Double],
-      cents: Array[Array[Double]]): Int = {
-    var best = 0; var bestD = Double.MaxValue
-    var i = 0
-    while (i < cents.length) {
-      var d = 0.0; var t = 0
-      val c = cents(i)
-      while (t < v.length) { val x = v(t) - c(t); d += x * x; t += 1 }
-      if (d < bestD) { bestD = d; best = i }
-      i += 1
-    }
-    best
-  }
-
   /** IVF+PQ QUERY path against pre-trained [[IvfPqArtifacts]] — the
     * deployment shape: artifacts broadcast, cell assignment and PQ
     * encoding are zero-shuffle maps over the corpus, the coarse
@@ -1275,6 +1259,7 @@ object SimilaritySearch {
     val residual = artifacts.residual
     val cbB = spark.sparkContext.broadcast(artifacts.codebooks)
     val centB = spark.sparkContext.broadcast(artifacts.coarseCentroids)
+    val allIdx = artifacts.coarseCentroids.indices.toArray
     val feat = vectors.select(col(idCol).cast("long").as("id"),
       col(vecCol).cast("array<double>").as("v"))
     // encode + cell-assign FUSED in one zero-shuffle pass (joining two
@@ -1282,7 +1267,7 @@ object SimilaritySearch {
     // corpus-sized sort-merge join)
     val encoded = feat.as[(Long, Array[Double])]
       .map { case (id, v) =>
-        val cell = nearestCentroid(v, centB.value)
+        val cell = routeAmong(v, centB.value, allIdx)
         val enc =
           if (!residual) v
           else {
@@ -1418,8 +1403,9 @@ object SimilaritySearch {
     val dim = dimRow(0).getInt(0)
     val superCents = trainSupersML(dv, s, dim, seed)
     val scB = spark.sparkContext.broadcast(superCents)
+    val allIdx = superCents.indices.toArray
     val routed = graft.CacheScope.track(
-      dv.as[Array[Double]].map(v => (nearestCentroid(v, scB.value), v))
+      dv.as[Array[Double]].map(v => (routeAmong(v, scB.value, allIdx), v))
         .toDF("super", "v"))
     val counts = routed.groupBy(col("super")).agg(count(lit(1)).as("n"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
@@ -1450,23 +1436,12 @@ object SimilaritySearch {
 
   /** Route `v` to its nearest POPULATED super, then to the nearest
     * child within that super's group (ties to the lowest index at
-    * both levels — the [[nearestCentroid]] rule). Routing targets
+    * both levels — the [[routeAmong]] rule). Routing targets
     * populated supers only, so both the encode/assign map and the
     * probe's equi-join see the same domain and no vector is ever
     * cell-less. O(S + nlist/S) per row vs the flat O(nlist). */
-  private[graft] def nearestChild(v: Array[Double], c: TwoLevelCoarse): Int = {
-    val g = c.groups(routeSuper(v, c))
-    var bj = g(0); var bd = Double.MaxValue
-    var k = 0
-    while (k < g.length) {
-      val cc = c.children(g(k))
-      var d = 0.0; var t = 0
-      while (t < v.length) { val x = v(t) - cc(t); d += x * x; t += 1 }
-      if (d < bd) { bd = d; bj = g(k) }
-      k += 1
-    }
-    bj
-  }
+  private[graft] def nearestChild(v: Array[Double], c: TwoLevelCoarse): Int =
+    routeAmong(v, c.children, c.groups(routeAmong(v, c.supers, c.populated)))
 
   /** The (cell, cvec, super) child relation of a coarse structure as
     * a public DataFrame — the probe relation both two-level query
@@ -1521,23 +1496,38 @@ object SimilaritySearch {
     * query and admission path needs first; the training loop reuses
     * this join as its assignment step when it lands.
     */
-  /** Route `v` to its nearest centroid among the `pop` indexes of
-    * `sup` — the relation paths' routing kernel (the routeSuper
-    * contract over an explicit populated set: a vector routed to a
-    * childless super would join zero child rows and silently
-    * vanish). Ties to the lowest index (strict <). */
+  /** The native L2 argmin: `v`'s nearest centroid among the `pop`
+    * indexes of `sup` (every index, a populated-super set, or a
+    * super's child group). Squared distances accumulate in index
+    * order and ties go to the first of `pop` (strict <), the lowest
+    * index for the ascending sets every caller passes — the Spark ML
+    * KMeans assignment rule, so a query path needs artifacts only, no
+    * fitted model object. Restricting `pop` to populated supers keeps
+    * a vector from routing to a childless super, where it would join
+    * zero child rows and vanish. */
   private[graft] def routeAmong(v: Array[Double], sup: Array[Array[Double]],
       pop: Array[Int]): Int = {
     var best = pop(0); var bestD = Double.MaxValue
     var pi = 0
     while (pi < pop.length) {
-      val c = sup(pop(pi))
-      var d = 0.0; var t = 0
-      while (t < v.length) { val x = v(t) - c(t); d += x * x; t += 1 }
+      val d = sqDist(v, sup(pop(pi)))
       if (d < bestD) { bestD = d; best = pop(pi) }
       pi += 1
     }
     best
+  }
+
+  /** The `p` nearest of the `pop` indexes of `sup` to `v`, by
+    * (distance, index): the multi-super probe's map-side routing. */
+  private def nearestAmong(v: Array[Double], sup: Array[Array[Double]],
+      pop: Array[Int], p: Int): Array[Int] =
+    pop.map(i => (sqDist(v, sup(i)), i)).sorted.take(p).map(_._2)
+
+  /** Squared L2 distance, accumulated in index order. */
+  private def sqDist(v: Array[Double], c: Array[Double]): Double = {
+    var d = 0.0; var t = 0
+    while (t < v.length) { val x = v(t) - c(t); d += x * x; t += 1 }
+    d
   }
 
   /** The populated-super domain of a child relation — one bounded
@@ -1628,8 +1618,8 @@ object SimilaritySearch {
     * per iteration would double the per-row distance work for
     * nothing). Each cogroup group materializes its super's children
     * once (nlist/S × dim doubles of bounded state) and runs the
-    * broadcast path's exact tight loop: index-ordered accumulation,
-    * lowest-cell ties. */
+    * broadcast path's argmin ([[routeAmong]] over the cell-sorted
+    * children): index-ordered accumulation, lowest-cell ties. */
   private[graft] def assignPreRoutedFused(routedDf: DataFrame,
       childRel: DataFrame): DataFrame = {
     val spark = routedDf.sparkSession
@@ -1644,19 +1634,11 @@ object SimilaritySearch {
     routed.cogroup(children) { (_, vs, cs) =>
       val cands = cs.map { case (_, cell, cv) => (cell, cv) }
         .toArray.sortBy(_._1)
+      val cvecs = cands.map(_._2)
+      val all = cvecs.indices.toArray
       if (cands.isEmpty) Iterator.empty
       else vs.map { case (id, v, _) =>
-        var bj = cands(0)._1; var bd = Double.MaxValue
-        var k = 0
-        while (k < cands.length) {
-          val cc = cands(k)._2
-          var d = 0.0; var t = 0
-          while (t < v.length) { val x = v(t) - cc(t); d += x * x; t += 1 }
-          if (d < bd) { bd = d; bj = cands(k)._1 }
-          k += 1
-        }
-        (id, bj, v)
-      }
+        (id, cands(routeAmong(v, cvecs, all))._1, v) }
     }.toDF("id", "cell", "vec")
   }
 
@@ -1781,14 +1763,7 @@ object SimilaritySearch {
       .filter(anchorPred))
     val anchorsRouted = anchors.as[(Long, Array[Double])]
       .flatMap { case (id, v) =>
-        val sup = sB.value; val pop = pB.value
-        val byDist = pop.map { i =>
-          val cc = sup(i)
-          var d = 0.0; var t = 0
-          while (t < v.length) { val x = v(t) - cc(t); d += x * x; t += 1 }
-          (d, i)
-        }.sorted.take(p).map(_._2)
-        byDist.map(su => (id, v, su))
+        nearestAmong(v, sB.value, pB.value, p).map(su => (id, v, su))
       }.toDF("anchor_id", "a_vec", "super")
     val probeCells = coarse.childRel
       .join(broadcast(anchorsRouted), Seq("super"))
@@ -1897,13 +1872,7 @@ object SimilaritySearch {
     val anchors = graft.CacheScope.track(feat.filter(anchorPred))
     val anchorsRouted = anchors.as[(Long, Array[Double])]
       .flatMap { case (id, v) =>
-        val sup = sB.value; val pop = pB.value
-        pop.map { i =>
-          val cc = sup(i)
-          var d = 0.0; var t = 0
-          while (t < v.length) { val x = v(t) - cc(t); d += x * x; t += 1 }
-          (d, i)
-        }.sorted.take(p).map(_._2).map(su => (id, v, su))
+        nearestAmong(v, sB.value, pB.value, p).map(su => (id, v, su))
       }.toDF("anchor_id", "a_vec", "super")
     val probeCells = coarse.childRel
       .join(broadcast(anchorsRouted), Seq("super"))
@@ -1946,31 +1915,16 @@ object SimilaritySearch {
         pred, k, artifacts, np, r, idCol, vecCol, p)
     }
 
-  /** The routed super of `v` over the populated domain — the probe's
-    * map-side half (the join against the (cell, cvec, super) relation
-    * is the other). */
-  private def routeSuper(v: Array[Double], c: TwoLevelCoarse): Int = {
-    var best = c.populated(0); var bestD = Double.MaxValue
-    var pi = 0
-    while (pi < c.populated.length) {
-      val i = c.populated(pi)
-      val cc = c.supers(i)
-      var d = 0.0; var t = 0
-      while (t < v.length) { val x = v(t) - cc(t); d += x * x; t += 1 }
-      if (d < bestD) { bestD = d; best = i }
-      pi += 1
-    }
-    best
-  }
-
   /** The top-`p` populated supers of `v` by (distance, index) — the
     * MULTI-SUPER probe's map-side half (round 12): one-super routing
     * systematically loses a boundary anchor's neighbors under the
     * runner-up super, so the probe may fan an anchor across p supers
     * and rank the union of their children (the IMI/FAISS multi-probe
     * discipline; the measured recall curve is SCALE.md round 12's).
-    * p = 1 is exactly [[routeSuper]]. O(S·(dim + log S)) per anchor —
-    * anchors only, never the corpus. */
+    * p = 1 picks [[nearestChild]]'s routed super: the least (d, i) is the
+    * first strict-< minimum, also when every distance is NaN or
+    * infinite (both then pick the first populated super).
+    * O(S·(dim + log S)) per anchor — anchors only, never the corpus. */
   private def routeSupersTopP(v: Array[Double], c: TwoLevelCoarse,
       p: Int): Array[Int] = {
     // the ONE probeSupers contract (round-12 review): 1 ≤ p ≤ S at
@@ -1979,13 +1933,7 @@ object SimilaritySearch {
     // or degenerates where a sibling throws
     require(p >= 1 && p <= c.supers.length,
       s"probeSupers must be 1..${c.supers.length}; got $p")
-    if (p == 1) return Array(routeSuper(v, c))
-    c.populated.map { i =>
-      val cc = c.supers(i)
-      var d = 0.0; var t = 0
-      while (t < v.length) { val x = v(t) - cc(t); d += x * x; t += 1 }
-      (d, i)
-    }.sortBy(identity).take(p).map(_._2)
+    nearestAmong(v, c.supers, c.populated, p)
   }
 
   /** IVF-flat top-k over the two-level structure — the
@@ -2019,7 +1967,7 @@ object SimilaritySearch {
     // probeSupers > 1 fans each anchor across its top-p supers; the
     // per-anchor topKByScore below already ranks the UNION of
     // whatever (cell, cvec) rows arrive, so the widening is confined
-    // to this map (p = 1 ≡ routeSuper, byte-identical)
+    // to this map (p = 1 ≡ nearestChild's routed super)
     val anchorsRouted = feat.filter(anchorPred)
       .as[(Long, Array[Double])]
       .flatMap { case (id, v) =>
@@ -2319,7 +2267,7 @@ object SimilaritySearch {
     val centDf = childCentDf(spark, coarse)
     // probeSupers > 1 fans each anchor across its top-p supers (the
     // ivfCosineTopKTwoLevel widening — the per-anchor topKByScore
-    // ranks the union; p = 1 ≡ routeSuper, byte-identical)
+    // ranks the union; p = 1 ≡ nearestChild's routed super)
     val anchorsRouted = feat.filter(anchorPred)
       .as[(Long, Array[Double])]
       .flatMap { case (id, v) =>

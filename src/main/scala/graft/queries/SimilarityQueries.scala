@@ -408,16 +408,7 @@ object SimilarityQueries {
     * alone. */
   private def q85(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables(s, dir).embeddings
-    // the oracle below inlines dim = 64 (DuckDB unrolls the subspace
-    // slices at text-generation time, before seeing data); the Spark
-    // side infers dim, so a dataset with another width would silently
-    // gate against a mismatched oracle — fail HERE instead (ADVICE
-    // r9). One-row probe, the topK dim-probe cost class.
-    val probed = emb.filter(col("embedding").isNotNull)
-      .select(size(col("embedding"))).limit(1).collect()
-    require(probed.nonEmpty && probed(0).getInt(0) == Q85Dim,
-      s"q85 oracle is generated for dim=$Q85Dim; data has " +
-        probed.headOption.map(_.getInt(0)).getOrElse(-1))
+    requireQ85Dim(emb, "q85")
     graft.operators.IvfPqPortable.topK(emb,
         col("id") < 20, k = 5, nlist = 8, coarseIters = 2, m = 4,
         ksub = 8, subIters = 2, nprobe = 2, rerank = 16)
@@ -428,6 +419,20 @@ object SimilarityQueries {
     * single shared constant between the Spark-side guard and the
     * generated SQL. */
   private val Q85Dim = 64
+
+  /** Fails `query` unless the embeddings are [[Q85Dim]] wide. The
+    * oracle text unrolls the subspace slices for that width before it
+    * sees data, while the Spark side infers dim, so data of another
+    * width would gate against a mismatched oracle. One head row, run
+    * under the job description `oracle:<query>:dim`. */
+  private def requireQ85Dim(emb: DataFrame, query: String): Unit = {
+    val probed = graft.operators.JobTag.during(s"oracle:$query:dim")(
+      emb.filter(col("embedding").isNotNull)
+        .select(size(col("embedding"))).limit(1).collect())
+    require(probed.nonEmpty && probed(0).getInt(0) == Q85Dim,
+      s"$query oracle is generated for dim=$Q85Dim; data has " +
+        probed.headOption.map(_.getInt(0)).getOrElse(-1))
+  }
 
   private val q85Sql = graft.operators.IvfPqPortable.oracleSql(
     "embeddings", "vec_id", "embedding", k = 5, nlist = 8,
@@ -450,13 +455,7 @@ object SimilarityQueries {
     */
   private def q93(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables(s, dir).embeddings
-    // same dim-inlining guard as q85 (the oracle text unrolls the
-    // subspace slices for dim = 64 before seeing data)
-    val probed = emb.filter(col("embedding").isNotNull)
-      .select(size(col("embedding"))).limit(1).collect()
-    require(probed.nonEmpty && probed(0).getInt(0) == Q85Dim,
-      s"q93 oracle is generated for dim=$Q85Dim; data has " +
-        probed.headOption.map(_.getInt(0)).getOrElse(-1))
+    requireQ85Dim(emb, "q93")
     graft.operators.IvfPqPortable.topKTwoLevel(emb,
         col("id") < 20, k = 5, nlist = 8, coarseIters = 2, m = 4,
         ksub = 8, subIters = 2, nprobe = 2, rerank = 16)
@@ -484,11 +483,7 @@ object SimilarityQueries {
     */
   private def q97(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables(s, dir).embeddings
-    val probed = emb.filter(col("embedding").isNotNull)
-      .select(size(col("embedding"))).limit(1).collect()
-    require(probed.nonEmpty && probed(0).getInt(0) == Q85Dim,
-      s"q97 oracle is generated for dim=$Q85Dim; data has " +
-        probed.headOption.map(_.getInt(0)).getOrElse(-1))
+    requireQ85Dim(emb, "q97")
     graft.operators.IvfPqPortable.topKTwoLevel(emb,
         col("id") < 20, k = 5, nlist = 8, coarseIters = 2, m = 4,
         ksub = 8, subIters = 2, nprobe = 2, rerank = 16,
@@ -521,11 +516,7 @@ object SimilarityQueries {
     */
   private def q98(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables(s, dir).embeddings
-    val probed = emb.filter(col("embedding").isNotNull)
-      .select(size(col("embedding"))).limit(1).collect()
-    require(probed.nonEmpty && probed(0).getInt(0) == Q85Dim,
-      s"q98 oracle is generated for dim=$Q85Dim; data has " +
-        probed.headOption.map(_.getInt(0)).getOrElse(-1))
+    requireQ85Dim(emb, "q98")
     graft.operators.IvfPqPortable.topKTwoLevelAdmit(emb,
         trainPred = col("id") % 10 < 8, anchorPred = col("id") < 12,
         k = 5, nlist = 8, coarseIters = 2, m = 4,
@@ -569,11 +560,7 @@ object SimilarityQueries {
 
   private def q102(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables(s, dir).embeddings
-    val probed = emb.filter(col("embedding").isNotNull)
-      .select(size(col("embedding"))).limit(1).collect()
-    require(probed.nonEmpty && probed(0).getInt(0) == Q85Dim,
-      s"q102 oracle is generated for dim=$Q85Dim; data has " +
-        probed.headOption.map(_.getInt(0)).getOrElse(-1))
+    requireQ85Dim(emb, "q102")
     graft.operators.IvfPqPortable.topKTwoLevelWalk(emb,
       col("id") < 20, k = 5, nlist = 8, coarseIters = 2, m = 4,
       ksub = 8, subIters = 2, rerank = 16,
@@ -639,11 +626,7 @@ object SimilarityQueries {
 
   private def q105(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables(s, dir).embeddings
-    val probed = emb.filter(col("embedding").isNotNull)
-      .select(size(col("embedding"))).limit(1).collect()
-    require(probed.nonEmpty && probed(0).getInt(0) == Q85Dim,
-      s"q105 oracle is generated for dim=$Q85Dim; data has " +
-        probed.headOption.map(_.getInt(0)).getOrElse(-1))
+    requireQ85Dim(emb, "q105")
     graft.operators.IvfPqPortable.topKTwoLevelWalkPq(emb,
       col("id") < 20, k = 5, nlist = 8, coarseIters = 2, m = 4,
       ksub = 8, subIters = 2, ladder = Q105Ladder, floor = Q105Floor)

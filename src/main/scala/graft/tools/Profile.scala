@@ -30,8 +30,9 @@ import scala.util.control.NonFatal
   * it, so [[measure]] also runs inside a shared session. A failing
   * query reports its cause in `error` and the sweep goes on; the last
   * rep of each query also prints one line per job (start offset,
-  * duration, tasks, call site, and the job description an operator
-  * set, such as `lloyd:trainModel:iter=0`).
+  * duration, tasks, call site, the job description an operator set,
+  * such as `lloyd:trainModel:iter=0`, and `(output)` on the jobs of
+  * the query's output action).
   *
   * Run: sbt "runMain graft.tools.Profile <sfDir> [reps] [qNN,…]"
   * (reps default 2: cold then warm; the prefix list selects queries
@@ -45,9 +46,12 @@ object Profile {
       desc: String)
 
   /** One measurement of one query. `metrics` holds the dotted fields
-    * in print order; `rows` is -1 when the query failed. */
+    * in print order; `rows` is -1 when the query failed. `outputAt`
+    * is the epoch millisecond the output action began: jobs started
+    * earlier are the operators' own eager work. */
   final case class Result(query: String, rows: Long, wallS: Double,
-      metrics: Seq[(String, Double)], jobs: Seq[Job], error: Option[String])
+      metrics: Seq[(String, Double)], jobs: Seq[Job], error: Option[String],
+      outputAt: Long)
 
   /** (job_s, gap_s, overlap_s) of job intervals in epoch ms over a
     * wall of `wallS` seconds: job_s is the length of their union,
@@ -142,9 +146,11 @@ object Profile {
     val rec = new Recorder(spark)
     var rows = -1L
     var error: Option[String] = None
+    var outputAt = Long.MaxValue
     val t0 = System.nanoTime()
     try {
       val df = SparkEntry.queries(name)(spark, dir)
+      outputAt = System.currentTimeMillis()
       rows = Measure.force(df)
       rec.phases(df.queryExecution)
     } catch { case NonFatal(e) => error = Some(e.toString) }
@@ -166,7 +172,7 @@ object Profile {
       "sched.overlap_s" -> overlapS,
       "shuffle.write_mb" -> rec.written / 1e6,
       "shuffle.read_mb" -> rec.read / 1e6,
-      "spill.mb" -> rec.spilled / 1e6), jobs, error)
+      "spill.mb" -> rec.spilled / 1e6), jobs, error, outputAt)
   }
 
   private val Counts = Set("codegen.units", "sched.jobs", "sched.tasks")
@@ -199,7 +205,8 @@ object Profile {
           r.jobs.foreach { j =>
             println(f"  job ${j.id}%4d +${(j.start - base) / 1e3}%8.3fs " +
               f"dur ${(j.end - j.start) / 1e3}%7.3fs tasks ${j.tasks}%5d  ${j.site}" +
-              (if (j.desc.isEmpty) "" else s"  [${j.desc}]"))
+              (if (j.desc.isEmpty) "" else s"  [${j.desc}]") +
+              (if (j.start >= r.outputAt) "  (output)" else ""))
           }
         }
       }

@@ -94,6 +94,29 @@ class IvfPqPortableSpec extends SparkSpec {
     assert(e.getMessage.contains("must divide dim"))
   }
 
+  test("a null or ragged vector fails the walk and the relational tier with an error naming the entry point") {
+    def withVec(id: Long, v: Array[Double]) =
+      corpus.as[(Long, Array[Double])]
+        .map { case (i, x) => (i, if (i == id) v else x) }
+        .toDF("vec_id", "embedding")
+    def messages(e: Throwable): String =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString(" | ")
+    val entryPoints = Seq[(String, org.apache.spark.sql.DataFrame => Unit)](
+      "topKTwoLevelWalkPq" -> (df => IvfPqPortable.topKTwoLevelWalkPq(df,
+        col("id") < 3, k = 2, nlist = 4, coarseIters = 1, m = 2, ksub = 4,
+        subIters = 1, ladder = Seq((1, 2, 8)), floor = 1.0).collect()),
+      "topKCoarseRelational" -> (df => IvfPqPortable.topKCoarseRelational(
+        df, col("id") < 3, k = 2, nlist = 4, iters = 1, nprobe = 2)
+        .collect()))
+    for ((site, run) <- entryPoints;
+         (bad, cause) <- Seq((null, "has NULL"), (Array(1.0, 2.0, 3.0), "has 3"))) {
+      val e = intercept[Exception](run(withVec(29L, bad)))
+      assert(messages(e).contains(s"IvfPqPortable.$site: non-uniform vector " +
+        s"set — probed dim=$dim, but id 29 $cause"), messages(e))
+    }
+  }
+
   test("ranks are dense 1..k per anchor") {
     val out = IvfPqPortable.topK(corpus, col("id") < 4, k = 6,
         nlist = 2, coarseIters = 2, m = 2, ksub = 4, subIters = 2,
@@ -257,7 +280,7 @@ class IvfPqPortableSpec extends SparkSpec {
         s"rerank 1000 recall ${wide(0).getDouble(4)}")
   }
 
-  test("topKCoarseRelational ≡ the driver-resident twin (trainTwoLevelFromBase + probeChildren + exact decimal rerank) — the q104 serve parity") {
+  test("topKCoarseRelational ≡ the driver-resident twin (trainTwoLevelFromBase + probeChildrenMulti at p=1 + exact decimal rerank) — the q104 serve parity") {
     import graft.operators.{KMeansPortable, SimilaritySearch}
     import org.apache.spark.sql.graft.RhpExpressions
     val emb = spark.read
@@ -275,8 +298,8 @@ class IvfPqPortableSpec extends SparkSpec {
       KMeansPortable.cellExpr(col("vec"), col("n2"), tl.supers))
     val assigned = KMeansPortable.assignChildren(routed, tl.children,
       tl.groups)
-    val probe = KMeansPortable.probeChildren(routed.filter(pred),
-        tl.children, tl.groups, nprobe = 2)
+    val probe = KMeansPortable.probeChildrenMulti(routed.filter(pred),
+        tl.supers, tl.children, tl.groups, nprobe = 2, probeSupers = 1)
       .select(col("id").as("anchor_id"), col("vec").as("a_vec"),
         col("n2").as("a_n2"), col("cell"))
     val cands = probe.join(assigned.select(col("cell"),

@@ -483,11 +483,11 @@ object PlanAuditSpec {
       maxShuffleExchanges = Some(4)),
     // q93: two-level IVF-PQ end-to-end — the q85 statement at the
     // hierarchical coarse quantizer: both trainers are driver-side
-    // Lloyd state (outside the final frame); routing and the child
-    // argmin/probe ride ONE broadcast candidate-array join (never an
-    // nlist-sized codegen body, never a vector shuffle); the frame
-    // re-derives encode+reconstruct as a zero-shuffle projection over
-    // the cached routed base
+    // Lloyd state (outside the final frame); the child argmin and the
+    // probe (probeChildrenMulti at p = 1) each ride one broadcast
+    // candidate-array join (never an nlist-sized codegen body, never
+    // a vector shuffle); the frame re-derives encode+reconstruct as a
+    // zero-shuffle projection over the cached routed base
     Check("q93_ivfpq_twolevel_oracle",
       mustContain = Seq("BroadcastHashJoin", "InMemoryTableScan"),
       mustNotContain = Seq("CartesianProduct", "BroadcastNestedLoopJoin",
@@ -530,10 +530,10 @@ object PlanAuditSpec {
       // bucketed table in IvfPqPortableSpec)
       maxShuffleExchanges = Some(10)),
     // q97: the q93 chain with the probe widened to the top-2 supers
-    // (probeChildrenMulti) — the widening is a per-anchor flatMap over
-    // the SAME broadcast candidate join, so the exchange set must
-    // stay q93's; a new exchange here would mean the multi-super
-    // union started shuffling anchors
+    // (probeChildrenMulti at p = 2) — the widening is a second
+    // broadcast join of the same candidate relation, so the exchange
+    // set must stay q93's; a new exchange here would mean the
+    // multi-super union started shuffling anchors
     Check("q97_ivfpq_multiprobe_oracle",
       mustContain = Seq("BroadcastHashJoin", "InMemoryTableScan"),
       mustNotContain = Seq("CartesianProduct", "BroadcastNestedLoopJoin",

@@ -72,6 +72,11 @@ class ProfileSpec extends SparkSpec {
     val rungs = q102.jobs.map(_.desc).filter(_.startsWith("walk:"))
     assert(rungs.contains("walk:topKTwoLevelWalk:rung=0"), q102.jobs.map(_.desc))
     assert(rungs.forall(_.matches("walk:topKTwoLevelWalk:rung=\\d+")), rungs)
+    // every job before the output action is charged to an operator step
+    val eager = q102.jobs.filter(_.start < q102.outputAt)
+    assert(eager.nonEmpty && eager.forall(_.desc.nonEmpty),
+      eager.filter(_.desc.isEmpty).map(_.site))
+    assert(eager.exists(_.desc == "ivf:topKTwoLevelWalk:seed"), eager.map(_.desc))
     val plain = Profile.measure(spark, q02, sf)
     assert(!plain.jobs.exists(_.desc.startsWith("walk:")), plain.jobs.map(_.desc))
   }

@@ -533,9 +533,10 @@ class SimilaritySpec extends SparkSpec {
     assert(top100._3 === 101L && top100._4 > 0.999)
   }
 
-  test("multi-super probe: p=1 ≡ probeChildren; p=S ranks ALL children; q97 widening changes only the probe") {
+  test("multi-super probe: p=1 ranks the routed super's children; p=S ranks ALL children; q97 widening changes only the probe") {
     import graft.operators.{IvfPqPortable, KMeansPortable}
-    import org.apache.spark.sql.graft.RhpExpressions
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.graft.{RhpExpressions, RhpKernels}
     val base = emb.select(col("vec_id").cast("long").as("id"),
         col("embedding").cast("array<double>").as("vec"))
       .withColumn("n2",
@@ -546,10 +547,22 @@ class SimilaritySpec extends SparkSpec {
     def cells(df: org.apache.spark.sql.DataFrame) =
       df.select(col("id"), col("cell")).collect()
         .map(r => (r.getLong(0), r.getInt(1))).toSet
-    // p = 1: the top-1 super IS the routed argmin, so the multi
-    // probe degenerates to the one-broadcast-join probe exactly
-    val single = cells(KMeansPortable.probeChildren(
-      routed, m.children, m.groups, nprobe = 2))
+    // p = 1: the top-1 super IS the routed argmin, so the probe is,
+    // per row, the top-2 of its routed super's `groups` entry by
+    // (d, j), d = (n2 − 2·decimalDot(v, c_j)) + nc2_j — computed
+    // here on the driver from the collected rows
+    def dot(a: Array[Double], b: Array[Double]) =
+      RhpKernels.decimalDot(new GenericArrayData(a), new GenericArrayData(b))
+    val byDj = Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Int)
+    val single = routed.select(col("id"), col("vec"), col("n2"),
+        col("super")).collect().flatMap { r =>
+      val v = r.getSeq[Double](1).toArray
+      m.groups(r.getInt(3)).map { j =>
+        val c = m.children(j)
+        ((r.getDouble(2) - 2.0 * dot(v, c)) + dot(c, c), j)
+      }.sorted(byDj).take(2).map(dj => (r.getLong(0), dj._2))
+    }.toSet
+    assert(single.nonEmpty)
     val multi1 = cells(KMeansPortable.probeChildrenMulti(
       routed, m.supers, m.children, m.groups, nprobe = 2,
       probeSupers = 1))
