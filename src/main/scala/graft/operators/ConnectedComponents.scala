@@ -50,17 +50,24 @@ object ConnectedComponents {
     * + node arrays — the same bounded-collect class as the IVF
     * centroids and skew-key lists; graphs above it take the
     * distributed path, which q41 gates at 600k nodes.
-    * Default 0 = always distributed. */
+    * Default 0 = always distributed.
+    *
+    * Every eager job runs under the description `cc:<site>:<step>`
+    * ([[JobTag]]): `edges` for the threshold count, `local` for the
+    * union-find collect, `round=<i>` for the seed (0) and each
+    * propagation round. */
   def components(pairs: DataFrame, aCol: String, bCol: String,
-      maxIter: Int = 50, collectThreshold: Long = 0L): DataFrame = {
+      maxIter: Int = 50, collectThreshold: Long = 0L,
+      site: String = "components"): DataFrame = {
     val spark = pairs.sparkSession
     val edges = graft.CacheScope.track(
       pairs.select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
         .unionByName(pairs.select(col(bCol).cast("long").as("src"),
           col(aCol).cast("long").as("dst")))
         .distinct())
-    if (collectThreshold > 0 && edges.count() <= collectThreshold)
-      return componentsLocal(spark, edges)
+    if (collectThreshold > 0 &&
+        JobTag.during(s"cc:$site:edges")(edges.count()) <= collectThreshold)
+      return JobTag.during(s"cc:$site:local")(componentsLocal(spark, edges))
     // seed with the neighbor-min instead of the identity: label₀ =
     // min(node, incident neighbors) — the same one aggregation shape
     // as a propagation round, but it replaces what would otherwise BE
@@ -78,7 +85,7 @@ object ConnectedComponents {
       val r = df.agg(sum(col("label").cast("decimal(38,0)"))).head()
       if (r.isNullAt(0)) BigDecimal(-1) else BigDecimal(r.getDecimal(0))
     }
-    var prevSum = labelSum(labels)
+    var prevSum = JobTag.during(s"cc:$site:round=0")(labelSum(labels))
     if (prevSum == BigDecimal(-1))
       return labels.select(col("node"), col("label").as("component"))
     var converged = false
@@ -95,11 +102,11 @@ object ConnectedComponents {
         .groupBy(col("node")).agg(min(col("label")).as("label"))
         .localCheckpoint(false)
       // labels decrease monotonically → Σ is a complete change detector
-      val s = labelSum(next)
+      i += 1
+      val s = JobTag.during(s"cc:$site:round=$i")(labelSum(next))
       labels = next
       converged = s == prevSum
       prevSum = s
-      i += 1
     }
     require(converged, s"components did not converge in $maxIter iterations")
     labels.select(col("node"), col("label").as("component"))

@@ -433,14 +433,15 @@ object Dedup {
     require(centroids.nonEmpty)
     val base = KMeansPortable.shapedBase(vectors, idCol, vecCol)
     KMeansPortable.requireBoundedCells("semanticDedupPortable",
-      base.count(), centroids.length, maxCellSize)
+      JobTag.during("semdedup:semanticDedupPortable:cells")(base.count()),
+      centroids.length, maxCellSize)
     // the assignment IS KMeansPortable's — one implementation of the
     // exact-decimal argmin serves training (q78), the fixture
     // application (q76) and the end-to-end chain (q80), so the
     // train/apply arithmetic cannot drift (review r8)
     semanticDedupFromAssigned(vectors,
       KMeansPortable.assignCells(base, centroids), threshold,
-      maxCellSize, idCol, ccCollectThreshold)
+      maxCellSize, idCol, ccCollectThreshold, "semanticDedupPortable")
   }
 
   /** SemDeDup over a TWO-LEVEL quantizer
@@ -465,10 +466,11 @@ object Dedup {
     require(model.nlist > 0)
     val base = KMeansPortable.shapedBase(vectors, idCol, vecCol)
     KMeansPortable.requireBoundedCells("semanticDedupTwoLevel",
-      base.count(), model.nlist, maxCellSize)
+      JobTag.during("semdedup:semanticDedupTwoLevel:cells")(base.count()),
+      model.nlist, maxCellSize)
     semanticDedupFromAssigned(vectors,
       KMeansPortable.assignCellsTwoLevel(base, model), threshold,
-      maxCellSize, idCol, ccCollectThreshold)
+      maxCellSize, idCol, ccCollectThreshold, "semanticDedupTwoLevel")
   }
 
   /** SemDeDup over the RELATIONAL (third-tier) coarse structure
@@ -495,7 +497,7 @@ object Dedup {
         RhpExpressions.decimalScaledDot(col("vec"), col("vec")))
       .select(col("id"), col("vec"), col("n2"), col("cell"))
     semanticDedupFromAssigned(vectors, assigned, threshold,
-      maxCellSize, idCol, ccCollectThreshold)
+      maxCellSize, idCol, ccCollectThreshold, "semanticDedupRelational")
   }
 
   /** AUTO-STRUCTURE SemDeDup — the portable family's front door
@@ -566,10 +568,11 @@ object Dedup {
     * paths cannot drift in cull/score/closure semantics. `assigned`
     * must carry (id, vec, n2, cell); the two-level path's
     * childless-super rows arrive with distinct out-of-range cell ids
-    * and behave like any other cell (cull included). */
+    * and behave like any other cell (cull included). The closure's
+    * jobs read `cc:<site>:…`, `site` naming the entry point. */
   private def semanticDedupFromAssigned(vectors: DataFrame,
       assignedIn: DataFrame, threshold: Double, maxCellSize: Int,
-      idCol: String, ccCollectThreshold: Long): DataFrame = {
+      idCol: String, ccCollectThreshold: Long, site: String): DataFrame = {
     import org.apache.spark.sql.graft.RhpExpressions
     val assigned = graft.CacheScope.track(assignedIn)
     val oversized = assigned.groupBy(col("cell"))
@@ -585,7 +588,7 @@ object Dedup {
       .filter(col("score") >= threshold)
       .select(col("x.id").as("a"), col("y.id").as("b"))
     val comps = ConnectedComponents.components(edges, "a", "b",
-      collectThreshold = ccCollectThreshold)
+      collectThreshold = ccCollectThreshold, site = site)
       .withColumnRenamed("node", "id")
     vectors.select(col(idCol).cast("long").as("id"))
       .join(comps, Seq("id"), "left")

@@ -3,17 +3,16 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graft.GapFillNumber
 
 /** Grouped-decision operators from the reference's catalog build:
   * majority vote (A1), vote-based imputation (A2), per-group ordinal
   * gap-fill (A3), duplicate-group canonicalization (A4/A5).
   *
-  * All are single-shuffle groupBy/window plans; the A3 gap-fill is
-  * expressed relationally (ranked-unused ⋈ ranked-missing) rather
-  * than as a per-group scan, so it distributes — the sequential
-  * "lowest unused number at assignment time" semantics and the
-  * relational form provably coincide because each missing row in
-  * order takes the next smallest unused value.
+  * Each is keyed by its group columns: its aggregations and windows
+  * partition by them and its joins match on them. None holds a
+  * single-partition window or collects to the driver, and per-group
+  * state is bounded by the group's size.
   */
 object Grouping {
 
@@ -66,78 +65,41 @@ object Grouping {
       .drop("majority")
   }
 
-  /** A3: per-group track-number gap fill. Rows with number < 1 (or
-    * null) receive the lowest unused positive integers, assigned in
-    * `orderCol` (basename) order. Valid duplicates keep their value
-    * (the reference only fills, never renumbers).
+  /** A3: per-group track-number gap fill
+    * (reference: info_scanner_ph3.py:40-84). Per group of `groupCols`:
+    *   - a `numberCol` value < 1 or null is missing;
+    *   - each missing row, in `orderCol` order, takes the lowest
+    *     positive integer not used by a valid row of the group and
+    *     not given to an earlier missing row;
+    *   - valid numbers keep their value, duplicates included;
+    *   - a valid number beyond Int range fails (`exceeds Int range`)
+    *     instead of wrapping;
+    *   - a missing row with a null group key fails (`null group key`).
+    * The output has the input's columns in the input's order, with
+    * `numberCol` as int.
     *
-    * Relational formulation: rank the missing rows per group; rank
-    * the unused numbers in 1..(maxNeeded); join on rank. Unused =
-    * sequence anti-join used. Reference: info_scanner_ph3.py:40-84.
-    * Group keys must be NON-NULL (a null key raises at runtime —
-    * the rank join could never deliver its fill number); valid
-    * numbers beyond Int range raise rather than wrap.
+    * One keyed pass: a window partitioned by the group keys (no
+    * single-partition window, no driver collect; an input already
+    * hash-partitioned on some of the keys is not shuffled again)
+    * sorts each group valid numbers first, ascending, then the missing
+    * rows by `orderCol`, and [[GapFillNumber]] walks it once, holding
+    * only the group's distinct used numbers — bounded by the group's
+    * size, never by its largest number.
     */
   def gapFillNumbers(df: DataFrame, groupCols: Seq[String],
       numberCol: String, orderCol: String): DataFrame = {
-    val g = groupCols.map(col)
-    val valid = col(numberCol).isNotNull && col(numberCol) >= 1
-    // rank missing rows per group in orderCol order (valid rows get a
-    // separate, unused numbering via the validity flag in the key)
-    val wMiss = Window
-      .partitionBy((g :+ when(valid, lit(0)).otherwise(lit(1))): _*)
-      .orderBy(col(orderCol).asc)
-    val marked = df.withColumn("__miss",
-      when(valid, lit(null).cast("int")).otherwise(row_number().over(wMiss)))
-    // per-group free numbers: 1..#rows minus used. The bound is
-    // sufficient — within 1..n at most validCount values are used,
-    // leaving ≥ (n − validCount) = missing free slots, and the lowest
-    // missing free numbers are what the rank join consumes — and it
-    // must NOT scale with max(used): one corrupt huge track number in
-    // a 10-row group would otherwise materialize a billion-element
-    // sequence on that aggregation row. ONE aggregation scan:
-    // collect_set ignores nulls, so the validity filter folds into
-    // the aggregate (round 1 ran separate used/sizes scans plus their
-    // join).
-    // used numbers collect as LONG: an int cast here would WRAP a
-    // corrupt huge value (e.g. 4294967297 → 1) into the candidate
-    // range and mark a genuinely free number as used, shifting every
-    // subsequent fill
-    val pool = df.groupBy(g: _*)
-      .agg(collect_set(when(valid, col(numberCol).cast("long"))).as("__used"),
-        count(lit(1)).cast("int").as("__n"))
-      .withColumn("__cand",
-        filter(sequence(lit(1), col("__n")),
-          c => !array_contains(col("__used"), c.cast("long"))))
-      .select((g :+ posexplode(col("__cand")).as(Seq("__pos", "__free"))): _*)
-      .withColumn("__rank", col("__pos") + 1).drop("__pos")
-    // Qualified aliases: both sides derive from `df`, and unaliased
-    // marked(k) === pool(k) resolves to the SAME attribute ("trivially
-    // true equals predicate") — correct today only by accident of the
-    // __miss === __rank conjunct, and one lineage change from a
-    // semi-cartesian.
-    marked.alias("m").join(pool.alias("p"),
-        groupCols.map(k => col(s"m.$k") === col(s"p.$k")).reduce(_ && _) &&
-          col("m.__miss") === col("p.__rank"), "left")
-      .select((df.columns.map(c => col(s"m.$c")) :+
-        col("m.__miss") :+ col("p.__free")): _*)
-      .withColumn(numberCol,
-        when(col("__miss").isNull,
-          // a valid number beyond Int range cannot be represented in
-          // the int output — fail loudly instead of wrapping silently
-          when(col(numberCol) > lit(Int.MaxValue.toLong),
-            raise_error(concat(
-              lit("gapFillNumbers: valid number exceeds Int range: "),
-              col(numberCol).cast("string"))).cast("int"))
-            .otherwise(col(numberCol).cast("int")))
-          // a missing row whose free number did not arrive means the
-          // rank join missed — only possible for a NULL group key
-          // (=== never matches null); erase loudly, not silently
-          .otherwise(coalesce(col("__free"), raise_error(
-            lit("gapFillNumbers: null group key (group keys must be " +
-              "non-null; a null-key row cannot join its fill number)"))
-            .cast("int"))))
-      .drop("__miss", "__free")
+    val number = col(numberCol).cast("long")
+    val valid = number.isNotNull && number >= 1
+    val walk = Window.partitionBy(groupCols.map(col): _*)
+      .orderBy(when(valid, lit(0)).otherwise(lit(1)), when(valid, number),
+        col(orderCol))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val filled = when(!valid && groupCols.map(col(_).isNull).reduce(_ || _),
+        raise_error(lit("gapFillNumbers: null group key (group keys must " +
+          "be non-null; a null-key row has no group to fill from)")).cast("int"))
+      .otherwise(GapFillNumber.column(number).over(walk))
+    df.select(df.columns.toSeq.map(c =>
+      if (c == numberCol) filled.as(c) else col(c)): _*)
   }
 
   /** A4/A5: canonical representative per duplicate group — pick by

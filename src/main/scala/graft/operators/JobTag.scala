@@ -8,8 +8,10 @@ import org.apache.spark.sql.SparkSession
   * k-means iteration, `walk:topKTwoLevelWalk:rung=2` for a recall-walk
   * rung, `walk:<site>:sample` for the walk's anchor sample,
   * `ivf:topKTwoLevel:seed` for the IVF chain's eager work outside
-  * both (stages `dim`, `seed`, `encode`), `oracle:q93:dim` for a
-  * query's oracle-width guard. An inner tag overrides an outer one
+  * both (stages `dim`, `seed`, `encode`), `semdedup:<site>:cells`
+  * for SemDeDup's cell-population check, `semdedup:q80:train` for a
+  * query's quantizer training, `cc:<site>:round=1` for a
+  * connected-components round. An inner tag overrides an outer one
   * for the jobs launched inside it. */
 private[graft] object JobTag {
 

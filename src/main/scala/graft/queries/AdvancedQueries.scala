@@ -18,16 +18,17 @@ object AdvancedQueries {
     * positive ordinal per order in (partkey, suppkey) order. */
   private def q27(s: SparkSession, dir: String): DataFrame = {
     // ordkey folds in l_linenumber so ordering stays unique even when
-    // (order, part, supplier) repeats across lines
-    // persisted: the operator consumes this twice (window pass +
-    // free-number aggregation) — cache the 5-col projection rather
-    // than scanning lineitem per consumer; released by the harness's
-    // CacheScope.releaseAll after the sink action
-    val base = graft.CacheScope.track(Tables(s, dir).lineitem
+    // (order, part, supplier) repeats across lines. Clustered by the
+    // group key up front, as q36 clusters by album_id: the gap-fill
+    // window reuses that partitioning, and at one shuffle partition it
+    // is a single partition, which the presentation sort needs no
+    // further exchange for.
+    val base = Tables(s, dir).lineitem
       .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
         when(col("l_quantity") < 5, -1).otherwise(col("l_linenumber")).as("no"),
         ((col("l_partkey") * 100000000L + col("l_suppkey")) * 10L +
-          col("l_linenumber")).as("ordkey")))
+          col("l_linenumber")).as("ordkey"))
+      .repartition(col("l_orderkey"))
     // `no` in the sort: (l_orderkey, l_partkey, l_suppkey) is NOT
     // unique when an order repeats a (part, supplier) pair, and a
     // tie-ambiguous presentation sort hash-mismatches engines; (order,

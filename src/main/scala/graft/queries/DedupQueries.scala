@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.operators.{Dedup, KMeansPortable}
+import graft.operators.{Dedup, JobTag, KMeansPortable}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -675,8 +675,8 @@ object DedupQueries {
     * dedup today's corpus) rather than the artifact-split one.
     */
   private def q80(s: SparkSession, dir: String): DataFrame = {
-    val m = KMeansPortable.trainModel(Tables(s, dir).embeddings,
-      k = 8, iters = 3)
+    val m = JobTag.during("semdedup:q80:train")(
+      KMeansPortable.trainModel(Tables(s, dir).embeddings, k = 8, iters = 3))
     Dedup.semanticDedupPortable(Tables(s, dir).embeddings, m.centroids,
         threshold = 0.35)
       .orderBy(col("id"))
@@ -713,7 +713,8 @@ object DedupQueries {
     */
   private def q90(s: SparkSession, dir: String): DataFrame = {
     val t = Tables(s, dir).embeddings
-    val m = KMeansPortable.trainTwoLevel(t, nlist = 8, iters = 3)
+    val m = JobTag.during("semdedup:q90:train")(
+      KMeansPortable.trainTwoLevel(t, nlist = 8, iters = 3))
     Dedup.semanticDedupTwoLevel(t, m, threshold = 0.35)
       .orderBy(col("id"))
   }

@@ -166,15 +166,11 @@ object PipelineQueries {
       // join share the exchange (ReusedExchange), so the regex parse
       // above runs once, not twice
       .repartition(col("album_id"))
-    // A1+A2: impute missing release dates from the album majority.
-    // PERSISTED: gapFillNumbers consumes its input twice (ranked rows
-    // + the free-number pool), and unlike q27's cheap scan projection
-    // this input carries the regex parse — uncached, the parse
-    // re-executes per consumer (measured +6.5 s at sf0.1). Same for
-    // `filled` below: canonicalize is a window + join-back over it.
-    val imputed = graft.CacheScope.track(
-      Grouping.imputeByMajority(parsed, Seq("album_id"), "tdate0"))
-    // A3: lowest-unused track numbers per (album, disc), in ordkey order
+    // A1+A2: impute missing release dates from the album majority
+    val imputed = Grouping.imputeByMajority(parsed, Seq("album_id"), "tdate0")
+    // A3: lowest-unused track numbers per (album, disc), in ordkey order.
+    // PERSISTED: canonicalize reads it twice (a window + the join back)
+    // and it carries the regex parse, which would otherwise run twice
     val filled = graft.CacheScope.track(Grouping.gapFillNumbers(imputed,
       Seq("album_id", "d_code"), "no", "ordkey"))
     // A4/A5: canonical album per catalog number (min album id)

@@ -407,8 +407,7 @@ object SimilarityQueries {
     * native q73 are Spark ML's k-means|| trainer and float ADC sums
     * alone. */
   private def q85(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables(s, dir).embeddings
-    requireQ85Dim(emb, "q85")
+    val emb = q85Dim(Tables(s, dir).embeddings, "q85")
     graft.operators.IvfPqPortable.topK(emb,
         col("id") < 20, k = 5, nlist = 8, coarseIters = 2, m = 4,
         ksub = 8, subIters = 2, nprobe = 2, rerank = 16)
@@ -420,18 +419,19 @@ object SimilarityQueries {
     * generated SQL. */
   private val Q85Dim = 64
 
-  /** Fails `query` unless the embeddings are [[Q85Dim]] wide. The
-    * oracle text unrolls the subspace slices for that width before it
-    * sees data, while the Spark side infers dim, so data of another
-    * width would gate against a mismatched oracle. One head row, run
-    * under the job description `oracle:<query>:dim`. */
-  private def requireQ85Dim(emb: DataFrame, query: String): Unit = {
-    val probed = graft.operators.JobTag.during(s"oracle:$query:dim")(
-      emb.filter(col("embedding").isNotNull)
-        .select(size(col("embedding"))).limit(1).collect())
-    require(probed.nonEmpty && probed(0).getInt(0) == Q85Dim,
-      s"$query oracle is generated for dim=$Q85Dim; data has " +
-        probed.headOption.map(_.getInt(0)).getOrElse(-1))
+  /** `emb` with each embedding checked against [[Q85Dim]]. The oracle
+    * text unrolls the subspace slices for that width before it sees
+    * data, while the Spark side infers dim, so data of another width
+    * would gate against a mismatched oracle. A null passes through; a
+    * row of another width fails the first job that reads it, naming
+    * `query`. The check launches no job of its own: the entry point's
+    * width probe is the first reader. */
+  private def q85Dim(emb: DataFrame, query: String): DataFrame = {
+    val v = col("embedding")
+    emb.withColumn("embedding", when(v.isNull || size(v) === Q85Dim, v)
+      .otherwise(raise_error(concat(
+        lit(s"$query oracle is generated for dim=$Q85Dim; data has "),
+        size(v).cast("string"))).cast(emb.schema("embedding").dataType)))
   }
 
   private val q85Sql = graft.operators.IvfPqPortable.oracleSql(
@@ -454,8 +454,7 @@ object SimilarityQueries {
     * (cells differ by construction — the IVF routing approximation).
     */
   private def q93(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables(s, dir).embeddings
-    requireQ85Dim(emb, "q93")
+    val emb = q85Dim(Tables(s, dir).embeddings, "q93")
     graft.operators.IvfPqPortable.topKTwoLevel(emb,
         col("id") < 20, k = 5, nlist = 8, coarseIters = 2, m = 4,
         ksub = 8, subIters = 2, nprobe = 2, rerank = 16)
@@ -482,8 +481,7 @@ object SimilarityQueries {
     * round 12's table.
     */
   private def q97(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables(s, dir).embeddings
-    requireQ85Dim(emb, "q97")
+    val emb = q85Dim(Tables(s, dir).embeddings, "q97")
     graft.operators.IvfPqPortable.topKTwoLevel(emb,
         col("id") < 20, k = 5, nlist = 8, coarseIters = 2, m = 4,
         ksub = 8, subIters = 2, nprobe = 2, rerank = 16,
@@ -515,8 +513,7 @@ object SimilarityQueries {
     * spec-pinned (IvfPqPortableSpec).
     */
   private def q98(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables(s, dir).embeddings
-    requireQ85Dim(emb, "q98")
+    val emb = q85Dim(Tables(s, dir).embeddings, "q98")
     graft.operators.IvfPqPortable.topKTwoLevelAdmit(emb,
         trainPred = col("id") % 10 < 8, anchorPred = col("id") < 12,
         k = 5, nlist = 8, coarseIters = 2, m = 4,
@@ -559,8 +556,7 @@ object SimilarityQueries {
   private val Q102Floor = 0.3
 
   private def q102(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables(s, dir).embeddings
-    requireQ85Dim(emb, "q102")
+    val emb = q85Dim(Tables(s, dir).embeddings, "q102")
     graft.operators.IvfPqPortable.topKTwoLevelWalk(emb,
       col("id") < 20, k = 5, nlist = 8, coarseIters = 2, m = 4,
       ksub = 8, subIters = 2, rerank = 16,
@@ -625,8 +621,7 @@ object SimilarityQueries {
   private val Q105Floor = 0.35
 
   private def q105(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables(s, dir).embeddings
-    requireQ85Dim(emb, "q105")
+    val emb = q85Dim(Tables(s, dir).embeddings, "q105")
     graft.operators.IvfPqPortable.topKTwoLevelWalkPq(emb,
       col("id") < 20, k = 5, nlist = 8, coarseIters = 2, m = 4,
       ksub = 8, subIters = 2, ladder = Q105Ladder, floor = Q105Floor)

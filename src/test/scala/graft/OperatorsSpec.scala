@@ -117,6 +117,64 @@ class GroupingSpec extends SparkSpec {
     assert(e.getMessage.contains("null group key"), e.getMessage)
   }
 
+  test("A3 gapFill equals the sequential per-group loop on random groups") {
+    // the reference's loop: walk each group in order; a number < 1 or
+    // null takes the lowest positive integer not yet used, which then
+    // counts as used; valid numbers are used from the start
+    def sequential(rows: Seq[(Int, String, Option[Long], Long, Int)]) =
+      rows.groupBy(r => (r._1, r._2)).values.flatMap { g =>
+        val used = scala.collection.mutable.Set[Long]() ++
+          g.flatMap(_._3).filter(_ >= 1)
+        g.sortBy(_._4).map { case r @ (_, _, no, _, _) =>
+          no.filter(_ >= 1).getOrElse {
+            var n = 1L
+            while (used(n)) n += 1
+            used += n
+            n
+          } -> r
+        }
+      }
+    val rnd = new scala.util.Random(27)
+    var id = 0
+    val rows = (0 until 60).flatMap { gi =>
+      val kind = gi % 4 // 0 all missing, 1 all valid, 2-3 mixed
+      (0 until 1 + rnd.nextInt(12)).map { _ =>
+        val missing = kind == 0 || (kind != 1 && rnd.nextInt(3) == 0)
+        val no =
+          if (missing) Seq(Some(0L), Some(-1L), None)(rnd.nextInt(3))
+          else if (rnd.nextInt(20) == 0) Some(1500000000L)
+          else Some(1L + rnd.nextInt(8)) // small range: duplicates
+        id += 1
+        // ord drawn from a small range: ties within a group
+        (gi % 5, s"d${gi / 5}", no, rnd.nextInt(6).toLong, id)
+      }
+    }
+    val df = rows.toDF("g1", "g2", "no", "ord", "id").repartition(3)
+    assert(df.rdd.getNumPartitions >= 2)
+    val out = Grouping.gapFillNumbers(df, Seq("g1", "g2"), "no", "ord")
+    assert(out.schema.map(f => f.name -> f.dataType) === df.schema.map(f =>
+      f.name -> (if (f.name == "no") org.apache.spark.sql.types.IntegerType
+      else f.dataType)))
+    val got = out.select("g1", "g2", "ord", "id", "no")
+      .as[(Int, String, Long, Int, Int)].collect()
+    assert(got.length === rows.length)
+    // tied missing rows may take their numbers in either order: compare
+    // the numbers of each (group, ord) as a multiset, and valid rows
+    // one by one
+    def byTie(xs: Iterable[(Int, String, Long, Long)]) =
+      xs.groupBy(r => (r._1, r._2, r._3)).map { case (k, v) =>
+        k -> v.map(_._4).toSeq.sorted }
+    val want = sequential(rows).toSeq
+    assert(byTie(got.map(r => (r._1, r._2, r._3, r._5.toLong))) ===
+      byTie(want.map { case (n, r) => (r._1, r._2, r._4, n) }))
+    val gotById = got.map(r => r._4 -> r._5.toLong).toMap
+    want.filter(_._2._3.exists(_ >= 1)).foreach { case (n, r) =>
+      assert(gotById(r._5) === n, r)
+    }
+    assert(want.exists(_._1 == 1500000000L) &&
+      rows.exists(_._3.isEmpty) && rows.exists(_._3.contains(0L)))
+  }
+
   test("A1/A2 majority on a TYPED column (blank rule must not null out)") {
     // "" coerced to int is null; the blank filter must not turn into a
     // null predicate that silently empties the vote table

@@ -113,20 +113,32 @@ object PlanAuditSpec {
     Check("q39_range_join",
       mustContain = Seq("hashpartitioning"),
       mustNotContain = Seq("BroadcastNestedLoopJoin", "CartesianProduct")),
+    // q27: the gap-fill is one window pass per order, walked by the
+    // gap_fill_number kernel: no cached input, no free-number pool
+    // (collect_set), no join back on rank. [MEASURED] 2 = the order-key
+    // repartition the window reuses + the presentation sort's range
+    // exchange, both real keyed shuffles (at one shuffle partition the
+    // repartition is a single partition and the sort needs no exchange)
+    Check("q27_gap_fill",
+      mustContain = Seq("gap_fill_number"),
+      mustNotContain = Seq("InMemoryTableScan", "SortMergeJoin", "collect_set"),
+      maxShuffleExchanges = Some(2)),
     // q36: the composed pipeline joins album-side relations by
     // BROADCAST (never shuffles the track rows for album metadata);
     // every wide operation is a keyed shuffle — no cartesian, no BNLJ.
-    // [MEASURED] 12 = the round-5 counted plan (sf0.001 formatted):
-    // the single-shuffle rewrite (one album-keyed repartition feeding
-    // every album-keyed stage) removed 4 exchanges vs the
-    // multi-exchange formulation (13.6 s vs 15.2 s at sf0.1, round-5
-    // judge re-run); all 12 are real keyed shuffles (no ensureWide in
-    // this lineage). The cap keeps a refactor from silently
-    // reintroducing the removed ones.
+    // [MEASURED] 8 (sf0.001 formatted): one album-keyed repartition
+    // feeds every album-keyed stage, the gap-fill window included (its
+    // (album, disc) clustering is satisfied by the album partitioning),
+    // so the gap-fill adds no exchange. It was 12 while the gap-fill
+    // built a free-number pool and joined it back on rank, and while
+    // its input was cached under a cache boundary of its own. All 8
+    // are real keyed shuffles (no ensureWide in this lineage).
     Check("q36_catalog_pipeline",
-      mustContain = Seq("BroadcastHashJoin", "WindowGroupLimit"),
-      mustNotContain = Seq("CartesianProduct", "BroadcastNestedLoopJoin"),
-      maxShuffleExchanges = Some(12)),
+      mustContain = Seq("BroadcastHashJoin", "WindowGroupLimit",
+        "gap_fill_number"),
+      mustNotContain = Seq("CartesianProduct", "BroadcastNestedLoopJoin",
+        "collect_set"),
+      maxShuffleExchanges = Some(8)),
     // q44: the composed dedup pipeline caches the keyed relation once
     // (bucket-size agg + both self-join sides read the cache) and every
     // wide stage is a keyed shuffle. [MEASURED] 5 = the round-8 counted

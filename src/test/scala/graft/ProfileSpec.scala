@@ -1,6 +1,7 @@
 package graft
 
 import graft.tools.Profile
+import org.apache.spark.sql.functions._
 
 class ProfileSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
@@ -79,5 +80,45 @@ class ProfileSpec extends SparkSpec {
     assert(eager.exists(_.desc == "ivf:topKTwoLevelWalk:seed"), eager.map(_.desc))
     val plain = Profile.measure(spark, q02, sf)
     assert(!plain.jobs.exists(_.desc.startsWith("walk:")), plain.jobs.map(_.desc))
+  }
+
+  test("job descriptions: q80's SemDeDup tags its training, cell check and closure, so no eager job is untagged") {
+    val q80 = Profile.measure(spark, "q80_semdedup_e2e_oracle", sf)
+    assert(q80.error.isEmpty, q80.error)
+    val eager = q80.jobs.filter(_.start < q80.outputAt)
+    assert(eager.nonEmpty && eager.forall(_.desc.nonEmpty),
+      eager.filter(_.desc.isEmpty).map(_.site))
+    val descs = eager.map(_.desc).toSet
+    assert(descs("semdedup:semanticDedupPortable:cells"), descs)
+    assert(descs.exists(_.startsWith("cc:semanticDedupPortable:")), descs)
+  }
+
+  test("the q85-family oracle-width guard fails a wrong-width table naming the query, with no job of its own") {
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+    def messages(e: Throwable): String =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString(" | ")
+    // every row too narrow (the entry point's width probe reads the
+    // guard first), and one ragged row after well-formed ones (a later
+    // job reads it)
+    for ((query, width, narrow) <- Seq(
+        ("q93_ivfpq_twolevel_oracle", 32, lit(true)),
+        ("q85_ivfpq_e2e_oracle", 63, col("vec_id") === 7))) {
+      val dir = java.nio.file.Files.createTempDirectory("graft-q85dim").toString
+      emb.withColumn("embedding", when(narrow,
+          slice(col("embedding"), 1, width)).otherwise(col("embedding")))
+        .write.parquet(s"$dir/embeddings.parquet")
+      val q = query.takeWhile(_ != '_')
+      val e = intercept[Exception](
+        QueryCatalog.byName(query).run(spark, dir).collect())
+      assert(messages(e).contains(
+        s"$q oracle is generated for dim=64; data has $width"), messages(e))
+      CacheScope.releaseAll()
+    }
+    val r = Profile.measure(spark, "q93_ivfpq_twolevel_oracle", sf)
+    assert(r.error.isEmpty, r.error)
+    // the entry point's width probe is the one eager width job
+    assert(r.jobs.filter(_.desc.endsWith(":dim")).map(_.desc) ===
+      Seq("ivf:topKTwoLevel:dim"), r.jobs.map(_.desc))
   }
 }
